@@ -185,6 +185,20 @@ def _render_conds_sql(conds) -> "str | None":
     return " AND ".join(parts) if parts else "true"
 
 
+def ttl_cache_put(
+    cache: dict, lock: Any, key: tuple, value: Any, ttl: float
+) -> None:
+    """Store ``value`` in ``cache`` under ``key`` for ``ttl`` seconds, as
+    ``(expiry, value)``. Expired entries are swept lazily: once the dict
+    holds more than 4096 entries, each put first drops the expired ones."""
+    with lock:
+        now = time.time()
+        if len(cache) > 4096:
+            for k in [k for k, (exp, _) in cache.items() if now >= exp]:
+                del cache[k]
+        cache[key] = (now + ttl, value)
+
+
 def split_range(start, end, num_parts: int) -> list[tuple]:
     """Split [start, end] into ``num_parts`` sub-ranges whose adjacent
     bounds are shared, last part absorbing the remainder — the client-side
@@ -698,7 +712,9 @@ class Engine:
             return None
         rows = list(zip(*cols))
         if cache_key is not None:
-            self._response_cache[cache_key] = (time.time() + self.cache_ttl, rows)
+            ttl_cache_put(
+                self._response_cache, self._lock, cache_key, rows, self.cache_ttl
+            )
         return rows
 
     def execute_columns(self, sql: str | int, *args: Any) -> list[list] | None:
@@ -956,10 +972,14 @@ class Engine:
         )
         df = st.read(self.spark, leading_eq=leading_eq)
         if conds:
-            df = df.filter(self._predicate(conds))
+            # one expr() call instead of ~9 py4j calls per comparison
+            rendered = _render_conds_sql(conds)
+            df = df.filter(
+                F.expr(rendered) if rendered is not None else self._predicate(conds)
+            )
         if stmt.adjs:
             adj_store = self.store(schema.db, ADJ_TABLE)
-            adj_df = adj_store.read(self.spark)
+            adj_df, adj_snapshot = adj_store.read(self.spark, with_snapshot=True)
             keys = schema.key_columns
             px_cols = [a.col.name for a in stmt.adjs if a.kind == "px"]
             vol_cols = [a.col.name for a in stmt.adjs if a.kind == "vol"]
@@ -977,6 +997,7 @@ class Engine:
                 vol_cols,
                 backward,
                 strategy="broadcast",
+                snapshot=(adj_store.path, adj_snapshot),
             )
         # implicit full-PK ordering; LIMIT -n = tail in DESCENDING order
         pk = schema.pk_names

@@ -26,18 +26,37 @@ function pass:
   exactly at ``tm`` is *excluded* — matching "first event > tm".
 
 This is the scale-friendly plan: one shuffle on ``sec`` (the same
-partitioning the table layout already uses), no driver-side factor cache,
-no broadcast requirement, and linear merge within each partition — the
-distributed equivalent of the reference's moving-cursor merge scan
-(adj.go:162-181). The reference's per-(db,sec) factor cache + invalidation
-(adj.go:34-47) is unnecessary: factors are recomputed lazily inside the
-plan, and Spark caching can pin them if a workload re-reads them.
+partitioning the table layout already uses), no broadcast requirement,
+and linear merge within each partition — the distributed equivalent of
+the reference's moving-cursor merge scan (adj.go:162-181).
+
+The dialect's ``adj()`` takes the ``"broadcast"`` strategy (see
+``with_adj_factors``) over a **snapshot-keyed factor table** — the analog
+of the reference's per-(db, sec) cumulative factor cache, which it
+invalidates when ``_adj_`` changes (adj.go:34-47). Here the cache unit is
+the whole ``_adj_`` snapshot: ``factor_table`` computes the factor
+intervals once per snapshot key (``TableStore.read(with_snapshot=True)``)
+and holds them as a materialized relation, so a repeated ``adj`` query
+runs the broadcast of that relation plus its scan instead of recomputing
+the factor windows. An ``_adj_`` commit or compaction changes the key,
+and the next query replaces the table with the new snapshot's.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+#: factor tables: (session, ``_adj_`` location, backward) ->
+#: (snapshot key, intervals). Process-wide: every Engine on a warehouse
+#: (one per wire connection) shares one table per snapshot, and a closed
+#: connection leaves no entry behind. Bounded: past
+#: ``_MAX_FACTOR_TABLES`` the least recently used slot is dropped.
+_FACTOR_TABLES: dict[tuple, tuple] = {}
+_FACTOR_LOCK = threading.Lock()
+_MAX_FACTOR_TABLES = 64
 
 
 def cumulative_factors(adj_df: DataFrame) -> DataFrame:
@@ -77,7 +96,7 @@ def factor_intervals(adj_df: DataFrame, backward: bool) -> DataFrame:
     forward factor of event i covers ``[t_{i-1}, t_i)`` ("first event
     time > tm" ⇒ the previous event's time up to, excluding, its own);
     backward factor covers ``[t_i, t_{i+1})`` ("last event time <= tm").
-    NULL bounds mean ±infinity. Output: (sec, __lo, __hi, __ev_px,
+    NULL bounds mean ±infinity. Output: (__sec, __lo, __hi, __ev_px,
     __ev_vol); rows matching no interval take factor 1.
     """
     factors = cumulative_factors(adj_df)
@@ -89,12 +108,41 @@ def factor_intervals(adj_df: DataFrame, backward: bool) -> DataFrame:
         lo, hi = F.lag("time").over(w), F.col("time")
         fpx, fvol = "px_f", "vol_f"
     return factors.select(
-        "sec",
+        F.col("sec").alias("__sec"),
         lo.alias("__lo"),
         hi.alias("__hi"),
         F.col(fpx).alias("__ev_px"),
         F.col(fvol).alias("__ev_vol"),
     )
+
+
+def factor_table(adj_df: DataFrame, backward: bool, snapshot: tuple) -> DataFrame:
+    """``factor_intervals`` of one ``_adj_`` snapshot, materialized once
+    and reused until the snapshot changes (module docstring).
+
+    ``snapshot`` is ``(location, key)``: where ``adj_df`` was read from
+    and the ``TableStore.read`` snapshot key it was read at. The table is
+    a lazy ``localCheckpoint``, not a ``persist``: Spark's cache matches
+    plans, and a file scan's plan names its root paths, not its files,
+    so a persisted table of one snapshot would also be served to a query
+    of another (connections share this registry and the session). A
+    checkpoint's plan is its own RDD, which nothing else matches. A
+    replaced table is not unpersisted: a query of another connection may
+    still be running on it, so its blocks are left to Spark's
+    ContextCleaner, which frees them once no DataFrame refers to it."""
+    where, key = snapshot
+    slot = (adj_df.sparkSession, where, backward)
+    with _FACTOR_LOCK:
+        hit = _FACTOR_TABLES.pop(slot, None)
+        if hit is None or hit[0] != key:
+            # one partition: the table is tiny, and each query's
+            # broadcast then reads it in one task
+            iv = factor_intervals(adj_df, backward).coalesce(1)
+            hit = (key, iv.localCheckpoint(eager=False))
+        _FACTOR_TABLES[slot] = hit
+        while len(_FACTOR_TABLES) > _MAX_FACTOR_TABLES:
+            _FACTOR_TABLES.pop(next(iter(_FACTOR_TABLES)))
+        return hit[1]
 
 
 def with_adj_factors(
@@ -104,6 +152,7 @@ def with_adj_factors(
     time_col: str,
     backward: bool,
     strategy: str = "merge",
+    iv: DataFrame | None = None,
 ) -> DataFrame:
     """Attach as-of adjustment factor columns ``__px_factor`` /
     ``__vol_factor`` to ``rows``.
@@ -133,25 +182,25 @@ def with_adj_factors(
       ``asof_join(broadcast_buckets=N)``); adjustment factors cannot
       reach that shape, which is why this path needs no bucketing. Use
       when the factor table fits a broadcast (practically always) and
-      the row stream is large or skewed.
+      the row stream is large or skewed. ``iv``: the interval table
+      (``factor_intervals`` or ``factor_table`` of ``adj_df``), when
+      the caller already holds it.
     """
     if strategy not in ("merge", "broadcast"):
         raise ValueError("strategy must be 'merge' or 'broadcast'")
     if strategy == "broadcast":
-        iv = factor_intervals(adj_df, backward)
-        r = rows.withColumn("__rsec", F.col(sec_col).cast("long"))
+        if iv is None:
+            iv = factor_intervals(adj_df, backward)
         tm = F.col(time_col)
         cond = (
-            (F.col("__rsec") == iv["sec"])
-            & (iv["__lo"].isNull() | (tm >= iv["__lo"]))
-            & (iv["__hi"].isNull() | (tm < iv["__hi"]))
+            (F.col(sec_col).cast("long") == F.col("__sec"))
+            & (F.col("__lo").isNull() | (tm >= F.col("__lo")))
+            & (F.col("__hi").isNull() | (tm < F.col("__hi")))
         )
-        return (
-            r.join(F.broadcast(iv), cond, "left")
-            .withColumn("__px_factor", F.coalesce(F.col("__ev_px"), F.lit(1.0)))
-            .withColumn("__vol_factor", F.coalesce(F.col("__ev_vol"), F.lit(1.0)))
-            .drop(iv["sec"])
-            .drop("__rsec", "__lo", "__hi", "__ev_px", "__ev_vol")
+        return rows.join(F.broadcast(iv), cond, "left").select(
+            *[F.col(c) for c in rows.columns],
+            F.coalesce(F.col("__ev_px"), F.lit(1.0)).alias("__px_factor"),
+            F.coalesce(F.col("__ev_vol"), F.lit(1.0)).alias("__vol_factor"),
         )
     factors = cumulative_factors(adj_df)
     if backward:
@@ -219,15 +268,21 @@ def apply_adj(
     vol_cols: list[str],
     backward: bool = False,
     strategy: str = "merge",
+    snapshot: tuple | None = None,
 ) -> DataFrame:
     """Multiply ``px_cols`` by the as-of price factor and ``vol_cols`` by
     the volume factor (applyFunc, adj.go:142-202); column names/positions
     are preserved, mirroring the reference's in-place row rewriting.
     ``strategy="broadcast"`` selects the skew-immune broadcast-interval
-    plan (see ``with_adj_factors``)."""
+    plan (see ``with_adj_factors``). With a ``snapshot`` (see
+    ``factor_table``) and a non-None key, that plan reuses the snapshot's
+    materialized factor table."""
     if not px_cols and not vol_cols:
         return rows
-    with_f = with_adj_factors(rows, adj_df, sec_col, time_col, backward, strategy)
+    iv = None
+    if strategy == "broadcast" and snapshot is not None and snapshot[1] is not None:
+        iv = factor_table(adj_df, backward, snapshot)
+    with_f = with_adj_factors(rows, adj_df, sec_col, time_col, backward, strategy, iv)
     exprs = []
     for c in rows.columns:
         if c in px_cols:

@@ -41,7 +41,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from opentick_spark.engine import Engine
+from opentick_spark.engine import Engine, ttl_cache_put
 from opentick_spark.errors import OpentickError
 from opentick_spark.wire_packed import unpack_columns
 
@@ -642,17 +642,9 @@ class OpentickServer:
             return payload
 
     def _cache_put(self, key: tuple, payload: bytes) -> None:
-        with self._cache_lock:
-            if len(self._resp_cache) > 4096:  # lazy expiry sweep
-                now = time.time()
-                for k in [
-                    k for k, (exp, _) in self._resp_cache.items() if now >= exp
-                ]:
-                    del self._resp_cache[k]
-            self._resp_cache[key] = (
-                time.time() + self.cache_expiration,
-                payload,
-            )
+        ttl_cache_put(
+            self._resp_cache, self._cache_lock, key, payload, self.cache_expiration
+        )
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -97,6 +97,11 @@ class TableStore:
         # per-commit-dir applied-marker memo (dirs are immutable once
         # published; see _log_markers)
         self._marker_dir_cache: dict = {}
+        # read-plan cache of the current snapshot (see read): one lock
+        # of its own, so a lookup never waits on a commit or compaction
+        self._plan_lock = threading.Lock()
+        self._plan_key: tuple | None = None
+        self._plans: dict = {}
         # recovery BEFORE the makedirs below: a compaction killed
         # mid-swap leaves base missing, and exist_ok=True would
         # otherwise silently "heal" it into an EMPTY base — presenting
@@ -673,39 +678,33 @@ class TableStore:
 
     # ------------------------------------------------------------------
     # read path (Spark)
-    def _raw(
-        self, spark: SparkSession, with_log_flag: bool = False
-    ) -> DataFrame | tuple[DataFrame, bool]:
+    def _raw(self, spark: SparkSession, nb: int | None, has_log: bool) -> DataFrame:
         """Union of base (compacted) + log (commits), with a consistent
         ``__bucket`` column when the base is hash-bucketed (log rows
         compute it on the fly so pruning filters stay valid).
 
-        ``with_log_flag`` additionally returns whether LOG FILES WERE
-        LISTED into the plan — the authoritative input for the caller's
-        skip-latest-wins decision. Deciding that from ``meta.compacted``
-        is a cross-process RACE: a reader can list a log commit while a
-        concurrent compaction publishes ``compacted=True``, and a
-        meta-based skip would then return base+log rows WITHOUT
-        resolution — duplicate PKs in a successful read. The listing is
-        what the scan will actually read, so it can't disagree with the
-        plan.
+        ``has_log`` says whether the caller's log listing found commits;
+        it is the authoritative input for the skip-latest-wins decision.
+        Deciding that from ``meta.compacted`` is a cross-process RACE: a
+        reader can list a log commit while a concurrent compaction
+        publishes ``compacted=True``, and a meta-based skip would then
+        return base+log rows WITHOUT resolution — duplicate PKs in a
+        successful read. The listing is what the scan will actually
+        read, so it can't disagree with the plan.
 
         LISTING ORDER IS LOAD-BEARING (r6, caught by the cross-process
-        reader-race test): the log is listed BEFORE the base. A
-        concurrent compaction swaps the base in BEFORE it GCs the log,
-        so log-listed-empty implies the new base is already installed —
-        every interleaving then yields a consistent snapshot (possibly
-        with same-seq duplicate rows across base+log, which latest-wins
-        resolves to identical values) or a transient file-not-found the
-        caller may retry. Base-first listing has a silent zero-row
-        window: list the pre-first-compaction EMPTY base, then the log
-        after its GC — both empty, read "succeeds" with no rows."""
-        meta = self._meta()
-        nb = self._effective_buckets(meta)
-        has_log = False
+        reader-race test): the caller lists the log BEFORE this lists
+        the base. A concurrent compaction swaps the base in BEFORE it
+        GCs the log, so log-listed-empty implies the new base is already
+        installed — every interleaving then yields a consistent snapshot
+        (possibly with same-seq duplicate rows across base+log, which
+        latest-wins resolves to identical values) or a transient
+        file-not-found the caller may retry. Base-first listing has a
+        silent zero-row window: list the pre-first-compaction EMPTY
+        base, then the log after its GC — both empty, read "succeeds"
+        with no rows."""
         log = None
-        if os.listdir(self.log_path):
-            has_log = True
+        if has_log:
             log = (
                 spark.read.schema(self.spark_schema())
                 .option("recursiveFileLookup", "true")
@@ -735,19 +734,61 @@ class TableStore:
         if log is not None:
             parts.append(log)
         if not parts:
-            out = spark.createDataFrame([], self.spark_schema())
+            return spark.createDataFrame([], self.spark_schema())
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    #: Spark's xxhash64 (seed 42) primes, for computing a leading-PK
+    #: bucket in Python without a JVM call (see ``_bucket_of``)
+    _XXH_P1 = 0x9E3779B185EBCA87
+    _XXH_P2 = 0xC2B2AE3D27D4EB4F
+    _XXH_P3 = 0x165667B19E3779F9
+    _XXH_P4 = 0x85EBCA77C2B2AE63
+    _XXH_P5 = 0x27D4EB2F165667C5
+    _M64 = (1 << 64) - 1
+    _INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64, "timestamp": 64}
+
+    def _bucket_of(self, value: Any, nb: int) -> int | None:
+        """``pmod(xxhash64(value), nb)`` exactly as ``_bucket_expr``
+        computes it in Spark (XXH64.hashInt / hashLong, seed 42), for an
+        int value of an integer or timestamp leading PK that fits the
+        column type. None for any other value or type: the caller then
+        prunes with the Spark expression and does not cache the plan."""
+        lead_type = self.schema.key_columns[0].type
+        bits = self._INT_BITS.get(lead_type)
+        if bits is None or type(value) is not int:
+            return None
+        if not -(1 << (bits - 1)) <= value < (1 << (bits - 1)):
+            return None
+        m, p1, p2 = self._M64, self._XXH_P1, self._XXH_P2
+
+        def rotl(x: int, r: int) -> int:
+            return ((x << r) | (x >> (64 - r))) & m
+
+        if bits <= 32:  # tinyint/smallint/int all hash as a 4-byte int
+            h = (42 + self._XXH_P5 + 4) & m
+            h ^= ((value & 0xFFFFFFFF) * p1) & m
+            h = (rotl(h, 23) * p2 + self._XXH_P3) & m
         else:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-        return (out, has_log) if with_log_flag else out
+            h = (42 + self._XXH_P5 + 8) & m
+            h ^= (rotl((value & m) * p2 & m, 31) * p1) & m
+            h = (rotl(h, 27) * p1 + self._XXH_P4) & m
+        h ^= h >> 33
+        h = (h * p2) & m
+        h ^= h >> 29
+        h = (h * self._XXH_P3) & m
+        h ^= h >> 32
+        return (h - (1 << 64) if h >> 63 else h) % nb
 
     def read(
         self,
         spark: SparkSession,
         leading_eq: Any = None,
         as_of_seq: int | None = None,
-    ) -> DataFrame:
+        with_snapshot: bool = False,
+    ) -> DataFrame | tuple[DataFrame, tuple]:
         """Current table state: latest row per PK, tombstones dropped,
         logical column names, no meta columns. Not yet PK-sorted — the
         query layer appends the implicit PK ordering (query.go:156-201).
@@ -764,17 +805,92 @@ class TableStore:
         resolution: zero storage overhead, pure partition/file pruning.
         Compaction collapses history — snapshots older than the last
         compact raise rather than silently return post-compaction
-        state."""
+        state.
+
+        Plan reuse (the analog of the reference's prepared statements,
+        server.go:384-398): a current-state read returns the SAME
+        DataFrame while the table snapshot is unchanged, so a repeated
+        query skips re-listing the directories and re-analysing the
+        union, resolution and rename. The cache-key contract — the
+        snapshot key is everything the plan is built from:
+
+        - the schema (the catalog replaces its schema object on every
+          DDL change; compared by value, so equal schemas share);
+        - the ``_meta.json`` layout fields: ``seq`` (bumped by every
+          commit allocation and every compaction), the effective
+          ``hash_buckets`` and ``last_compact_seq``;
+        - the base directory's identity (inode, ctime): compaction
+          renames a new directory in;
+        - the sorted log listing: every commit publishes a new name.
+
+        A commit or compaction by any process therefore changes the key
+        of the next read. Entries are held per leading-PK bucket (plus
+        one unpruned entry), and a key change drops them all, so the
+        cache holds at most ``hash_buckets + 1`` plans, all of the
+        current snapshot. ``as_of_seq`` reads are never cached, nor are
+        pruned reads whose leading PK is not an integer or timestamp
+        (their bucket is not computed in Python, see ``_bucket_of``).
+
+        ``with_snapshot``: return ``(df, key)``, the key for callers
+        that cache relations derived from this read (the adj factor
+        table); None for an uncached read."""
         schema = self.schema
-        df, has_log = self._raw(spark, with_log_flag=True)
         meta = self._meta()
         nb = self._effective_buckets(meta)
+        # the log is listed BEFORE the base is touched (see _raw)
+        log_names = tuple(sorted(os.listdir(self.log_path)))
+        base = os.stat(self.base_path)
+        key = (
+            schema,
+            meta.get("seq", 0),
+            nb,
+            meta.get("last_compact_seq", 0),
+            (base.st_ino, base.st_ctime_ns),
+            log_names,
+        )
+        bucket = None
         if nb and leading_eq is not None:
-            lead_type = spark_type(schema.key_columns[0].type)
-            target = F.pmod(
-                F.xxhash64(F.lit(leading_eq).cast(lead_type)), F.lit(nb)
-            ).cast("int")
-            df = df.filter(F.col(BUCKET_COL) == target)
+            bucket = self._bucket_of(leading_eq, nb)
+            if bucket is None:
+                key = None
+        if as_of_seq is not None:
+            key = None
+        df = None
+        if key is not None:
+            with self._plan_lock:
+                if self._plan_key != key:
+                    self._plan_key, self._plans = key, {}
+                df = self._plans.get(bucket)
+        if df is None:
+            df = self._resolve(
+                spark, schema, meta, nb, bool(log_names), leading_eq, bucket, as_of_seq
+            )
+            if key is not None:
+                with self._plan_lock:
+                    if self._plan_key == key:
+                        self._plans[bucket] = df
+        return (df, key) if with_snapshot else df
+
+    def _resolve(
+        self,
+        spark: SparkSession,
+        schema: TableSchema,
+        meta: dict,
+        nb: int | None,
+        has_log: bool,
+        leading_eq: Any,
+        bucket: int | None,
+        as_of_seq: int | None,
+    ) -> DataFrame:
+        """Build the read plan ``read`` documents."""
+        df = self._raw(spark, nb, has_log)
+        if nb and leading_eq is not None:
+            if bucket is None:
+                lead_type = spark_type(schema.key_columns[0].type)
+                bucket = F.pmod(
+                    F.xxhash64(F.lit(leading_eq).cast(lead_type)), F.lit(nb)
+                ).cast("int")
+            df = df.filter(F.col(BUCKET_COL) == bucket)
         if nb:
             df = df.drop(BUCKET_COL)
         pk_phys = [c.physical for c in schema.key_columns]
@@ -792,7 +908,7 @@ class TableStore:
         # meta.compacted — the meta read races concurrent compactions
         # in other processes and could skip resolution on a plan that
         # unioned base + log (see _raw docstring, r6)
-        if not (not has_log and as_of_seq is None):
+        if has_log or as_of_seq is not None:
             # latest-wins as ONE hash aggregation (max_by over the commit
             # seq): partial-aggregates map-side and needs no per-partition
             # sort, unlike a row_number window — the cheaper plan at any
@@ -1437,8 +1553,10 @@ class TableStore:
         touched = new.select(*pk_phys)
         if broadcast_delta:
             touched = F.broadcast(touched)
-        raw = self._raw(spark).filter(F.col(SEQ_COL) <= from_seq)
-        if meta.get("hash_buckets"):
+        nb = self._effective_buckets(meta)
+        raw = self._raw(spark, nb, bool(os.listdir(self.log_path)))
+        raw = raw.filter(F.col(SEQ_COL) <= from_seq)
+        if nb:
             raw = raw.drop(BUCKET_COL)
         # leading-PK range pushdown: every touched PK lies in the tail's
         # [min, max], so the superset filter is safe and reaches the

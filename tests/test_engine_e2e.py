@@ -405,6 +405,27 @@ def test_cache_with_list_timestamp_args(spark, tmp_path):
     assert rows == [(2.0,)]
     assert eng.execute_rows("select x from t where k=1 and tm=?", [5, 7]) == rows
 
+
+def test_response_cache_sweeps_expired_entries(spark, tmp_path):
+    """Past 4096 entries, a cache write drops every expired entry (the
+    server reply cache's lazy sweep), so the cache cannot grow without
+    bound under distinct queries; live entries survive."""
+    import time
+
+    eng = Engine(spark, str(tmp_path / "wh_sw"), cache_ttl=60)
+    eng.execute("create database sw")
+    eng.use("sw")
+    eng.execute("create table t(k int, x double, primary key(k))")
+    eng.execute("insert into t(k, x) values(1, 2.0)")
+    past = time.time() - 1
+    for i in range(4097):
+        eng._response_cache[("select stale", (i,))] = (past, [])
+    live = ("select live", ())
+    eng._response_cache[live] = (time.time() + 60, [(0.0,)])
+    assert eng.execute_rows("select x from t where k=1") == [(2.0,)]
+    assert set(eng._response_cache) == {live, ("select x from t where k=1", ())}
+
+
 def test_pre_1970_timestamp_roundtrip(spark, tmp_path):
     """Negative-epoch datetimes must not skew by the sub-second part
     (timedelta arithmetic, not int(timestamp())+microsecond)."""

@@ -98,6 +98,44 @@ def test_concurrent_process_writers_no_lost_commits(spark, tmp_path):
 
 
 @pytest.mark.skipif(fcntl is None, reason="no fcntl on this platform")
+def test_held_store_sees_other_process_commits(spark, tmp_path):
+    """A store held across another process's commits must not serve its
+    cached read plan: the commits change the log listing in the snapshot
+    key, so the next read re-plans and returns the new rows."""
+    from opentick_spark.engine import Engine
+
+    wh = str(tmp_path / "wh")
+    eng = Engine(spark, wh)
+    eng.execute("create database mph")
+    eng.use("mph")
+    eng.execute("create table t(a int, v int, primary key(a))")
+    store = eng.store("mph", "t")
+    store.append_rows([{"a": k, "v": k} for k in range(5)])
+    held = store.read(spark)
+    assert store.read(spark) is held
+    assert sorted(map(tuple, held.collect())) == [(k, k) for k in range(5)]
+    err = str(tmp_path / "writer.err")
+    with open(err, "w") as ef:
+        out = subprocess.run(
+            [
+                sys.executable,
+                os.path.join(REPO, "tests", "_mp_writer.py"),
+                wh, "mph", "t", "1", "3", "4", "100",
+            ],
+            stdout=subprocess.PIPE, stderr=ef, text=True, timeout=120,
+        )
+    assert out.returncode == 0, pathlib.Path(err).read_text()[-2000:]
+    fresh = store.read(spark)
+    assert fresh is not held
+    # worker 1's last batch (b=2) wins: v = 1_000_000 + 2_000 + k
+    want = [(k, k) for k in range(5)] + [
+        (100 + k, 1_002_000 + k) for k in range(4)
+    ]
+    assert sorted(map(tuple, fresh.collect())) == want
+    assert eng.execute_rows("select * from t") == want
+
+
+@pytest.mark.skipif(fcntl is None, reason="no fcntl on this platform")
 def test_concurrent_writers_with_compaction(spark, tmp_path):
     """Writers in other processes racing COMPACTION in this one: the
     flock serializes the log swap against seq allocation, so no commit

@@ -608,3 +608,71 @@ def test_line_dedup_plan_one_generate_no_join(spark):
     plan = _final_plan(df)
     assert plan.count("Generate") == 1, plan
     assert "Join" not in plan, plan
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs ``fn`` submits, read from the status store through a
+    job group: a count, so the gate does not depend on the machine's
+    speed."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"counter-gate-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counter gate")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_dialect_selects_job_counts(spark, tmp_path):
+    """Counter gate for read-plan reuse and the snapshot-keyed factor
+    table, on the benchmark's query shape (compacted hash-bucketed
+    table): once warm, a repeated range select is ONE job (the scan) and
+    an adj select over an unchanged ``_adj_`` is TWO (the broadcast of
+    the persisted factor table, then the scan) — not three, as when the
+    factor windows were recomputed per query."""
+    from opentick_spark.engine import Engine
+
+    eng = Engine(spark, str(tmp_path / "wh"))
+    eng.execute("create database g")
+    eng.use("g")
+    eng.execute(
+        "create table t(sec int, tm timestamp, close double, v double, "
+        "primary key(sec, tm))"
+    )
+    eng.batch_insert(
+        "insert into t(sec, tm, close, v) values(?, ?, ?, ?)",
+        [(s, t, 100.0 + t, 1.0) for s in range(1, 5) for t in range(1, 200)],
+    )
+    eng.batch_insert(
+        "insert into _adj_(sec, time, px, vol) values(?, ?, ?, ?)",
+        [(s, t, 0.5, 2.0) for s in range(1, 5) for t in (50, 150)],
+    )
+    eng.store("g", "_adj_").compact(spark)
+    eng.store("g", "t").compact(spark, hash_buckets=4)
+    range_sql = "select * from t where sec=? and tm>=? and tm<?"
+    adj_sql = "select tm, adj(close), adj(v) from t where sec=? and tm>=? and tm<?"
+    for sql in (range_sql, adj_sql):
+        eng.execute_rows(sql, 1, 10, 100)  # warm-up
+    assert _jobs_run_by(spark, lambda: eng.execute_rows(range_sql, 2, 20, 120)) == 1
+    rows = []
+    assert _jobs_run_by(spark, lambda: rows.extend(eng.execute_rows(adj_sql, 3, 40, 60))) == 2
+    # forward factors: before t=50 both events apply (0.25), then 0.5
+    assert [(r[0][0], r[1]) for r in rows] == [
+        (t, (100.0 + t) * (0.25 if t < 50 else 0.5)) for t in range(40, 60)
+    ]
+    # an _adj_ commit replaces the factor table, and the new one is
+    # reused too — also after a second commit, whose factor plan has the
+    # same root paths as the first one's: see factor_table
+    for t in (58, 55):
+        eng.execute("insert into _adj_(sec, time, px, vol) values(3, ?, 0.5, 2.0)", t)
+        eng.execute_rows(adj_sql, 3, 40, 60)
+    rows.clear()
+    assert _jobs_run_by(spark, lambda: rows.extend(eng.execute_rows(adj_sql, 3, 40, 60))) == 2
+    assert [(r[0][0], r[1]) for r in rows] == [
+        (t, (100.0 + t) * (0.0625 if t < 50 else 0.125 if t < 55 else 0.25 if t < 58 else 0.5))
+        for t in range(40, 60)
+    ]
