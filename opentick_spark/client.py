@@ -300,52 +300,29 @@ class Connection:
         return self._engine.table_meta(self._engine.current_db, table_name)
 
     # -- execution -----------------------------------------------------
-    def _rows_out(self, rows):
-        if rows is None:
-            return None
-        return [
-            tuple(
-                _dt.datetime.fromtimestamp(v[0], _dt.timezone.utc).replace(
-                    tzinfo=None
-                )
-                + _dt.timedelta(microseconds=v[1] // 1000)
-                if isinstance(v, tuple) and len(v) == 2
-                else v
-                for v in row
-            )
-            for row in rows
-        ]
-
-    def _cols_out(self, cols_ts):
-        """Columnar result delivery (r15): the engine's ``_ns`` paths
-        return timestamp columns as raw epoch-ns int64 plus their
-        positions, so the client converts ONLY those columns (one
-        datetime per ts cell) and transposes once — the profile showed
-        `_rows_out`'s per-cell tuple sniff (rows × all columns) was
-        ~50% of a 100k-row scan's wall. Value-identical:
-        EPOCH + timedelta(s, µs) ≡ fromtimestamp(s, UTC) + µs for
-        integer seconds. Falls back to the tuple-sniffing row path
-        when ts positions are unknown (LIMIT / non-Arrow shapes)."""
-        if cols_ts is None:
-            return None
+    @staticmethod
+    def _cols_out(cols_ts):
+        """Rows from the engine's ``(cols, ts_idx)`` result: timestamp
+        columns arrive as raw epoch-ns ints at the positions ``ts_idx``
+        names, so only those columns are converted (one datetime per ts
+        cell) before the one transpose. EPOCH + timedelta(s, µs) ≡
+        fromtimestamp(s, UTC) + µs for integer seconds."""
         cols, ts_idx = cols_ts
         if cols is None:
             return None
-        if ts_idx:
-            epoch = _dt.datetime(1970, 1, 1)
-            for i in ts_idx:
-                cols[i] = [
-                    None
-                    if v is None
-                    else epoch
-                    + _dt.timedelta(
-                        seconds=v // 1_000_000_000,
-                        microseconds=(v % 1_000_000_000) // 1000,
-                    )
-                    for v in cols[i]
-                ]
-            return list(zip(*cols))
-        return self._rows_out(list(zip(*cols)))
+        epoch = _dt.datetime(1970, 1, 1)
+        for i in ts_idx:
+            cols[i] = [
+                None
+                if v is None
+                else epoch
+                + _dt.timedelta(
+                    seconds=v // 1_000_000_000,
+                    microseconds=(v % 1_000_000_000) // 1000,
+                )
+                for v in cols[i]
+            ]
+        return list(zip(*cols))
 
     @staticmethod
     def _inband_ranges(args: list):
@@ -365,7 +342,7 @@ class Connection:
 
     def execute(self, sql: str, args: Iterable[Any] = (), cache: bool = True):
         # ``cache`` accepted for signature parity (client.py:204); the
-        # engine-side TTL cache is configured on the Engine, not per call
+        # response cache is the server's --cache, on the wire path only
         args = list(args)  # materialize ONCE: args may be a one-shot iterator
         split = self._inband_ranges(args)
         if split is not None:
@@ -417,8 +394,8 @@ class Connection:
         sub-queries. ``ranges`` bind the statement's LAST two
         placeholders, one (lo, hi) pair per sub-range."""
         return self._cols_out(
-            self._engine.execute_split_columns_ns(
-                sql, [tuple(r) for r in ranges], *tuple(args)
+            self._engine.execute_columns_ns(
+                sql, *tuple(args), ranges=[tuple(r) for r in ranges]
             )
         )
 
@@ -735,8 +712,9 @@ class TCPConnection:
     def _extract_result(self, msg: dict):
         """Result of a decoded reply: key "1p" carries the packed
         columnar fast path (bson protocol, negotiated by our "5" run
-        flag — see wire_packed.py), "1c" the columnar json fast path,
-        key "1" the reference row shape (bson) or an error string."""
+        flag — see wire_packed.py), "1c" the columnar json fast path
+        (negotiated by "8"), key "1" the reference row shape or an
+        error string."""
         packed = msg.get("1p")
         if packed is not None:
             from opentick_spark.wire_packed import unpack_columns
@@ -753,22 +731,8 @@ class TCPConnection:
                     None if v is None else divmod(v, 1_000_000_000)
                     for v in cols[i]
                 ]
-            return self._cols_to_rows(cols)
+            return list(zip(*cols))
         return msg.get("1")
-
-    @staticmethod
-    def _cols_to_rows(cols: list[list]) -> list[tuple]:
-        """Transpose wire columns into the client row-tuple contract;
-        timestamp cells arrive as [sec, nsec] json arrays — detect
-        list-bearing columns once and convert column-wise."""
-        fixed = []
-        for c in cols:
-            if any(isinstance(v, list) for v in c[:1]) or (
-                c and c[0] is None and any(isinstance(v, list) for v in c)
-            ):
-                c = [tuple(v) if isinstance(v, list) else v for v in c]
-            fixed.append(c)
-        return list(zip(*fixed))
 
     def _rows_in(self, rows):
         if rows is None:
@@ -868,10 +832,10 @@ class TCPConnection:
         reference client opens n connections and merges n sub-scans
         client-side (client/opentick.go:63-127, 302-317); here ONE
         round trip ships the (lo, hi) pairs (key "7") and the server
-        executes them as a single coalesced Spark scan
-        (engine.execute_split_rows), returning the merged, PK-ordered,
-        boundary-deduped rows. ``ranges`` bind the statement's LAST two
-        placeholders; bounds accept the same value forms as query args."""
+        executes them as a single coalesced Spark scan, returning the
+        merged, PK-ordered, boundary-deduped rows. ``ranges`` bind the
+        statement's LAST two placeholders; bounds accept the same value
+        forms as query args."""
         args = list(args)
         if isinstance(sql, str):
             sql = self.prepare(sql)  # pid survives reconnect remapping

@@ -12,9 +12,19 @@ method calls. What remains semantically is reproduced here:
 - ``batch_insert(prepared, rows)`` — N rows in ONE atomic commit
   (BatchInsert, query.go:294-307)
 - SELECTs return DataFrames in implicit full-PK order (ascending, or
-  descending under ``LIMIT -n`` — query.go:156-159); ``execute_rows``
-  collects with timestamps converted back to the reference's (sec, nsec)
-  wire pairs (client/opentick.go:171-189)
+  descending under ``LIMIT -n`` — query.go:156-159)
+- ``execute_split(sql, ranges, *args)`` — SplitRange as one DataFrame
+
+Collected results take one path: the private producer
+``_result_table(sql, args, ranges=None)`` returns the result as a
+PK-ordered Arrow table, and three public methods shape it at the edge,
+each taking an optional ``ranges=`` for split reads:
+
+- ``execute_rows`` — row tuples, timestamps as the reference's
+  (sec, nsec) wire pairs (client/opentick.go:171-189)
+- ``execute_columns_ns`` — ``(cols, ts_idx)``: column lists with
+  timestamps as raw epoch-ns ints at positions ``ts_idx``
+- ``execute_packed_payload`` — the wire's packed "1p" payload
 """
 
 from __future__ import annotations
@@ -22,12 +32,12 @@ from __future__ import annotations
 import itertools
 import re
 import threading
-import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from opentick_spark import wire_packed
 from opentick_spark.catalog import ADJ_TABLE, Catalog
 from opentick_spark.dialect import ast
 from opentick_spark.dialect.parser import parse
@@ -185,20 +195,6 @@ def _render_conds_sql(conds) -> "str | None":
     return " AND ".join(parts) if parts else "true"
 
 
-def ttl_cache_put(
-    cache: dict, lock: Any, key: tuple, value: Any, ttl: float
-) -> None:
-    """Store ``value`` in ``cache`` under ``key`` for ``ttl`` seconds, as
-    ``(expiry, value)``. Expired entries are swept lazily: once the dict
-    holds more than 4096 entries, each put first drops the expired ones."""
-    with lock:
-        now = time.time()
-        if len(cache) > 4096:
-            for k in [k for k, (exp, _) in cache.items() if now >= exp]:
-                del cache[k]
-        cache[key] = (now + ttl, value)
-
-
 def split_range(start, end, num_parts: int) -> list[tuple]:
     """Split [start, end] into ``num_parts`` sub-ranges whose adjacent
     bounds are shared, last part absorbing the remainder — the client-side
@@ -225,17 +221,10 @@ class Engine:
         self,
         spark: SparkSession,
         warehouse: str,
-        cache_ttl: float | None = None,
         auto_compact_every: int | None = None,
         permission_control: bool = False,
     ):
-        """``cache_ttl``: optional TTL (seconds) for the SELECT response
-        cache (--cache, server.go:27,37-40). Like the reference, cached
-        results are served STALE within the TTL — deleted rows keep
-        appearing until expiry (server_test.go:161-183). Off by default;
-        keep off for correctness runs.
-
-        ``auto_compact_every``: opt-in background-style maintenance —
+        """``auto_compact_every``: opt-in background-style maintenance —
         after N commits to a table since its last compaction, the next
         insert triggers a compaction (preserving its hash-bucket layout),
         keeping reads on the window-free sorted-base path during long
@@ -248,8 +237,6 @@ class Engine:
         self._prepared_ids = itertools.count(1)
         self._lock = threading.RLock()
         self._stores: dict[tuple[str, str], TableStore] = {}
-        self.cache_ttl = cache_ttl
-        self._response_cache: dict[tuple, tuple[float, list]] = {}
         self.auto_compact_every = auto_compact_every
         # C7 permission control (user.go; server.go:34-35): off → every
         # caller is an implicit admin (user=None short-circuits get_perm)
@@ -476,34 +463,52 @@ class Engine:
         columns missing from the projection are carried internally and
         dropped at the end; the merged result stays PK-ascending
         (client/opentick.go:302-317)."""
+        resolved = self._split_statement(sql, ranges, args)
+        return self._split_frame(resolved, ranges, args)
+
+    def _split_statement(
+        self, sql: str | int, ranges: list[tuple], args: tuple
+    ) -> ResolvedSelect:
+        """The prepared SELECT behind a split read, arity-checked: each
+        branch binds (*args, lo, hi) — same contract as a plain execute
+        of the statement."""
         if not ranges:
             raise OpentickError("execute_split requires at least one range")
-        import dataclasses
-
         pid = self.prepare(sql) if isinstance(sql, str) else sql
         resolved = self._prepared[pid][1]
         if not isinstance(resolved, ResolvedSelect):
             raise OpentickError("execute_split requires a select")
-        # each branch binds (*args, lo, hi) — same arity contract as a
-        # plain execute of the statement
         self._check_args(resolved.n_placeholders, (*args, None, None))
+        return resolved
+
+    def _split_frame(
+        self,
+        resolved: ResolvedSelect,
+        ranges: list[tuple],
+        args: tuple,
+        defer_sort: bool = False,
+    ) -> DataFrame:
+        """The split read as one DataFrame. Without LIMIT/adj it is ONE
+        scan filtered by the OR of the sub-range predicates — coalesced
+        first, so the reference-style contiguous split collapses to a
+        single range predicate (see ``_split_predicate``). That is
+        set-identical to union+dedup (a boundary row satisfies two
+        disjuncts but is still one row of one scan), with none of the
+        n-subplan union, the dropDuplicates shuffle, or n passes over
+        the upsert-resolution window. ``defer_sort`` skips its orderBy
+        and carries the PK for a caller that sorts the collected table
+        itself. LIMIT/adj are per-sub-range semantics in the reference,
+        so those run the branch-union path, always sorted."""
+        import dataclasses
+
         pk = resolved.schema.pk_names
         want = [c.name for c in resolved.cols]
         if not resolved.limit and not resolved.adjs:
-            # fast path: ONE scan filtered by the OR of the sub-range
-            # predicates — coalesced first, so the reference-style
-            # contiguous split collapses to a single range predicate
-            # (see _split_disjuncts). Set-identical to union+dedup (a
-            # boundary row satisfies two disjuncts but is still one row
-            # of one scan), with none of the n-subplan union, the
-            # dropDuplicates shuffle, or n passes over the
-            # upsert-resolution window — this is the "native Spark
-            # parallelism" form of SplitRange.
-            # (LIMIT/adj are per-sub-range semantics in the reference →
-            # those fall back to the branch-union path below.)
             pred, leading_eq = self._split_predicate(resolved, ranges, args)
             st = self.store(resolved.schema.db, resolved.schema.name)
             df = st.read(self.spark, leading_eq=leading_eq).filter(pred)
+            if defer_sort:
+                return df.select(*dict.fromkeys(want + pk))
             return df.orderBy(*pk).select(*want)
         missing = [k for k in resolved.schema.key_columns if k.name not in want]
         widened = dataclasses.replace(resolved, cols=list(resolved.cols) + missing)
@@ -628,107 +633,51 @@ class Engine:
             out.append(conds)
         return fold(out)
 
-    def execute_split_rows(
-        self, sql: str | int, ranges: list[tuple], *args: Any
-    ) -> list[tuple]:
-        """Client-materialized SplitRange (r8): the reference's
-        SplitRange contract is n parallel sub-scans whose rows land at
-        the CLIENT merged and PK-ordered (client/opentick.go:302-317) —
-        so, exactly like ``execute_rows``, paying a plan-level global
-        sort (range-exchange + sampling job) to order rows the driver
-        is about to hold in one Arrow table is pure overhead. The
-        fast-path OR-of-sub-ranges scan collects unsorted (PK carried)
-        and pyarrow sorts; LIMIT/adj split semantics fall back to the
-        sorted-plan path."""
-        return list(zip(*self.execute_split_columns(sql, ranges, *args)))
+    # -- result delivery -------------------------------------------------
+    def _result_table(
+        self, sql: str | int, args: tuple, ranges: list[tuple] | None = None
+    ):
+        """The one producer behind the three result shapes: ``(table,
+        cols)`` where ``table`` is the statement's result as a PK-ordered
+        pyarrow Table (None for DDL/DML) and ``cols`` lists its reply
+        columns as ``(name, opentick_type)``. ``ranges`` makes it a split
+        read (see ``execute_split``).
 
-    def execute_split_columns(
-        self, sql: str | int, ranges: list[tuple], *args: Any
-    ) -> list[list]:
-        """Column-shaped twin of ``execute_split_rows`` (same cells as
-        ``execute_columns``) — serves the wire's columnar/packed reply
-        fast paths without a server-side transpose."""
-        tbl, resolved = self._split_arrow_table(sql, ranges, args)
-        if tbl is None:
-            df = self.execute_split(sql, ranges, *args)
-            return self._materialize_columns(df, resolved)
-        cols = [tbl.column(c.name).to_pylist() for c in resolved.cols]
-        for i, c in enumerate(resolved.cols):
-            if c.type == "timestamp":
-                cols[i] = [
-                    from_epoch_nanos(v) if v is not None else None
-                    for v in cols[i]
-                ]
-        return cols
+        A select without LIMIT collects the UNSORTED scan and sorts with
+        pyarrow: the DataFrame API keeps its global ``orderBy`` (the
+        100 TB contract), but these shapes hold the whole result on the
+        driver anyway, so a range-partitioning Exchange plus its
+        sampling job would order rows that one Arrow ``sort_by`` orders
+        exactly (PKs are unique under upsert semantics). LIMIT and the
+        per-sub-range split shapes (LIMIT/adj) collect the plan's own
+        ordered result — TakeOrderedAndProject is already exchange-free
+        and prunes to n rows executor-side. EXPLAIN collects its plan
+        lines. A failing collect raises: nothing is planned or run a
+        second time."""
+        if ranges is None:
+            resolved = self._resolved_select_of(sql)
+            if resolved is None:
+                df = self.execute(sql, *args)
+                if df is None:
+                    return None, []
+                return df.toArrow(), [(n, "text") for n in df.columns]
+            self._check_args(resolved.n_placeholders, args)
+            df = self._run_select(resolved, args, defer_sort=True)
+            deferred = not resolved.limit
+        else:
+            resolved = self._split_statement(sql, ranges, args)
+            df = self._split_frame(resolved, ranges, args, defer_sort=True)
+            deferred = not (resolved.limit or resolved.adjs)
+        tbl = df.toArrow()
+        if deferred:
+            order = "descending" if resolved.reverse else "ascending"
+            tbl = tbl.sort_by([(k, order) for k in resolved.schema.pk_names])
+        return tbl, [(c.name, c.type) for c in resolved.cols]
 
-    def _split_arrow_table(self, sql: str | int, ranges: list[tuple], args: tuple):
-        """Sorted Arrow collect of the coalesced split scan, or
-        ``(None, resolved)`` when the per-sub-range semantics (LIMIT/
-        adj) or a non-Arrow result need the DataFrame path."""
-        if not ranges:
-            raise OpentickError("execute_split requires at least one range")
-        pid = self.prepare(sql) if isinstance(sql, str) else sql
-        resolved = self._prepared[pid][1]
-        if not isinstance(resolved, ResolvedSelect):
-            raise OpentickError("execute_split requires a select")
-        self._check_args(resolved.n_placeholders, (*args, None, None))
-        if resolved.limit or resolved.adjs:
-            return None, resolved
-        want = [c.name for c in resolved.cols]
-        pk = resolved.schema.pk_names
-        proj = list(dict.fromkeys(want + pk))
-        # same coalesced OR-predicate single scan as execute_split's
-        # fast path, minus the orderBy
-        pred, leading_eq = self._split_predicate(resolved, ranges, args)
-        st = self.store(resolved.schema.db, resolved.schema.name)
-        df = st.read(self.spark, leading_eq=leading_eq).filter(pred).select(*proj)
-        try:
-            tbl = df.toArrow()
-        except Exception:
-            return None, resolved
-        return tbl.sort_by([(k, "ascending") for k in pk]), resolved
-
-    def execute_rows(self, sql: str | int, *args: Any) -> list[tuple] | None:
-        """Reference-client result shape: list of row tuples with timestamp
-        columns as (epoch_sec, nanosec) pairs. Serves the SELECT response
-        cache when ``cache_ttl`` is set (stale within TTL, like the
-        reference — server.go:342-350)."""
-        cache_key = None
-        if self.cache_ttl is not None:
-            sql_text = self._prepared[sql][0] if isinstance(sql, int) else sql
-            if sql_text.lstrip().lower().startswith("select"):
-                # args may contain [sec, nsec] timestamp lists — hashable form
-                cache_key = (
-                    sql_text,
-                    tuple(
-                        tuple(a) if isinstance(a, list) else a for a in args
-                    ),
-                )
-                hit = self._response_cache.get(cache_key)
-                if hit is not None and time.time() < hit[0]:
-                    return hit[1]
-        cols = self._execute_to_columns(sql, args)
-        if cols is None:
-            return None
-        rows = list(zip(*cols))
-        if cache_key is not None:
-            ttl_cache_put(
-                self._response_cache, self._lock, cache_key, rows, self.cache_ttl
-            )
-        return rows
-
-    def execute_columns(self, sql: str | int, *args: Any) -> list[list] | None:
-        """Columnar result for the wire fast path: the same cells as
-        ``execute_rows`` but as column lists, skipping the row-transpose
-        on the server (the client zips after decode — C-speed either
-        side, one transpose total instead of three)."""
-        return self._execute_to_columns(sql, args)
-
-    def _resolved_select_of(self, sql: str | int):
-        """Resolve a statement for the columnar materializers: the
-        ResolvedSelect when ``sql`` is a (prepared) SELECT, else None
-        (caller falls through to the generic ``execute`` path). Raises
-        the standard unknown-pid error for dangling prepared ids."""
+    def _resolved_select_of(self, sql: str | int) -> ResolvedSelect | None:
+        """The ResolvedSelect when ``sql`` is a (prepared) SELECT, else
+        None (the caller runs it through ``execute``). Raises the
+        standard unknown-pid error for dangling prepared ids."""
         if isinstance(sql, int):
             try:
                 resolved = self._prepared[sql][1]
@@ -740,185 +689,45 @@ class Engine:
         node = parse(sql)
         return self._resolve(node) if isinstance(node, ast.Select) else None
 
-    def _execute_to_columns(self, sql: str | int, args: tuple) -> list[list] | None:
-        """Shared row/wire materialization: resolves SELECTs up front so
-        they take the Arrow-sorted collect (no range-exchange — see
-        ``_collect_select_columns``); everything else goes through
-        ``execute`` unchanged."""
-        resolved = self._resolved_select_of(sql)
-        if isinstance(resolved, ResolvedSelect):
-            self._check_args(resolved.n_placeholders, args)
-            return self._collect_select_columns(resolved, args)
-        result = self.execute(sql, *args)
-        if result is None:
+    def execute_rows(
+        self, sql: str | int, *args: Any, ranges: list[tuple] | None = None
+    ) -> list[tuple] | None:
+        """Reference-client result shape: list of row tuples with
+        timestamp cells as (epoch_sec, nanosec) pairs
+        (client/opentick.go:171-189); None for DDL/DML."""
+        cols, ts_idx = self.execute_columns_ns(sql, *args, ranges=ranges)
+        if cols is None:
             return None
-        return self._materialize_columns(result, resolved)
-
-    def _collect_select_columns(self, stmt: ResolvedSelect, args: tuple) -> list[list]:
-        """Client-materialized SELECT fast path (r8): collect the
-        UNSORTED scan via Arrow and sort driver-side with pyarrow.
-
-        The DataFrame API keeps its global ``orderBy`` (the 100 TB
-        contract), but the row/wire APIs materialize EVERYTHING to the
-        driver anyway (bounded, sanctioned client shape) — paying a
-        range-partitioning Exchange plus its sampling job per query
-        just to order rows we are about to hold in one Arrow table is
-        pure overhead. Skipping it turns each select into a single
-        shuffle-free stage; under the reference harness's 10-way async
-        fan-out that removed ~30%% of wall-clock (concurrent jobs stop
-        fighting over 2x the stages). PKs are unique (upsert
-        semantics), so the pyarrow ``sort_by`` total order is exactly
-        the plan's ``orderBy`` order; LIMIT queries keep the plan sort
-        — Spark's TakeOrderedAndProject is already exchange-free and
-        prunes to n rows executor-side."""
-        tbl = self._select_arrow_table(stmt, args)
-        if tbl is None:
-            return self._materialize_columns(self._run_select(stmt, args), stmt)
-        cols = [tbl.column(c.name).to_pylist() for c in stmt.cols]
-        for i, c in enumerate(stmt.cols):
-            if c.type == "timestamp":
-                cols[i] = [
-                    from_epoch_nanos(v) if v is not None else None
-                    for v in cols[i]
-                ]
-        return cols
-
-    def _select_arrow_table(self, stmt: ResolvedSelect, args: tuple):
-        """Sorted Arrow collect behind the fast materialization paths,
-        or None when the plan shape needs the DataFrame path (LIMIT —
-        TakeOrderedAndProject already prunes executor-side) or the
-        result isn't Arrow-collectible."""
-        if stmt.limit:
-            return None
-        df = self._run_select(stmt, args, defer_sort=True)
-        try:
-            tbl = df.toArrow()
-        except Exception:
-            return None
-        order = "descending" if stmt.reverse else "ascending"
-        return tbl.sort_by([(k, order) for k in stmt.schema.pk_names])
-
-    def execute_columns_ns(self, sql: str | int, *args: Any):
-        """``(cols, ts_idx)`` for the wire's negotiated ns-timestamp
-        reply ("1t", r11): timestamp columns stay raw epoch-ns int64
-        and ``ts_idx`` names their positions, skipping the server-side
-        per-cell (sec, nsec) conversion AND shrinking the json encode
-        (ints, not 2-arrays); the CLIENT divmods — the same total work
-        its tuple-conversion loop already did. Falls back to the
-        converted cells with ``ts_idx=[]`` (reply then carries no "1t")
-        for LIMIT/non-Arrow/non-select shapes. adj selects ride the ns
-        path — adj rewrites px/vol float columns and leaves timestamp
-        columns as engine-native ns, so the "1t" contract holds."""
-        resolved = self._resolved_select_of(sql)
-        if isinstance(resolved, ResolvedSelect):
-            self._check_args(resolved.n_placeholders, args)
-            tbl = self._select_arrow_table(resolved, args)
-            if tbl is not None:
-                cols = [tbl.column(c.name).to_pylist() for c in resolved.cols]
-                ts_idx = [
-                    i
-                    for i, c in enumerate(resolved.cols)
-                    if c.type == "timestamp"
-                ]
-                return cols, ts_idx
-            # LIMIT / non-Arrow: materialize the already-resolved
-            # statement directly (no second resolution or collect retry)
-            return (
-                self._materialize_columns(
-                    self._run_select(resolved, args), resolved
-                ),
-                [],
-            )
-        return self.execute_columns(sql, *args), []
-
-    def execute_split_columns_ns(
-        self, sql: str | int, ranges: list[tuple], *args: Any
-    ):
-        """ns-timestamp twin of ``execute_split_columns`` (see
-        ``execute_columns_ns``)."""
-        tbl, resolved = self._split_arrow_table(sql, ranges, args)
-        if tbl is None:
-            # LIMIT/adj/non-Arrow: materialize the DataFrame split path
-            # directly — re-entering execute_split_columns would rebuild
-            # the scan and retry the same failing collect
-            df = self.execute_split(sql, ranges, *args)
-            return self._materialize_columns(df, resolved), []
-        cols = [tbl.column(c.name).to_pylist() for c in resolved.cols]
-        ts_idx = [
-            i for i, c in enumerate(resolved.cols) if c.type == "timestamp"
-        ]
-        return cols, ts_idx
-
-    def execute_packed_payload(self, sql: str | int, *args: Any):
-        """The wire's packed-columnar reply ("1p") built straight from
-        the Arrow collect where the statement allows — numeric/bool/
-        string/ns-timestamp columns become C-speed casts + buffer
-        slices, skipping ``to_pylist`` and every per-cell Python loop
-        (engine-side AND pack-side). Falls back cell-exactly to
-        ``pack_columns`` over materialized cells for LIMIT/DDL/
-        non-Arrow shapes. Returns the payload dict, or None for
-        row-less statements."""
-        from opentick_spark.wire_packed import pack_arrow_table, pack_columns
-
-        resolved = self._resolved_select_of(sql)
-        if isinstance(resolved, ResolvedSelect):
-            self._check_args(resolved.n_placeholders, args)
-            tbl = self._select_arrow_table(resolved, args)
-            if tbl is not None:
-                return pack_arrow_table(
-                    tbl, [(c.name, c.type) for c in resolved.cols]
-                )
-            # LIMIT / non-Arrow: materialize directly, no collect retry
-            return pack_columns(
-                self._materialize_columns(
-                    self._run_select(resolved, args), resolved
-                )
-            )
-        return pack_columns(self.execute_columns(sql, *args))
-
-    def execute_split_packed_payload(
-        self, sql: str | int, ranges: list[tuple], *args: Any
-    ):
-        """Packed-payload twin of ``execute_split_columns`` — the wire
-        split's bson reply without a single per-cell Python loop on the
-        coalesced fast path."""
-        from opentick_spark.wire_packed import pack_arrow_table, pack_columns
-
-        tbl, resolved = self._split_arrow_table(sql, ranges, args)
-        if tbl is None:
-            # materialize the DataFrame split path directly (see
-            # execute_split_columns_ns — no rebuilt scan/collect retry)
-            df = self.execute_split(sql, ranges, *args)
-            return pack_columns(self._materialize_columns(df, resolved))
-        return pack_arrow_table(
-            tbl, [(c.name, c.type) for c in resolved.cols]
-        )
-
-    def _materialize_columns(self, result, resolved) -> list[list]:
-        """Collect a result DataFrame as column lists with timestamp
-        cells converted to (epoch_sec, nanosec) tuples."""
-        ts_idx = set()
-        if isinstance(resolved, ResolvedSelect):
-            ts_idx = {i for i, c in enumerate(resolved.cols) if c.type == "timestamp"}
-        try:
-            # Arrow collect: columnar batches off the JVM, cells
-            # materialized by pyarrow in C — ~2x faster than the
-            # row-at-a-time collect() loop at 100k rows (measured:
-            # 0.83 s vs 1.49 s for the 9-col scan benchmark)
-            tbl = result.toArrow()
-            cols = [c.to_pylist() for c in tbl.columns]
-        except Exception:
-            # arrow-incompatible result type → row collect, transpose
-            collected = result.collect()
-            cols = [list(c) for c in zip(*collected)] if collected else [
-                [] for _ in result.columns
-            ]
         for i in ts_idx:
             cols[i] = [
-                from_epoch_nanos(v) if v is not None else None
-                for v in cols[i]
+                from_epoch_nanos(v) if v is not None else None for v in cols[i]
             ]
-        return cols
+        return list(zip(*cols))
+
+    def execute_columns_ns(
+        self, sql: str | int, *args: Any, ranges: list[tuple] | None = None
+    ):
+        """``(cols, ts_idx)``: the result as column lists with timestamp
+        columns left as raw epoch-ns ints, ``ts_idx`` naming their
+        positions — the wire's negotiated "1c"+"1t" reply and the
+        in-process client's input; the reader converts only those
+        columns. ``(None, [])`` for DDL/DML."""
+        tbl, cols = self._result_table(sql, args, ranges)
+        if tbl is None:
+            return None, []
+        return (
+            [tbl.column(name).to_pylist() for name, _ in cols],
+            [i for i, (_, t) in enumerate(cols) if t == "timestamp"],
+        )
+
+    def execute_packed_payload(
+        self, sql: str | int, *args: Any, ranges: list[tuple] | None = None
+    ):
+        """The wire's packed-columnar reply ("1p") straight from the
+        Arrow buffers (``wire_packed.pack_arrow_table``), or None for
+        DDL/DML."""
+        tbl, cols = self._result_table(sql, args, ranges)
+        return None if tbl is None else wire_packed.pack_arrow_table(tbl, cols)
 
     # ------------------------------------------------------------------
     def _check_args(self, n_expected: int, args: tuple) -> None:
@@ -1002,9 +811,9 @@ class Engine:
         # implicit full-PK ordering; LIMIT -n = tail in DESCENDING order
         pk = schema.pk_names
         if defer_sort and not stmt.limit:
-            # row/wire materialization path: the caller sorts the
-            # collected Arrow table itself (_collect_select_columns) —
-            # project the PK through so it can
+            # result-shape path: the caller sorts the collected Arrow
+            # table itself (_result_table) — project the PK through so
+            # it can
             proj = list(dict.fromkeys([c.name for c in stmt.cols] + pk))
             return df.select(*proj)
         order = [F.col(k).desc() for k in pk] if stmt.reverse else [F.col(k) for k in pk]

@@ -15,6 +15,9 @@ BSON codec drops in by swapping ``_dumps``/``_loads``). Message shape
 Rows are lists of lists; timestamp cells are ``[epoch_sec, nanosec]``
 pairs exactly like the reference's tuple encoding
 (client/opentick.go:278-284). Errors travel as strings in key "1".
+Our own client negotiates columnar replies instead: "1c"+"1t" on json
+when it sends "8", packed "1p" on bson when it sends "5"
+(``_Session._result_reply``).
 
 Heartbeat (C10, server.go:127-139): the server pushes a 1-byte ``H``
 frame every ``heartbeat_s``; clients treat it as liveness and never
@@ -41,7 +44,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-from opentick_spark.engine import Engine, ttl_cache_put
+from opentick_spark.engine import Engine
 from opentick_spark.errors import OpentickError
 from opentick_spark.wire_packed import unpack_columns
 
@@ -258,46 +261,7 @@ class _Session:
                             )
                             return
                     what = self._engine_pid(what)
-                if self.protocol == "json":
-                    # columnar fast path: engine hands over column lists
-                    # (no server-side transpose), client zips after
-                    # decode — json arrays encode/decode faster columnar.
-                    # "8" (r11, negotiated): timestamp columns ride as
-                    # raw ns ints, positions in "1t", client divmods —
-                    # no per-cell server loop, smaller encode
-                    if msg.get("8"):
-                        cols, tsi = self.engine.execute_columns_ns(
-                            what, *args
-                        )
-                        reply = {"0": ticket, "1c": cols}
-                        if tsi:
-                            reply["1t"] = tsi
-                        payload = self._enc(reply)
-                    else:
-                        cols = self.engine.execute_columns(what, *args)
-                        payload = self._enc({"0": ticket, "1c": cols})
-                elif msg.get("5"):
-                    # packed-columnar bson fast path (key "1p"),
-                    # NEGOTIATED: only our client sends "5" — one
-                    # struct-packed binary blob per column instead of
-                    # ~4x-slower per-cell BSON; built straight from
-                    # Arrow buffers where the statement allows (r11 —
-                    # zero per-cell Python, see wire_packed.py)
-                    payload = self._enc(
-                        {
-                            "0": ticket,
-                            "1p": self.engine.execute_packed_payload(
-                                what, *args
-                            ),
-                        }
-                    )
-                else:
-                    # bson keeps the reference's row shape in key "1"
-                    # for reference clients (tests/test_wire_golden.py)
-                    rows = self.engine.execute_rows(what, *args)
-                    payload = self._enc(
-                        {"0": ticket, "1": _jsonable_rows(rows)}
-                    )
+                payload = self._result_reply(ticket, msg, what, args)
                 if cache_key is not None:
                     self.server._cache_put(cache_key, payload)
                 self.reply_raw(payload, ticket)
@@ -308,48 +272,18 @@ class _Session:
                 # connections and merges client-side
                 # (client/opentick.go:63-127, 302-317); here ONE round
                 # trip hands the sub-ranges ("7") to the engine, which
-                # executes them as a single coalesced scan
-                # (execute_split_rows) and returns the merged,
-                # PK-ordered, boundary-deduped rows in the reference
-                # row shape (key "1", both protocols).
+                # executes them as a single coalesced scan and returns
+                # the merged, PK-ordered, boundary-deduped result in the
+                # same reply shapes as "run" (see _result_reply).
                 self.server._bump("n_run")
                 what = msg["2"]
                 if isinstance(what, int):
                     what = self._engine_pid(what)
                 ranges = [tuple(r) for r in (msg.get("7") or [])]
                 args = tuple(msg.get("3") or ())
-                # split exists for LARGE scans — reply through the same
-                # fast shapes as "run": columnar "1c" (json), packed
-                # "1p" (bson + negotiated "5"), reference rows "1"
-                if self.protocol == "json":
-                    if msg.get("8"):
-                        cols, tsi = self.engine.execute_split_columns_ns(
-                            what, ranges, *args
-                        )
-                        reply = {"0": ticket, "1c": cols}
-                        if tsi:
-                            reply["1t"] = tsi
-                        payload = self._enc(reply)
-                    else:
-                        cols = self.engine.execute_split_columns(
-                            what, ranges, *args
-                        )
-                        payload = self._enc({"0": ticket, "1c": cols})
-                elif msg.get("5"):
-                    payload = self._enc(
-                        {
-                            "0": ticket,
-                            "1p": self.engine.execute_split_packed_payload(
-                                what, ranges, *args
-                            ),
-                        }
-                    )
-                else:
-                    rows = self.engine.execute_split_rows(what, ranges, *args)
-                    payload = self._enc(
-                        {"0": ticket, "1": _jsonable_rows(rows)}
-                    )
-                self.reply_raw(payload, ticket)
+                self.reply_raw(
+                    self._result_reply(ticket, msg, what, args, ranges), ticket
+                )
                 return
             if cmd == "batch":
                 pid = self._engine_pid(msg["2"])
@@ -424,6 +358,36 @@ class _Session:
         except Exception as e:  # wire must answer every ticket
             self.server._bump("n_errors")
             self.reply(ticket, f"{type(e).__name__}: {e}")
+
+    def _result_reply(
+        self, ticket: Any, msg: dict, what: Any, args: tuple, ranges=None
+    ) -> bytes:
+        """The encoded reply to a ``run``/``split``, in one of three
+        shapes:
+
+        - a json session that sent "8" gets column lists in "1c", with
+          timestamp columns as raw epoch-ns ints whose positions ride in
+          "1t" (the client divmods them — no per-cell server loop);
+        - a bson session that sent "5" gets the packed-columnar "1p"
+          payload (wire_packed.py), built straight from Arrow buffers;
+        - everyone else — the reference clients, which send neither
+          flag — gets the reference row shape in "1", timestamp cells as
+          [sec, nsec] (server.go:186-207; tests/test_wire_golden.py)."""
+        eng = self.engine
+        if self.protocol == "json" and msg.get("8"):
+            cols, ts_idx = eng.execute_columns_ns(what, *args, ranges=ranges)
+            reply = {"0": ticket, "1c": cols}
+            if ts_idx:
+                reply["1t"] = ts_idx
+        elif self.protocol == "bson" and msg.get("5"):
+            reply = {
+                "0": ticket,
+                "1p": eng.execute_packed_payload(what, *args, ranges=ranges),
+            }
+        else:
+            rows = eng.execute_rows(what, *args, ranges=ranges)
+            reply = {"0": ticket, "1": _jsonable_rows(rows)}
+        return self._enc(reply)
 
     def _engine_pid(self, wire_id: int) -> int:
         try:
@@ -611,14 +575,6 @@ class OpentickServer:
             self._sessions.discard(sess)
 
     # -- wire response cache -------------------------------------------
-    def _blob(self, payload: bytes):
-        """Codec-shape the cached reply bytes for key "2": BSON carries
-        real binary; JSON carries base64 text (exactly what Go's
-        json.Marshal does to []byte — clients mirror the decode)."""
-        if self.protocol == "bson":
-            return payload
-        return base64.b64encode(payload).decode("ascii")
-
     def _bump(self, key: str, n: int = 1) -> None:
         with self._stats_lock:
             self._stats[key] += n
@@ -642,9 +598,18 @@ class OpentickServer:
             return payload
 
     def _cache_put(self, key: tuple, payload: bytes) -> None:
-        ttl_cache_put(
-            self._resp_cache, self._cache_lock, key, payload, self.cache_expiration
-        )
+        """Store ``payload`` for ``cache_expiration`` seconds. Expired
+        entries are swept lazily: once the cache holds more than 4096
+        entries, each put first drops the expired ones, so distinct
+        queries cannot grow it without bound."""
+        with self._cache_lock:
+            now = time.time()
+            if len(self._resp_cache) > 4096:
+                for k in [
+                    k for k, (exp, _) in self._resp_cache.items() if now >= exp
+                ]:
+                    del self._resp_cache[k]
+            self._resp_cache[key] = (now + self.cache_expiration, payload)
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -265,7 +265,7 @@ def test_execute_split_coalesces_contiguous_ranges(kv):
     got = [r.t for r in df.collect()]
     assert got == [i * 1_000_000_000 for i in range(10, 190)]
     # rows path takes the same coalesced scan
-    rows = eng.execute_split_rows(sql, split_range(10, 189, 10))
+    rows = eng.execute_rows(sql, ranges=split_range(10, 189, 10))
     assert len(rows) == 180 and rows[0][1] == (10, 0) and rows[-1][1] == (189, 0)
 
 
@@ -303,36 +303,6 @@ def test_execute_split_gap_keeps_disjuncts(kv):
     assert " OR " not in plan3 and "Or(" not in plan3
     got3 = [r.t // 1_000_000_000 for r in df3.collect()]
     assert got3 == list(range(11, 31))
-
-
-def test_response_cache_ttl(spark, tmp_path):
-    """Stale reads within TTL (server_test.go:161-183): deleted rows keep
-    appearing until the cache entry expires."""
-    import time as _t
-
-    from opentick_spark.engine import Engine
-
-    # TTL must exceed the worst-case wall time of the intervening DELETE
-    # (a full Spark job, 2.6s+ observed on an ambient-elevated box — the
-    # r15 flake): 8s keeps the stale-read assert deterministic while the
-    # expiry loop still completes well inside its deadline.
-    eng = Engine(spark, str(tmp_path / "wh_ttl"), cache_ttl=8.0)
-    eng.execute("create database c")
-    eng.use("c")
-    eng.execute("create table t(sec int, tm timestamp, open double, primary key(sec, tm))")
-    eng.execute("insert into t(sec, tm, open) values(?, ?, ?)", 1, 10, 2.2)
-    eng.execute("insert into t(sec, tm, open) values(?, ?, ?)", 1, 11, 2.2)
-    assert len(eng.execute_rows("select * from t where sec=?", 1)) == 2
-    eng.execute("delete from t where sec=?", 1)
-    # stale within TTL
-    assert len(eng.execute_rows("select * from t where sec=?", 1)) == 2
-    deadline = _t.time() + 30
-    while _t.time() < deadline:
-        rows = eng.execute_rows("select * from t where sec=?", 1)
-        if len(rows) == 0:
-            break
-        _t.sleep(0.5)
-    assert len(rows) == 0
 
 
 def test_bucketed_compaction_prunes_and_preserves(kv, spark):
@@ -391,39 +361,6 @@ def test_execute_split_projection_without_pk(kv):
         "select x from kvp where k=9 and t>=? and t<=?", split_range(0, 49, 4)
     )
     assert len(df.collect()) == 50
-
-
-def test_cache_with_list_timestamp_args(spark, tmp_path):
-    from opentick_spark.engine import Engine
-
-    eng = Engine(spark, str(tmp_path / "wh_lc"), cache_ttl=60)
-    eng.execute("create database lc")
-    eng.use("lc")
-    eng.execute("create table t(k int, tm timestamp, x double, primary key(k, tm))")
-    eng.execute("insert into t(k, tm, x) values(?, ?, ?)", 1, [5, 7], 2.0)
-    rows = eng.execute_rows("select x from t where k=1 and tm=?", [5, 7])
-    assert rows == [(2.0,)]
-    assert eng.execute_rows("select x from t where k=1 and tm=?", [5, 7]) == rows
-
-
-def test_response_cache_sweeps_expired_entries(spark, tmp_path):
-    """Past 4096 entries, a cache write drops every expired entry (the
-    server reply cache's lazy sweep), so the cache cannot grow without
-    bound under distinct queries; live entries survive."""
-    import time
-
-    eng = Engine(spark, str(tmp_path / "wh_sw"), cache_ttl=60)
-    eng.execute("create database sw")
-    eng.use("sw")
-    eng.execute("create table t(k int, x double, primary key(k))")
-    eng.execute("insert into t(k, x) values(1, 2.0)")
-    past = time.time() - 1
-    for i in range(4097):
-        eng._response_cache[("select stale", (i,))] = (past, [])
-    live = ("select live", ())
-    eng._response_cache[live] = (time.time() + 60, [(0.0,)])
-    assert eng.execute_rows("select x from t where k=1") == [(2.0,)]
-    assert set(eng._response_cache) == {live, ("select x from t where k=1", ())}
 
 
 def test_pre_1970_timestamp_roundtrip(spark, tmp_path):
@@ -991,7 +928,7 @@ def test_maybe_compact_policy(engine, spark):
 
 
 def test_execute_split_rows_matches_dataframe_path(kv):
-    """r8 execute_split_rows: client-materialized SplitRange (Arrow
+    """Split ``execute_rows``: client-materialized SplitRange (Arrow
     collect + driver-side PK sort) returns exactly the sorted
     DataFrame path's rows, including boundary dedup of inclusive
     sub-ranges — timestamps in the (sec, nsec) client form."""
@@ -1004,14 +941,14 @@ def test_execute_split_rows_matches_dataframe_path(kv):
     eng.batch_insert(pid, [(9, i, float(i)) for i in range(100)])
     ranges = [(0, 4), (4, 8)]  # share boundary t=4
     sql = "select k, t, x from kvr where k=9 and t>=? and t<=?"
-    rows = eng.execute_split_rows(sql, ranges)
+    rows = eng.execute_rows(sql, ranges=ranges)
     assert len(rows) == 9  # 0..8 inclusive, boundary deduped
     assert [r[2] for r in rows] == [float(i) for i in range(9)]
     # int timestamp literals are SECONDS → (sec, nsec) client form
     assert all(r[1] == (i, 0) for i, r in enumerate(rows))
     # x-only projection (PK carried internally, dropped at the end)
-    xs = eng.execute_split_rows(
-        "select x from kvr where k=9 and t>=? and t<=?", ranges
+    xs = eng.execute_rows(
+        "select x from kvr where k=9 and t>=? and t<=?", ranges=ranges
     )
     assert [r[0] for r in xs] == [float(i) for i in range(9)]
 
@@ -1445,9 +1382,9 @@ def test_execute_split_varying_lead_equality_no_bucket_misprune(kv):
     st.compact(spark, hash_buckets=6)
     # last two placeholders bind (k, t): one point per branch, three
     # branches with three different lead keys
-    rows = kv.execute_split_rows(
+    rows = kv.execute_rows(
         "select k, v from vs where k=? and t=?",
-        [(2, 1), (5, 1), (9, 1)],
+        ranges=[(2, 1), (5, 1), (9, 1)],
     )
     assert sorted(rows) == [(2, 2.0), (5, 5.0), (9, 9.0)]
     df = kv.execute_split(

@@ -318,9 +318,9 @@ def test_execute_split_matches_branch_union(spark, tmp_path, seed):
             (rng.randint(-5, 85), rng.randint(-5, 85))
             for _ in range(rng.randint(1, 5))
         ]
-        rows = eng.execute_split_rows(
+        rows = eng.execute_rows(
             f"select k, t, v from s where k=9 and t{op1}? and t{op2}?",
-            ranges,
+            ranges=ranges,
         )
         got = [r[1][0] for r in rows]  # (sec, nsec) pairs, nsec 0
         want = sorted(
@@ -347,8 +347,9 @@ def test_execute_split_float_ranges_match_union(spark, tmp_path, seed):
     eng.batch_insert(pid, [(k, k * 2) for k in ks])
 
     # reference-style contiguous float split: full coverage, coalesced
-    rows = eng.execute_split_rows(
-        "select k from f where k>=? and k<=?", split_range(0.0, 19.75, 7)
+    rows = eng.execute_rows(
+        "select k from f where k>=? and k<=?",
+        ranges=split_range(0.0, 19.75, 7),
     )
     assert [r[0] for r in rows] == ks
     # random inclusive float ranges incl. reversed/overlapping/disjoint
@@ -359,8 +360,8 @@ def test_execute_split_float_ranges_match_union(spark, tmp_path, seed):
         ]
         got = [
             r[0]
-            for r in eng.execute_split_rows(
-                "select k from f where k>=? and k<=?", ranges
+            for r in eng.execute_rows(
+                "select k from f where k>=? and k<=?", ranges=ranges
             )
         ]
         want = sorted(

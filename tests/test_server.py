@@ -1020,3 +1020,70 @@ def test_recv_loop_survives_timeout_reply_races(conn):
     # the connection is still healthy: recv thread alive, sync call works
     assert conn._recv_thread.is_alive()
     assert conn.execute("select * from t where a=?", (5,)) == [(5,)]
+
+
+def test_json_reference_client_gets_row_reply(server, conn):
+    """A reference json client sends neither "5" nor "8": its select
+    replies carry the reference rows in "1" (timestamps as [sec, nsec]),
+    never the columnar "1c" that only an "8" client negotiates."""
+    import socket as _socket
+
+    from opentick_spark.server import _dumps, _loads, recv_frame, send_frame
+
+    _mkdb(conn, "wref")
+    conn.execute(
+        "create table t(a int, tm timestamp, px double, primary key(a, tm))"
+    )
+    conn.execute("insert into t(a, tm, px) values(1, 5, 2.5)")
+    s = _socket.create_connection(("127.0.0.1", server.port))
+    s.settimeout(30)
+
+    def exchange(msg):
+        send_frame(s, _dumps(msg))
+        while True:
+            body = recv_frame(s)
+            assert body is not None
+            if body not in (b"H", b""):
+                return _loads(body)
+
+    try:
+        assert exchange({"0": 1, "1": "use", "2": "wref"})["1"] is None
+        run = exchange(
+            {"0": 2, "1": "run", "2": "select * from t where a=1", "3": []}
+        )
+        assert "1c" not in run and "1t" not in run
+        assert run["1"] == [[1, [5, 0], 2.5]]
+        split = exchange(
+            {
+                "0": 3, "1": "split", "3": [], "7": [[0, 10]],
+                "2": "select * from t where a=1 and tm>=? and tm<=?",
+            }
+        )
+        assert "1c" not in split and split["1"] == [[1, [5, 0], 2.5]]
+    finally:
+        s.close()
+
+
+def test_wire_collect_failure_is_one_error_reply(conn, spark, monkeypatch):
+    """A select whose Arrow collect fails answers with an error reply
+    and runs exactly once — no fallback plans and runs it again — and
+    the session keeps serving queries."""
+    _mkdb(conn, "wfail")
+    conn.execute("create table t(a int, v double, primary key(a))")
+    conn.execute("insert into t(a, v) values(1, 2.5)")
+    df_cls = type(spark.range(0))
+    orig = df_cls.toArrow
+    calls = {"n": 0}
+
+    def fail_once(self):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError("injected collect failure")
+        return orig(self)
+
+    monkeypatch.setattr(df_cls, "toArrow", fail_once)
+    with pytest.raises(OpentickError, match="injected collect failure"):
+        conn.execute("select v from t where a=1")
+    assert calls["n"] == 1
+    assert conn.execute("select v from t where a=1") == [(2.5,)]
+    assert calls["n"] == 2

@@ -30,24 +30,18 @@ def cache_server(spark, tmp_path_factory):
 
 
 def _count_engine_calls(monkeypatch):
-    # the json protocol serves selects via execute_columns (columnar
-    # fast path), bson via execute_rows — count either
+    # every result shape ("1", "1c"+"1t", "1p") is built over the one
+    # producer, so counting it counts every select the engine runs
     from opentick_spark.engine import Engine
 
     calls = {"n": 0}
-    orig_rows = Engine.execute_rows
-    orig_cols = Engine.execute_columns
+    orig = Engine._result_table
 
-    def counted_rows(self, sql, *args):
+    def counted(self, *a, **kw):
         calls["n"] += 1
-        return orig_rows(self, sql, *args)
+        return orig(self, *a, **kw)
 
-    def counted_cols(self, sql, *args):
-        calls["n"] += 1
-        return orig_cols(self, sql, *args)
-
-    monkeypatch.setattr(Engine, "execute_rows", counted_rows)
-    monkeypatch.setattr(Engine, "execute_columns", counted_cols)
+    monkeypatch.setattr(Engine, "_result_table", counted)
     return calls
 
 
@@ -71,14 +65,16 @@ def test_wire_cache_stale_hits_skip_engine(cache_server, monkeypatch):
             (1, 2, [6, 0], 2.2),
         )
         # parameterized select auto-prepares → cache-capable
+        n_before = calls["n"]
         assert len(c.execute("select * from test where sec=?", (1,))) == 2
-        n_after_first = calls["n"]
+        assert calls["n"] == n_before + 1  # the miss ran the engine
         assert cache_server._resp_cache  # reply bytes were stored
         c.execute("delete from test where sec=?", (1,))
+        n_after_delete = calls["n"]
         # stale within TTL: deleted rows still appear AND the engine is
         # not re-invoked for the cached select
         assert len(c.execute("select * from test where sec=?", (1,))) == 2
-        assert calls["n"] == n_after_first + 1  # only the delete ran
+        assert calls["n"] == n_after_delete  # the hit added no call
         # a no-cache execute bypasses and sees the truth immediately
         assert c.execute("select * from test where sec=?", (1,), cache=False) == []
         # TTL expiry → fresh execution: rewind every stored deadline to
@@ -104,6 +100,19 @@ def test_wire_cache_keyed_by_args(cache_server):
         # different args must not collide with the cached (a=1) reply
         assert c.execute("select v from t where a=?", (2,)) == [(20,)]
         assert c.execute("select v from t where a=?", (1,)) == [(10,)]
+        # a [sec, nsec] timestamp arg is a list: it must key the cache
+        # too, and a repeat must be served from it
+        c.execute(
+            "create table ts(a int, tm timestamp, v double, primary key(a, tm))"
+        )
+        c.execute("insert into ts(a, tm, v) values(1, ?, 2.0)", ([5, 7],))
+        c.execute("insert into ts(a, tm, v) values(1, ?, 3.0)", ([6, 0],))
+        sel = "select v from ts where a=1 and tm=?"
+        hits = cache_server.server_stats()["n_cache_hits"]
+        assert c.execute(sel, ([5, 7],)) == [(2.0,)]
+        assert c.execute(sel, ([6, 0],)) == [(3.0,)]
+        assert c.execute(sel, ([5, 7],)) == [(2.0,)]
+        assert cache_server.server_stats()["n_cache_hits"] == hits + 1
     finally:
         c.close()
 
@@ -278,3 +287,22 @@ def test_wire_cache_isolates_ns_timestamp_shape(cache_server):
         assert c.execute("select * from t where a=?", (1,)) == want
     finally:
         c.close()
+
+
+def test_response_cache_sweeps_expired_entries(spark, tmp_path):
+    """Past 4096 entries, a cache write drops every expired entry (lazy
+    sweep), so the reply cache cannot grow without bound under distinct
+    queries; live entries survive."""
+    import time
+
+    from opentick_spark.server import OpentickServer
+
+    srv = OpentickServer(spark, str(tmp_path / "wh_sw"), cache_expiration=60.0)
+    past = time.time() - 1
+    for i in range(4097):
+        srv._resp_cache[("select stale", (i,))] = (past, b"")
+    live = ("select live", ())
+    srv._resp_cache[live] = (time.time() + 60, b"live")
+    srv._cache_put(("select x", ()), b"x")
+    assert set(srv._resp_cache) == {live, ("select x", ())}
+    assert srv._cache_get(("select x", ())) == b"x"
