@@ -459,8 +459,9 @@ class TCPConnection:
     """Wire client for :class:`opentick_spark.server.OpentickServer` —
     the reference client's transport behavior (bindings/python/opentick/
     client.py: recv thread, ticketed futures, heartbeat tolerance
-    client.py:364-387, auto-reconnect) over the length-prefixed JSON
-    protocol. API mirrors :class:`Connection` where transport-meaningful.
+    client.py:364-387, auto-reconnect) over the length-prefixed wire, in
+    either codec (``protocol="json"`` or ``"bson"``). API mirrors
+    :class:`Connection` where transport-meaningful.
     """
 
     def __init__(
@@ -1054,29 +1055,22 @@ class TCPConnection:
         idempotency_key: str | None,
     ) -> CFuture:
         pid = self.prepare(sql)
-        if self._protocol == "bson" and args_array:
+        if (
+            self._protocol == "bson"
+            and args_array
+            and all(len(a) == len(args_array[0]) for a in args_array)
+        ):
             # write-side packed columns (key "3p", wire_packed.py): one
             # struct-packed blob per arg column instead of per-cell BSON
-            # — the ingest mirror of the "1p" reply path
+            # — the ingest mirror of the "1p" reply path. A ragged batch
+            # cannot be columns (zip(*rows) would truncate it), so it
+            # goes as "3" rows and gets the server's arity error.
             from opentick_spark.wire_packed import pack_columns
 
-            # zip(*rows) silently truncates ragged rows to the shortest —
-            # a malformed batch would insert TRUNCATED data. The row path
-            # ships rows verbatim and lets the server raise the arity
-            # error; match that contract by validating before packing.
-            width = len(args_array[0])
-            for i, row in enumerate(args_array):
-                if len(row) != width:
-                    raise Error(
-                        f"batch_insert: row {i} has {len(row)} args, "
-                        f"expected {width}"
-                    )
             cols = [list(c) for c in zip(*args_array)]
             req = {"1": "batch", "2": pid, "3p": pack_columns(cols)}
-            if idempotency_key is not None:
-                req["6"] = idempotency_key
-            return self._request(req)
-        req = {"1": "batch", "2": pid, "3": [list(a) for a in args_array]}
+        else:
+            req = {"1": "batch", "2": pid, "3": [list(a) for a in args_array]}
         if idempotency_key is not None:
             req["6"] = idempotency_key
         return self._request(req)

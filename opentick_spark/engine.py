@@ -75,41 +75,14 @@ from opentick_spark.users import (
 )
 
 
-def _bulk_bind_columns(stmt, rows_args: list[tuple]) -> dict | None:
-    """Columnar bulk bind for the batch-ingest hot path (r11): returns
-    ``{logical_name: [engine-native values]}`` when every column passes
-    a strict type screen that makes the bulk transform provably
-    identical to per-row ``validate_value``, else None (caller falls
-    back to the per-row loop, which owns the exact reference error
-    strings and first-bad-row ordering). Screens use ``type(x) is T``
-    — the ``is`` comparison rejects bool (a subclass of int) exactly
-    like validate_value's explicit isinstance(value, bool) guards."""
-    n = stmt.n_placeholders
-    if any(len(a) != n for a in rows_args):
-        return None
-    return _screen_columns(stmt, lambda i: [a[i] for a in rows_args])
-
-
-def _screen_columns(stmt, col_of) -> dict | None:
-    """Shared per-placeholder screen loop (r11): ``col_of(i)`` yields
-    placeholder ``i``'s value column. One implementation serves both the
-    row-gathering path and the wire's already-columnar '3p' path so the
-    screen contract can never diverge between them."""
-    out: dict[str, list] = {}
-    for col, v in zip(stmt.cols, stmt.values):
-        if not isinstance(v, Placeholder):
-            return None  # literal in VALUES: keep the per-row path
-        vals = _screen_coerce(col.type, col_of(v.index))
-        if vals is None:
-            return None
-        out[col.name] = vals
-    return out
-
-
 def _screen_coerce(t: str, vals: list) -> list | None:
-    """One column's strict type screen + bulk coercion (see
-    ``_bulk_bind_columns``). Returns the engine-native list, or None
-    when any element needs the per-row path."""
+    """One placeholder column's strict type screen + bulk coercion: the
+    engine-native list, value-identical to ``validate_value`` per cell,
+    or None when any cell needs ``validate_value`` itself (a rejected
+    column, or a form the screen does not take). Screens use
+    ``type(x) is T`` — the ``is`` comparison rejects bool (a subclass of
+    int) exactly like validate_value's explicit isinstance(value, bool)
+    guards."""
     if t in ("tinyint", "smallint", "int", "bigint"):
         if not all(type(x) is int for x in vals):
             return None
@@ -122,11 +95,14 @@ def _screen_coerce(t: str, vals: list) -> list | None:
         if all(type(x) is float for x in vals):
             return vals
         if all(type(x) in (int, float) for x in vals):
-            return [float(x) for x in vals]
+            try:
+                return [float(x) for x in vals]
+            except OverflowError:  # an int beyond double range
+                return None
         return None
     if t == "timestamp":
         # int = epoch SECONDS (query.go:754-778); other accepted forms
-        # ([sec,nsec], RFC3339, datetime, float) stay per-row
+        # ([sec,nsec], RFC3339, datetime, float) go cell by cell
         if not all(type(x) is int for x in vals):
             return None
         return [x * NS_PER_SEC for x in vals]
@@ -138,8 +114,31 @@ def _screen_coerce(t: str, vals: list) -> list | None:
         if not all(type(x) is str for x in vals):
             return None
         return vals
-    return None  # unknown type: per-row path raises its error
+    return None  # unknown type: validate_value raises its error
 
+
+def _bind_column(col, vals: list):
+    """``(values, None)`` for one placeholder column, or ``(None, (row,
+    error))`` naming its first cell ``validate_value`` rejects, with the
+    reference's error string. The screen takes whole columns; only a
+    column it rejects is validated cell by cell."""
+    out = _screen_coerce(col.type, vals)
+    if out is not None:
+        return out, None
+    out = []
+    for r, a in enumerate(vals):
+        try:
+            out.append(validate_value(a, col.type, col.name))
+        except (OpentickError, ValueError, OverflowError) as e:
+            # float()/floor() errors (NaN/inf timestamps, ints beyond
+            # double range) keep their row-major place too
+            if isinstance(e, OpentickError):
+                e = OpentickError(
+                    f'Invalid {type(a).__name__} value ({a}) for '
+                    f'"{col.name}" of {col.type}'
+                )
+            return None, (r, e)
+    return out, None
 
 
 def _render_num_sql(v) -> "str | None":
@@ -352,11 +351,7 @@ class Engine:
         """Run a statement (SQL text or a prepared id). SELECT returns a
         DataFrame; DDL/DML return None."""
         if isinstance(sql, int):
-            try:
-                _, resolved = self._prepared[sql]
-            except KeyError:
-                raise OpentickError(f"Unknown prepared id {sql}") from None
-            return self._run_resolved(resolved, args)
+            return self._run_resolved(self._prepared_statement(sql), args)
         # EXPLAIN <select> (extension): the physical plan as rows, so
         # pushdown/broadcast shapes are inspectable through the server
         # and any client — the 100 TB debugging surface
@@ -372,7 +367,16 @@ class Engine:
             return self.spark.createDataFrame(
                 [(line,) for line in text.splitlines()], "plan_line string"
             )
-        node = parse(sql)
+        return self._execute_node(parse(sql), args)
+
+    def _prepared_statement(self, pid: int):
+        try:
+            return self._prepared[pid][1]
+        except KeyError:
+            raise OpentickError(f"Unknown prepared id {pid}") from None
+
+    def _execute_node(self, node, args: tuple) -> DataFrame | None:
+        """``execute`` of an already parsed statement."""
         # DDL dispatches straight to the catalog (Execute, query.go:44-119);
         # perm gates mirror query.go:51-54 (db DDL: admin), 68-71 (create
         # table: db write), 99-102 (drop table: table write)
@@ -475,7 +479,7 @@ class Engine:
         if not ranges:
             raise OpentickError("execute_split requires at least one range")
         pid = self.prepare(sql) if isinstance(sql, str) else sql
-        resolved = self._prepared[pid][1]
+        resolved = self._prepared_statement(pid)
         if not isinstance(resolved, ResolvedSelect):
             raise OpentickError("execute_split requires a select")
         self._check_args(resolved.n_placeholders, (*args, None, None))
@@ -655,9 +659,8 @@ class Engine:
         lines. A failing collect raises: nothing is planned or run a
         second time."""
         if ranges is None:
-            resolved = self._resolved_select_of(sql)
+            resolved, df = self._select_or_run(sql, args)
             if resolved is None:
-                df = self.execute(sql, *args)
                 if df is None:
                     return None, []
                 return df.toArrow(), [(n, "text") for n in df.columns]
@@ -674,20 +677,22 @@ class Engine:
             tbl = tbl.sort_by([(k, order) for k in resolved.schema.pk_names])
         return tbl, [(c.name, c.type) for c in resolved.cols]
 
-    def _resolved_select_of(self, sql: str | int) -> ResolvedSelect | None:
-        """The ResolvedSelect when ``sql`` is a (prepared) SELECT, else
-        None (the caller runs it through ``execute``). Raises the
-        standard unknown-pid error for dangling prepared ids."""
+    def _select_or_run(self, sql: str | int, args: tuple):
+        """``(resolved, None)`` when ``sql`` is a (prepared) SELECT, else
+        ``(None, result)`` after running it the way ``execute`` does —
+        text SQL is parsed once either way. Raises the standard
+        unknown-pid error for dangling prepared ids."""
         if isinstance(sql, int):
-            try:
-                resolved = self._prepared[sql][1]
-            except KeyError:
-                raise OpentickError(f"Unknown prepared id {sql}") from None
-            return resolved if isinstance(resolved, ResolvedSelect) else None
+            stmt = self._prepared_statement(sql)
+            if isinstance(stmt, ResolvedSelect):
+                return stmt, None
+            return None, self._run_resolved(stmt, args)
         if sql.lstrip().lower().startswith("explain "):
-            return None
+            return None, self.execute(sql, *args)
         node = parse(sql)
-        return self._resolve(node) if isinstance(node, ast.Select) else None
+        if isinstance(node, ast.Select):
+            return self._resolve(node), None
+        return None, self._execute_node(node, args)
 
     def execute_rows(
         self, sql: str | int, *args: Any, ranges: list[tuple] | None = None
@@ -740,7 +745,7 @@ class Engine:
             return self._run_select(resolved, args)
         if isinstance(resolved, ResolvedInsert):
             self._check_args(resolved.n_placeholders, args)
-            self._insert_rows(resolved, [args])
+            self._insert(resolved, [[a] for a in args], 1)
             return None
         if isinstance(resolved, ResolvedDelete):
             self._check_args(resolved.n_placeholders, args)
@@ -830,63 +835,48 @@ class Engine:
         return None
 
     # ------------------------------------------------------------------
-    def _insert_rows(
+    def _insert(
         self,
         stmt: ResolvedInsert,
-        rows_args: list[tuple],
+        arg_cols: list[list],
+        n: int,
         applied_marker: str | None = None,
+        arity: int | None = None,
     ) -> None:
-        """Bind each arg tuple, validate/coerce, and append all rows as ONE
-        atomic commit (BatchInsert, query.go:294-307). ``applied_marker``
-        makes the commit idempotent: an already-applied marker skips the
-        append entirely (see ``TableStore.has_applied_marker``). The
-        marker check runs BEFORE binding/validation so a retry of an
-        already-published batch is an unconditional no-op even if the
-        schema evolved between attempts (e.g. ALTER TABLE DROP COLUMN
-        removed a bound column, which would otherwise raise).
+        """Bind ``n`` rows, given as one list per placeholder, and append
+        them as ONE atomic commit (BatchInsert, query.go:294-307); every
+        dialect insert ends here.
 
-        Large all-placeholder batches take a COLUMNAR bulk-bind fast
-        path (r11): per-column C-speed type screens + bulk coercion
-        replace rows×cols ``validate_value`` calls, feeding
-        ``append_columns`` directly (no per-row dict round trip). The
-        fast path is ONLY taken when it is provably value-identical to
-        the per-row path (strict type()-matched columns, range-checked
-        clamps, int-seconds timestamps); ANY deviation — mixed forms,
-        a literal in the VALUES list, a ragged or invalid row — falls
-        back to the legacy loop so validation errors keep their exact
-        reference strings and ordering."""
+        ``applied_marker`` makes the commit idempotent (see
+        ``TableStore.has_applied_marker``). Its check runs BEFORE
+        binding, so a retry of an already-published batch is a no-op
+        even if the schema evolved between attempts (e.g. ALTER TABLE
+        DROP COLUMN removed a bound column, which would otherwise raise).
+
+        The error raised is the one a row-major walk hits first: the
+        smallest (row, insert-column position) among the columns' first
+        bad cells. ``arity`` is the argument count of a malformed row
+        right after the ``n`` given; its arity error is raised only when
+        those rows bind cleanly."""
         st = self.store(stmt.schema.db, stmt.schema.name)
         if applied_marker is not None and st.has_applied_marker(applied_marker):
             return  # retried batch: the original commit already published
-        cols = (
-            _bulk_bind_columns(stmt, rows_args)
-            if len(rows_args) >= 64
-            else None
-        )
-        if cols is not None:
-            st.append_columns(cols, applied_marker=applied_marker)
-        else:
-            out = []
-            for args in rows_args:
-                if stmt.n_placeholders != len(args):
-                    raise OpentickError(
-                        f"Expected {stmt.n_placeholders} arguments, "
-                        f"got {len(args)}"
-                    )
-                row = {}
-                for col, v in zip(stmt.cols, stmt.values):
-                    if isinstance(v, Placeholder):
-                        try:
-                            v = validate_value(args[v.index], col.type, col.name)
-                        except OpentickError:
-                            a = args[v.index]
-                            raise OpentickError(
-                                f'Invalid {type(a).__name__} value ({a}) for '
-                                f'"{col.name}" of {col.type}'
-                            ) from None
-                    row[col.name] = v
-                out.append(row)
-            st.append_rows(out, applied_marker=applied_marker)
+        cols: dict[str, list] = {}
+        errors = []
+        for pos, (col, v) in enumerate(zip(stmt.cols, stmt.values)):
+            if not isinstance(v, Placeholder):
+                cols[col.name] = [v] * n  # literal: validated at resolve
+                continue
+            cols[col.name], err = _bind_column(col, arg_cols[v.index])
+            if err is not None:
+                errors.append((err[0], pos, err[1]))
+        if errors:
+            raise min(errors, key=lambda e: e[:2])[2]
+        if arity is not None:
+            raise OpentickError(
+                f"Expected {stmt.n_placeholders} arguments, got {arity}"
+            )
+        st.append_columns(cols, applied_marker=applied_marker)
         self._maybe_auto_compact(st)
 
     def _maybe_auto_compact(self, st) -> None:
@@ -932,12 +922,18 @@ class Engine:
         retry — size the cap above the worst-case number of batches a
         client might ever replay (retries happen within seconds; the
         horizon exists so meta stays O(1))."""
-        if isinstance(sql_or_id, str):
-            sql_or_id = self.prepare(sql_or_id)
-        _, resolved = self._prepared[sql_or_id]
-        if not isinstance(resolved, ResolvedInsert):
-            raise OpentickError("Batch requires a prepared insert")
-        self._insert_rows(resolved, rows_args, applied_marker=idempotency_key)
+        stmt = self._prepared_insert(sql_or_id)
+        width = stmt.n_placeholders
+        bad = next(
+            (i for i, a in enumerate(rows_args) if len(a) != width),
+            len(rows_args),
+        )
+        rows = rows_args[:bad]
+        arg_cols = (
+            [list(c) for c in zip(*rows)] if rows else [[] for _ in range(width)]
+        )
+        arity = len(rows_args[bad]) if bad < len(rows_args) else None
+        self._insert(stmt, arg_cols, bad, idempotency_key, arity)
 
     def batch_insert_columns(
         self,
@@ -947,18 +943,11 @@ class Engine:
     ) -> None:
         """Columnar batch insert (r11): ``arg_cols`` holds one list per
         PLACEHOLDER (in placeholder order) — the shape the wire's
-        packed "3p" payload already decodes to, so the server can feed
-        it straight through the bulk bind without a cols→rows→cols
-        double transpose. Semantics are identical to ``batch_insert``
-        of the transposed rows; any column the screen rejects falls
-        back to exactly that (transpose + per-row loop, exact reference
-        errors)."""
-        if isinstance(sql_or_id, str):
-            sql_or_id = self.prepare(sql_or_id)
-        _, resolved = self._prepared[sql_or_id]
-        if not isinstance(resolved, ResolvedInsert):
-            raise OpentickError("Batch requires a prepared insert")
-        stmt = resolved
+        packed "3p" payload already decodes to, so the server feeds it
+        straight to the bind without a cols→rows→cols double transpose.
+        Semantics, errors included, are identical to ``batch_insert`` of
+        the transposed rows."""
+        stmt = self._prepared_insert(sql_or_id)
         if not arg_cols:
             return  # empty batch: nothing to commit (matches rows path)
         # ragged check BEFORE the empty-batch return: an empty FIRST
@@ -969,22 +958,18 @@ class Engine:
             raise OpentickError("batch_insert_columns: ragged arg columns")
         if n == 0:
             return  # rectangular empty batch
-        st = self.store(stmt.schema.db, stmt.schema.name)
-        if idempotency_key is not None and st.has_applied_marker(
-            idempotency_key
-        ):
-            return
-        out = (
-            _screen_columns(stmt, lambda i: arg_cols[i])
-            if stmt.n_placeholders == len(arg_cols)
-            else None  # arity mismatch: per-row path owns the error
-        )
-        if out is not None:
-            st.append_columns(out, applied_marker=idempotency_key)
-            self._maybe_auto_compact(st)
-            return
-        rows = [tuple(r) for r in zip(*arg_cols)]
-        self._insert_rows(stmt, rows, applied_marker=idempotency_key)
+        if len(arg_cols) != stmt.n_placeholders:  # row 0 is malformed
+            empty = [[] for _ in range(stmt.n_placeholders)]
+            return self._insert(stmt, empty, 0, idempotency_key, len(arg_cols))
+        self._insert(stmt, arg_cols, n, idempotency_key)
+
+    def _prepared_insert(self, sql_or_id: str | int) -> ResolvedInsert:
+        if isinstance(sql_or_id, str):
+            sql_or_id = self.prepare(sql_or_id)
+        stmt = self._prepared_statement(sql_or_id)
+        if not isinstance(stmt, ResolvedInsert):
+            raise OpentickError("Batch requires a prepared insert")
+        return stmt
 
     # ------------------------------------------------------------------
     # meta surface (server.go:440-499)

@@ -35,30 +35,6 @@ from opentick_spark.operators.text import normalize_text, ws_tokens
 _MERSENNE = (1 << 31) - 1
 
 
-def word_ngrams(col: Column, n: int = 2) -> Column:
-    """Distinct word n-gram shingles of the normalized text (n>=1), as a
-    single Column expression.
-
-    WARNING — hot-path trap: referencing ``toks`` n times inside the
-    transform lambda re-evaluates the whole normalize+tokenize chain per
-    shingle position (lambdas are codegen-fallback, no CSE). Fine for
-    tests and one-off use; bulk operators must use ``exploded_shingles``.
-    """
-    toks = ws_tokens(normalize_text(col))
-    if n == 1:
-        return F.array_distinct(toks)
-    # element_at is 1-indexed; explicit step=1 so size<n yields [] (a
-    # bare sequence(1, 0) would count DOWN and hit element_at(toks, 0))
-    starts = F.when(
-        F.size(toks) >= n,
-        F.sequence(F.lit(1), F.size(toks) - (n - 1), F.lit(1)),
-    ).otherwise(F.array().cast("array<int>"))
-    shingle = lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, i + j) for j in range(n)]
-    )
-    return F.array_distinct(F.transform(starts, shingle))
-
-
 def _spread_by_id(df: DataFrame, id_col: str) -> DataFrame:
     """Hash-repartition a narrow input on the doc id before CPU-heavy
     per-shingle work. A small/compacted table can arrive as 1-2 parquet

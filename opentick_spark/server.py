@@ -2,10 +2,10 @@
 re-expressed over the in-process Spark engine.
 
 Protocol (C9, server.go:117-173, 186-207, 288-291): 4-byte little-endian
-length prefix + message body. The reference speaks BSON by default with a
-``protocol=json`` switch; this environment ships no BSON codec, so the
-JSON variant is implemented and the framing layer is codec-agnostic (a
-BSON codec drops in by swapping ``_dumps``/``_loads``). Message shape
+length prefix + message body. Both of the reference's codecs ship: BSON
+(``wire_bson``, the reference default) and JSON, chosen per server with
+``protocol=`` and switched per connection by a ``protocol=json`` frame;
+the framing layer is codec-agnostic (``_codecs``). Message shape
 (server.go:288-331):
 
     request : {"0": ticket, "1": cmd, "2": sql-or-prepared-id,
@@ -296,7 +296,7 @@ class _Session:
                     # packed-columnar argsArray from our client
                     # (wire_packed.py key "3p"); reference clients send
                     # plain row arrays in "3". Stays COLUMNAR end-to-end
-                    # (r11): the payload feeds the engine's bulk bind
+                    # (r11): the payload feeds the engine's columnar bind
                     # directly — no cols→rows→cols double transpose.
                     self.engine.batch_insert_columns(
                         pid,
@@ -429,7 +429,8 @@ class _Session:
 
 
 class OpentickServer:
-    """Threaded length-prefixed-JSON TCP server over one SparkSession."""
+    """Threaded length-prefixed TCP server (BSON or JSON bodies, see
+    ``_codecs``) over one SparkSession."""
 
     def __init__(
         self,

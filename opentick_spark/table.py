@@ -32,7 +32,7 @@ import json
 import os
 import threading
 import uuid
-from typing import Any, Iterable
+from typing import Any
 
 try:
     import fcntl
@@ -391,7 +391,7 @@ class TableStore:
             # replayed batch re-apply (r10 high-review fix)
             full = os.path.join(self.log_path, e)
             if e.endswith(".parquet"):
-                # file commit (append_rows): marker lives in the
+                # file commit (append_columns): marker lives in the
                 # parquet footer metadata — one footer read, memoized
                 try:
                     md = pq.read_schema(full).metadata or {}
@@ -496,19 +496,19 @@ class TableStore:
 
     # ------------------------------------------------------------------
     # write path (Arrow — storage-level, not query compute)
-    def append_rows(
+    def append_columns(
         self,
-        rows: Iterable[dict[str, Any]],
+        cols: dict[str, list],
         delete: bool = False,
         applied_marker: str | None = None,
     ) -> int:
-        """Atomically append one commit containing ``rows``.
-
-        Each row is a dict keyed by *logical* column names holding
-        engine-native values (timestamps already epoch-nanos). Missing value
-        columns are stored as NULL (sparse rows, query.go:150-152). Within a
-        commit, later rows win on PK collision (sequential tr.Set order) —
-        guaranteed by a per-row sub-sequence.
+        """Atomically append one commit of ``cols``: one list per
+        LOGICAL column name, holding engine-native, ALREADY-VALIDATED
+        values (timestamps already epoch-nanos) — what the engine's
+        insert bind produces. Missing value columns are stored as NULL
+        (sparse rows, query.go:150-152). Within a commit, later rows win
+        on PK collision (sequential tr.Set order) — guaranteed by a
+        per-row sub-sequence.
 
         ``applied_marker`` (r10): idempotency token recorded in the
         commit file's parquet FOOTER metadata — atomic with the data
@@ -518,29 +518,6 @@ class TableStore:
         deduplicated with ``has_applied_marker`` exactly like a
         streaming micro-batch.
         """
-        rows = list(rows)
-        if not rows:
-            return 0
-        schema = self.schema
-        logical_to_physical = {c.name: c.physical for c in schema.columns}
-        cols: dict[str, list] = {c.physical: [] for c in schema.columns}
-        for r in rows:
-            for lname, phys in logical_to_physical.items():
-                cols[phys].append(r.get(lname))
-        return self._append_column_data(cols, len(rows), delete, applied_marker)
-
-    def append_columns(
-        self,
-        cols: dict[str, list],
-        delete: bool = False,
-        applied_marker: str | None = None,
-    ) -> int:
-        """Columnar twin of ``append_rows`` (r11): one list per LOGICAL
-        column of engine-native, ALREADY-VALIDATED values (the engine's
-        bulk bind produces exactly this). Missing value columns store
-        NULL like sparse rows. Same commit/marker semantics — this just
-        skips the per-row dict round trip that costs O(rows×cols)
-        Python on the wire-ingest hot path."""
         if not cols:
             return 0
         n = len(next(iter(cols.values())))
@@ -548,19 +525,6 @@ class TableStore:
             return 0
         if any(len(v) != n for v in cols.values()):
             raise ValueError("append_columns: ragged column lists")
-        schema = self.schema
-        phys = {
-            c.physical: cols.get(c.name, [None] * n) for c in schema.columns
-        }
-        return self._append_column_data(phys, n, delete, applied_marker)
-
-    def _append_column_data(
-        self,
-        cols: dict[str, list],
-        n: int,
-        delete: bool,
-        applied_marker: str | None,
-    ) -> int:
         schema = self.schema
         seq = self._next_seq()
         # per-row sub-sequence so intra-batch PK collisions resolve
@@ -570,7 +534,8 @@ class TableStore:
         arrays = []
         arrow = self.arrow_schema()
         for c in schema.columns:
-            arrays.append(pa.array(cols[c.physical], type=_ARROW_TYPE[c.type]))
+            vals = cols.get(c.name, [None] * n)
+            arrays.append(pa.array(vals, type=_ARROW_TYPE[c.type]))
         arrays.append(pa.array([seq] * n, type=pa.int64()))
         arrays.append(pa.array(list(range(n)), type=pa.int64()))
         arrays.append(pa.array([delete] * n, type=pa.bool_()))
@@ -665,7 +630,7 @@ class TableStore:
         with open(os.path.join(tmp_dir, "_applied_marker.json"), "w") as f:
             json.dump({"marker": applied_marker}, f)
         # duplicate check + publish as ONE critical section (see
-        # append_rows): the Spark write stays outside the lock; a loser
+        # append_columns): the Spark write stays outside the lock; a loser
         # abandons its staged dir and its seq becomes a harmless gap
         with self._lock, self._file_lock():
             if self.has_applied_marker(applied_marker):

@@ -130,15 +130,13 @@ class UserRegistry:
     def save(self, user: User) -> None:
         """Upsert one user row (UpdatePasswd shape, user.go:102-114)."""
         self._ensure_table()
-        self.engine.store(USER_DB, USER_TABLE).append_rows(
-            [
-                {
-                    "name": user.name,
-                    "password": user.password,
-                    "is_admin": user.is_admin,
-                    "perm": perm_to_str(user.perm),
-                }
-            ]
+        self.engine.store(USER_DB, USER_TABLE).append_columns(
+            {
+                "name": [user.name],
+                "password": [user.password],
+                "is_admin": [user.is_admin],
+                "perm": [perm_to_str(user.perm)],
+            }
         )
         self.users[user.name] = user
 

@@ -1,5 +1,5 @@
 """Subprocess worker for the applied-marker visibility drill: appends
-marker-stamped file commits through append_rows (pure Arrow — no Spark)
+marker-stamped file commits through append_columns (pure Arrow — no Spark)
 and CONFIRMS each marker into a shared file only after the publish
 returned, so the poller only ever checks markers whose commit is
 durable."""
@@ -20,10 +20,8 @@ def main() -> None:
     store = TableStore(Catalog(warehouse), db, table)
     for i in range(n):
         marker = f"w{worker}:{i}"
-        store.append_rows(
-            [
-                {"a": worker * 1000 + i, "v": i}
-            ],
+        store.append_columns(
+            {"a": [worker * 1000 + i], "v": [i]},
             applied_marker=marker,
         )
         with open(confirmed_path, "a") as f:

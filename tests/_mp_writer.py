@@ -1,7 +1,7 @@
 """Subprocess worker for the multi-process writer stress test: hammers
 one shared table with batch commits (upserts + periodic delete batches)
 through the storage layer's flock-serialized seq allocation — no Spark
-needed on the write path (append_rows is pure Arrow)."""
+needed on the write path (append_columns is pure Arrow)."""
 
 import os
 import sys
@@ -23,16 +23,19 @@ def main() -> None:
     for b in range(n_batches):
         if b % 5 == 4:
             # periodic tombstone batch over a subset of the keys
-            store.append_rows(
-                [{"a": base + k} for k in range(worker % 7, n_keys, 7)],
+            store.append_columns(
+                {"a": [base + k for k in range(worker % 7, n_keys, 7)]},
                 delete=True,
             )
         else:
-            store.append_rows(
-                [
-                    {"a": base + k, "v": worker * 1_000_000 + b * 1_000 + k}
-                    for k in range(n_keys)
-                ]
+            store.append_columns(
+                {
+                    "a": [base + k for k in range(n_keys)],
+                    "v": [
+                        worker * 1_000_000 + b * 1_000 + k
+                        for k in range(n_keys)
+                    ],
+                }
             )
     print(f"WORKER_DONE {worker}", flush=True)
 

@@ -1473,11 +1473,10 @@ def test_compaction_marker_fold_strict_on_read_error(kv, monkeypatch):
 
 
 def test_bulk_bind_value_identical_to_per_row(kv):
-    """The columnar bulk-bind fast path (r11) must be provably
-    value-identical to the per-row validate_value path: clamps, int
-    timestamps (seconds -> nanos), int->float coercion, sparse column
-    lists. Twin tables, one loaded via a >=64-row batch (fast path),
-    one via single-row inserts (per-row path), must read back equal."""
+    """The columnar bind must be value-identical however a batch is
+    cut: clamps, int timestamps (seconds -> nanos), int->float
+    coercion, sparse column lists. Twin tables, one loaded as one
+    80-row batch, one as 80 one-row batches, must read back equal."""
     for t in ("bb_fast", "bb_slow"):
         kv.execute(
             f"create table {t}(k int, tiny tinyint, ts timestamp, "
@@ -1499,7 +1498,7 @@ def test_bulk_bind_value_identical_to_per_row(kv):
     kv.batch_insert(kv.prepare(sql.format(t="bb_fast")), rows)
     pid = kv.prepare(sql.format(t="bb_slow"))
     for r in rows:
-        kv.batch_insert(pid, [r])  # below the fast-path threshold
+        kv.batch_insert(pid, [r])
     fast = kv.execute_rows("select * from bb_fast")
     slow = kv.execute_rows("select * from bb_slow")
     assert fast == slow
@@ -1507,7 +1506,7 @@ def test_bulk_bind_value_identical_to_per_row(kv):
     # clamp actually engaged
     tinies = {r[1] for r in fast}
     assert -128 in tinies and 127 in tinies
-    # sparse column list still NULL-fills (fast path too)
+    # sparse column list still NULL-fills
     kv.execute("create table bb_sp(k int, a double, b text, primary key(k))")
     kv.batch_insert(
         kv.prepare("insert into bb_sp(k, a) values(?, ?)"),
@@ -1519,7 +1518,7 @@ def test_bulk_bind_value_identical_to_per_row(kv):
 
 def test_batch_insert_columns_matches_rows(kv):
     """batch_insert_columns (r11, the wire '3p' path) is semantically
-    identical to batch_insert of the transposed rows — fast path,
+    identical to batch_insert of the transposed rows — screened columns,
     fallback (timestamp tuples), exact arity error, ragged rejection,
     and idempotency keys."""
     for t in ("bc_a", "bc_b"):
@@ -1538,7 +1537,7 @@ def test_batch_insert_columns_matches_rows(kv):
     assert kv.execute_rows("select * from bc_a") == kv.execute_rows(
         "select * from bc_b"
     )
-    # fallback leg: (sec, nsec) tuples reject the screen, per-row path
+    # fallback leg: (sec, nsec) tuples reject the screen, validate_value
     # lands them with identical values
     kv.batch_insert_columns(
         "insert into bc_a(k, ts, x) values(?, ?, ?)",
@@ -1582,9 +1581,9 @@ def test_batch_insert_columns_matches_rows(kv):
 
 def test_bulk_bind_falls_back_with_exact_errors(kv):
     """A single bad row in a large batch must still raise the exact
-    reference error string (the screen rejects the column and the
-    legacy loop reports it), and mixed timestamp forms fall back
-    silently with correct values."""
+    reference error string (the screen rejects the column and
+    validate_value over that column reports it), and mixed timestamp
+    forms fall back silently with correct values."""
     kv.execute("create table bf(k int, v double, primary key(k))")
     pid = kv.prepare("insert into bf(k, v) values(?, ?)")
     bad = [(i, float(i)) for i in range(99)] + [("oops", 1.0)]
@@ -1603,6 +1602,74 @@ def test_bulk_bind_falls_back_with_exact_errors(kv):
     kv.batch_insert(pid2, rows)
     got = dict(kv.execute_rows("select k, ts from bt where k>=100"))
     assert got[101] == (5, 0) and got[100] == (5, 250)
+
+
+def test_batch_error_order_is_row_major(kv):
+    """Every batch entry point raises the error a row-major walk over
+    the batch would hit first — rows in order, insert columns in order
+    within a row, a row's arity checked before its values — at any batch
+    size, and an already-applied idempotency key wins over all of them."""
+    kv.execute("create table eo(k int, v double, primary key(k))")
+    sql = "insert into eo(k, v) values(?, ?)"
+    pid = kv.prepare(sql)
+    v_err = r'Invalid str value \(x\) for "v" of double'
+
+    def batches(rows):
+        # the same leading rows as a 3-row and a 70-row batch
+        return [rows, rows + [(i, float(i)) for i in range(3, 70)]]
+
+    def as_cols(rows):
+        return [list(c) for c in zip(*rows)]
+
+    # bad v at row 1 and bad k at row 2: the row-1 v error
+    for rows in batches([(0, 0.0), (1, "x"), ("y", 2.0)]):
+        with pytest.raises(OpentickError, match=v_err):
+            kv.batch_insert(pid, rows)
+        with pytest.raises(OpentickError, match=v_err):
+            kv.batch_insert_columns(pid, as_cols(rows))
+    # a bad value at row 1 before a ragged row 2: the value error
+    for rows in batches([(0, 0.0), (1, "x"), (2,)]):
+        with pytest.raises(OpentickError, match=v_err):
+            kv.batch_insert(pid, rows)
+    # a ragged row 1 before a bad value: the arity error
+    for rows in batches([(0, 0.0), (1,), ("y", 2.0)]):
+        with pytest.raises(OpentickError, match="Expected 2 arguments, got 1"):
+            kv.batch_insert(pid, rows)
+    # columns of the wrong arity are ragged at row 0, before any value
+    with pytest.raises(OpentickError, match="Expected 2 arguments, got 3"):
+        kv.batch_insert_columns(pid, [["y", 1], [0.0, "x"], [1, 2]])
+    assert kv.execute_rows("select k from eo") == []
+    # a replay of an applied key is a silent no-op, bad rows or not
+    kv.batch_insert(pid, [(7, 7.0)], idempotency_key="eo-1")
+    for rows in batches([(0, 0.0), (1, "x"), (2,)]):
+        kv.batch_insert(pid, rows, idempotency_key="eo-1")
+        kv.batch_insert(pid, [(0, 0.0), (1,)], idempotency_key="eo-1")
+        kv.batch_insert_columns(pid, as_cols(rows[:2]), idempotency_key="eo-1")
+        kv.batch_insert_columns(pid, [[1], [2.0], [3]], idempotency_key="eo-1")
+    assert kv.execute_rows("select k, v from eo") == [(7, 7.0)]
+
+
+def test_text_statement_parsed_once(kv, monkeypatch):
+    """A non-select text statement sent through a result shape is parsed
+    once: the parse that finds it is not a select feeds its dispatch."""
+    import opentick_spark.engine as engine_mod
+
+    calls = []
+    real = engine_mod.parse
+
+    def counting(sql):
+        calls.append(sql)
+        return real(sql)
+
+    monkeypatch.setattr(engine_mod, "parse", counting)
+    for sql, args in [
+        ("create table po(k int, v double, primary key(k))", ()),
+        ("insert into po(k, v) values(?, ?)", (1, 2.5)),
+    ]:
+        calls.clear()
+        assert kv.execute_columns_ns(sql, *args) == (None, [])
+        assert calls == [sql]
+    assert kv.execute_rows("select k, v from po") == [(1, 2.5)]
 
 
 def test_auto_compact_transient_error_does_not_fail_commit(spark, tmp_path, monkeypatch):

@@ -234,11 +234,11 @@ def test_log_diff_equals_diff_across_commit_kinds(spark, eng):
             _rows_df(spark, [(1, "gx", 99.0, 1), (25, "gy", 5.0, 25)])
         )
         st.delete_where(spark, F.col("k") == 2)
-        # FILE commits via the row path (one upsert, one tombstone of an
+        # FILE commits via the Arrow path (one upsert, one tombstone of an
         # ABSENT pk — must classify as dropped, i.e. appear in neither)
-        st.append_rows([{"k": 3, "grp": "gz", "v": 7.5, "w": 3}])
-        st.append_rows([{"k": 999, "grp": None, "v": None, "w": None}],
-                       delete=True)
+        st.append_columns({"k": [3], "grp": ["gz"], "v": [7.5], "w": [3]})
+        st.append_columns({"k": [999], "grp": [None], "v": [None], "w": [None]},
+                          delete=True)
         for include_old in (False, True):
             got = canon(st.log_diff(spark, s1, include_old=include_old))
             want = canon(st.diff(spark, s1, include_old=include_old))

@@ -110,7 +110,7 @@ def test_held_store_sees_other_process_commits(spark, tmp_path):
     eng.use("mph")
     eng.execute("create table t(a int, v int, primary key(a))")
     store = eng.store("mph", "t")
-    store.append_rows([{"a": k, "v": k} for k in range(5)])
+    store.append_columns({"a": list(range(5)), "v": list(range(5))})
     held = store.read(spark)
     assert store.read(spark) is held
     assert sorted(map(tuple, held.collect())) == [(k, k) for k in range(5)]
@@ -235,7 +235,7 @@ def test_cross_process_reader_during_compaction(spark, tmp_path, hash_buckets):
     n_keys = 50
     store = TableStore(Catalog(wh), "rc", "t")
     # generation 0 in place before the reader starts
-    store.append_rows([{"a": k, "v": 0} for k in range(n_keys)])
+    store.append_columns({"a": list(range(n_keys)), "v": [0] * n_keys})
 
     stop_file = str(tmp_path / "stop")
     reader_err = open(str(tmp_path / "reader.err"), "w")
@@ -287,7 +287,7 @@ def test_cross_process_reader_during_compaction(spark, tmp_path, hash_buckets):
         # pressure phase: 10 back-to-back swaps while reads fly —
         # maximizes scans that straddle a swap (the race under test)
         for g in range(1, 11):
-            store.append_rows([{"a": k, "v": g} for k in range(n_keys)])
+            store.append_columns({"a": list(range(n_keys)), "v": [g] * n_keys})
             store.compact(spark, hash_buckets=hash_buckets)
             time.sleep(0.5)
         # quiescent phase (r7, twice-diagnosed under load): signal the
@@ -418,7 +418,9 @@ def test_concurrent_process_mergers_atomic_commits(spark, tmp_path):
     eng.execute("create table t(a int, v int, m int, primary key(a))")
     store = eng.store("mg", "t")
     # seed generation (tag m=-1) so the first DELETE merges have matches
-    store.append_rows([{"a": k, "v": 0, "m": -1} for k in range(40)])
+    store.append_columns(
+        {"a": list(range(40)), "v": [0] * 40, "m": [-1] * 40}
+    )
 
     n_merges, n_keys = 6, 30
     bases = {0: 0, 1: 10}

@@ -248,7 +248,7 @@ def test_concurrent_reads_and_commits_never_serve_a_stale_plan(spark, tmp_path):
         try:
             for i in range(n_commits):
                 before = st.read(spark)
-                st.append_rows([{"a": w * 100 + i, "v": i}])
+                st.append_columns({"a": [w * 100 + i], "v": [i]})
                 if st.read(spark) is before:
                     errors.append((w, i))
         except Exception as e:  # surfaced by the assertion below

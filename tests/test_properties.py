@@ -81,3 +81,61 @@ def test_parser_never_crashes(sql):
         parse(sql)
     except OpentickError:
         pass
+
+
+# -- the insert bind's columnar screen against validate_value ----------
+_CLAMP_EDGES = [
+    x
+    for lo, hi in [(-128, 127), (-32768, 32767), (-(2**31), 2**31 - 1)]
+    for x in (lo - 1, lo, hi, hi + 1)
+]
+_SCREEN_POOL = [
+    True, False, None,  # bools in int/double columns, NULL
+    0, 1, -1, 2**63 - 1, 2**63, -(2**63) - 1, 10**400, *_CLAMP_EDGES,
+    0.0, -0.0, 1.5, 2.0, float("nan"), float("inf"), float("-inf"), 1e308,
+    [5, 250], (5, 250), [5.0, 1], "1970-01-01T00:00:20Z", "not-a-time",
+    "", "x",
+]
+_SCREEN_TYPES = [
+    "tinyint", "smallint", "int", "bigint", "double", "float",
+    "timestamp", "boolean", "text",
+]
+_SCREEN_FAMILIES = [
+    [],
+    [x for x in _SCREEN_POOL if type(x) is int],
+    [x for x in _SCREEN_POOL if type(x) is float],
+    [x for x in _SCREEN_POOL if type(x) in (int, float)],
+    [x for x in _SCREEN_POOL if type(x) is bool],
+    [x for x in _SCREEN_POOL if type(x) is str],
+    [x for x in _SCREEN_POOL if type(x) is int and abs(x) < 2**62],
+]
+
+
+def _check_screen(t, vals):
+    """``_screen_coerce`` either declines (None) or returns exactly what
+    ``validate_value`` gives cell by cell — same types, same values,
+    -0.0 and NaN included — and never accepts a list it rejects."""
+    from opentick_spark.engine import _screen_coerce
+
+    out = _screen_coerce(t, list(vals))
+    if out is None:
+        return
+    ref = [validate_value(v, t) for v in vals]  # must not raise
+    assert [(type(x), repr(x)) for x in out] == [
+        (type(x), repr(x)) for x in ref
+    ], (t, vals)
+
+
+def test_screen_matches_validate_value_on_edge_families():
+    for t in _SCREEN_TYPES:
+        for vals in _SCREEN_FAMILIES + [[x] for x in _SCREEN_POOL]:
+            _check_screen(t, vals)
+
+
+@settings(max_examples=300)
+@given(
+    st.sampled_from(_SCREEN_TYPES),
+    st.lists(st.sampled_from(_SCREEN_POOL), max_size=6),
+)
+def test_screen_matches_validate_value(t, vals):
+    _check_screen(t, vals)

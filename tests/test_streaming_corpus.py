@@ -303,10 +303,10 @@ def test_applied_marker_exactly_once(spark, engine, tmp_path):
     store._write_meta(meta)
     assert store.has_applied_marker("s:0")
 
-    # file commits (append_rows) carry markers in the parquet footer —
-    # same contract, discoverable without the meta cache
-    store.append_rows([{"doc_id": 2, "lang": "de", "n_chars": 6}],
-                      applied_marker="s:f1")
+    # file commits (append_columns) carry markers in the parquet footer
+    # — same contract, discoverable without the meta cache
+    store.append_columns({"doc_id": [2], "lang": ["de"], "n_chars": [6]},
+                         applied_marker="s:f1")
     meta = store._meta()
     meta.pop("applied_markers", None)
     store._write_meta(meta)
@@ -434,7 +434,7 @@ def test_stream_ivf_append_replay_guard(spark, tmp_path):
 def test_concurrent_same_marker_single_commit(spark, engine):
     """The duplicate check and the publish are one critical section
     (r10 high-review fix): two deliveries of the SAME marker racing
-    through append_rows produce exactly ONE published commit — the
+    through append_columns produce exactly ONE published commit — the
     loser abandons its staged file (its allocated seq is a harmless
     gap) and the winner's rows are the table state."""
     import threading
@@ -449,8 +449,8 @@ def test_concurrent_same_marker_single_commit(spark, engine):
 
     def deliver(v: int) -> None:
         barrier.wait()
-        n = store.append_rows(
-            [{"doc_id": 1, "lang": "en", "n_chars": v}],
+        n = store.append_columns(
+            {"doc_id": [1], "lang": ["en"], "n_chars": [v]},
             applied_marker="race:0",
         )
         applied.append((v, n))

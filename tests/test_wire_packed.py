@@ -116,22 +116,27 @@ def test_packed_path_end_to_end(bserver):
 def test_packed_batch_insert_rejects_ragged_rows(bserver):
     """r6 ADVICE fix: zip(*rows) truncates ragged rows to the shortest —
     the packed path must raise like the row path's server-side arity
-    error, never silently insert truncated data."""
+    error, never silently insert truncated data. A json client (plain
+    "3" rows) gets the same error string."""
     from opentick_spark.client import Error, connect_tcp
 
-    c = connect_tcp(bserver.host, bserver.port, protocol="bson")
-    try:
-        c.execute("create database wpr")
-        c.use("wpr")
-        c.execute("create table t(a int, v int, primary key(a))")
-        with pytest.raises(Error, match="row 1 has 1 args, expected 2"):
-            c.batch_insert(
-                "insert into t(a, v) values(?, ?)", [(1, 10), (2,)]
-            )
-        # nothing was inserted
-        assert c.execute("select * from t") == []
-    finally:
-        c.close()
+    for protocol in ("bson", "json"):
+        c = connect_tcp(bserver.host, bserver.port, protocol=protocol)
+        try:
+            if protocol == "bson":
+                c.execute("create database wpr")
+                c.use("wpr")
+                c.execute("create table t(a int, v int, primary key(a))")
+            else:
+                c.use("wpr")
+            with pytest.raises(Error, match="Expected 2 arguments, got 1"):
+                c.batch_insert(
+                    "insert into t(a, v) values(?, ?)", [(1, 10), (2,)]
+                )
+            # nothing was inserted
+            assert c.execute("select * from t") == []
+        finally:
+            c.close()
 
 
 # ------------------------------------------------------ property testing
