@@ -389,10 +389,11 @@ class Connection:
     ):
         """SplitRange (C11) with the reference client's result contract —
         merged, PK-ordered, boundary-deduped rows (client/opentick.go:
-        63-127, 302-317) — executed as ONE coalesced Spark scan
-        (engine._split_predicate) rather than n connection-parallel
-        sub-queries. ``ranges`` bind the statement's LAST two
-        placeholders, one (lo, hi) pair per sub-range."""
+        63-127, 302-317) — executed as ONE Spark scan filtered by the
+        OR of the coalesced sub-ranges (engine._split_frame) rather
+        than n connection-parallel sub-queries. ``ranges`` bind the
+        statement's LAST two placeholders, one (lo, hi) pair per
+        sub-range."""
         return self._cols_out(
             self._engine.execute_columns_ns(
                 sql, *tuple(args), ranges=[tuple(r) for r in ranges]

@@ -15,6 +15,12 @@ method calls. What remains semantically is reproduced here:
   descending under ``LIMIT -n`` — query.go:156-159)
 - ``execute_split(sql, ranges, *args)`` — SplitRange as one DataFrame
 
+The WHERE → scan compilation has one owner: ``_conds_sql`` renders every
+bound condition list (select, split and delete) as one SQL string, and
+``_select_frame`` builds every select plan from a list of such lists —
+one for a plain select, the coalesced sub-ranges of a split — filtered
+by ONE ``F.expr`` of their OR, then ``adj``, then order/limit.
+
 Collected results take one path: the private producer
 ``_result_table(sql, args, ranges=None)`` returns the result as a
 PK-ordered Arrow table, and three public methods shape it at the edge,
@@ -30,7 +36,7 @@ each taking an optional ``ranges=`` for split reads:
 from __future__ import annotations
 
 import itertools
-import re
+import math
 import threading
 from typing import Any
 
@@ -141,56 +147,66 @@ def _bind_column(col, vals: list):
     return out, None
 
 
-def _render_num_sql(v) -> "str | None":
-    """SQL literal for a plain finite int/float (engine-native numeric
-    values — resolver-validated, so timestamps are already epoch
-    integers here). None means "not safely renderable" (strings,
-    bools, NaN/inf) and the caller falls back to Column building."""
+def _sql_literal(v) -> str:
+    """Spark SQL text for one engine-native bound value (resolver-
+    validated: timestamps are already epoch integers here).
+
+    A finite float is CPython's round-tripping ``repr`` as a DOUBLE
+    literal (the ``D`` suffix): a bare ``-0.0`` would parse as DECIMAL
+    and lose its sign. A string escapes backslash first, then the
+    quote, for the default ``escapedStringLiterals=false`` parse, and
+    writes ``$`` as the ``\\u0024`` escape: Spark's variable
+    substitution rewrites ``${...}`` in the SQL text before it is
+    parsed, even inside a quoted literal (``'${env:HOME}'`` would read
+    as the home directory)."""
+    if type(v) is bool:
+        return "true" if v else "false"
     if type(v) is int:
         return repr(v)
     if type(v) is float:
-        import math
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return repr(v) + "D"
+    if type(v) is str:
+        v = v.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+        return f"'{v}'"
+    raise TypeError(f"no SQL literal for {type(v).__name__} value {v!r}")
 
-        if not math.isfinite(v):
-            return None
-        r = repr(v)  # CPython repr round-trips; Spark SQL parses
-        return r if ("e" in r or "." in r) else r + ".0"
-    return None
+
+def _cmp_sql(name: str, op: str, v) -> str:
+    """``name op v`` in SQL. A float zero compares as both zeros: Spark
+    equates -0.0 and 0.0, but the parquet row-group and dictionary
+    filters it pushes to order -0.0 below 0.0 and would drop a stored
+    zero of the other sign (a compacted base holds latest-wins keys,
+    which Spark normalizes to 0.0). So ``= 0`` is the closed interval
+    [-0.0, 0.0], and an inclusive lower bound at zero is -0.0."""
+    if type(v) is float and v == 0.0:
+        if op == "=":
+            return f"{name} >= -0.0D AND {name} <= 0.0D"
+        v = -0.0 if op == ">=" else 0.0
+    return f"{name} {op} {_sql_literal(v)}"
 
 
-_SAFE_IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _render_conds_sql(conds) -> "str | None":
-    """One SQL string for a bound condition list — the single-expr()
-    fast path of ``_split_predicate.fold`` (r14: one py4j call instead
-    of ~9 per comparison). None if any literal is non-numeric, or if a
-    column name is not a plain identifier (r15, ADVICE r14: an embedded
-    backtick would break the quoting, and a dotted name quoted whole
-    here would diverge from the ``F.col()`` fallback, which parses dots
-    as field access — the dialect tokenizer only admits
-    ``[_a-zA-Z][a-zA-Z0-9_]*`` so this is unreachable via SQL, but the
-    guard keeps the fast path safe for any future caller)."""
+def _conds_sql(conds) -> str:
+    """The one SQL rendering of a bound condition list (``true`` when
+    empty): every dialect filter — select, split and delete — is one
+    ``F.expr`` of it, one py4j call instead of ~9 per comparison, which
+    Catalyst parses to the same predicate tree ``F.col``/``F.lit``
+    would build. A column name is backtick-quoted, any backtick in it
+    doubled."""
     parts = []
     for c in conds:
-        if not _SAFE_IDENT_RE.match(c.col.name):
-            return None
-        name = f"`{c.col.name}`"
+        name = "`" + c.col.name.replace("`", "``") + "`"
         if c.equal is not None:
-            lit = _render_num_sql(c.equal)
-            if lit is None:
-                return None
-            parts.append(f"{name} = {lit}")
+            parts.append(_cmp_sql(name, "=", c.equal))
         if c.start is not None:
-            lit = _render_num_sql(c.start.value)
-            if lit is None:
-                return None
-            parts.append(f"{name} >{'=' if c.start.inclusive else ''} {lit}")
+            op = ">=" if c.start.inclusive else ">"
+            parts.append(_cmp_sql(name, op, c.start.value))
         if c.end is not None:
-            lit = _render_num_sql(c.end.value)
-            if lit is None:
-                return None
-            parts.append(f"{name} <{'=' if c.end.inclusive else ''} {lit}")
+            op = "<=" if c.end.inclusive else "<"
+            parts.append(_cmp_sql(name, op, c.end.value))
     return " AND ".join(parts) if parts else "true"
 
 
@@ -454,19 +470,19 @@ class Engine:
     def execute_split(
         self, sql: str | int, ranges: list[tuple], *args: Any
     ) -> DataFrame:
-        """Range-parallel read (C11): run ``sql`` once per (lo, hi) pair —
-        bound to its LAST two placeholders — and union the results,
-        dropping the boundary rows duplicated by the reference's
-        inclusive sub-ranges. One Spark job; each branch prunes to its
-        own row groups, which is the reference's n-concurrent-scans
-        pattern expressed as partitions.
+        """Range-parallel read (C11): ``sql`` over the union of its (lo,
+        hi) sub-ranges — each bound to its LAST two placeholders — with
+        the boundary rows duplicated by the reference's inclusive
+        sub-ranges appearing once, PK-ascending
+        (client/opentick.go:302-317). Without LIMIT it is one scan
+        filtered by the OR of the sub-ranges (``_split_frame``).
 
-        The dedup key is the PRIMARY KEY (boundary duplicates are the
-        same physical row), never the projected values — two distinct
-        rows that agree on a projected subset must both survive. PK
-        columns missing from the projection are carried internally and
-        dropped at the end; the merged result stays PK-ascending
-        (client/opentick.go:302-317)."""
+        With LIMIT each sub-range keeps its own limit and the branches
+        are unioned and deduplicated on the PRIMARY KEY (boundary
+        duplicates are the same physical row), never the projected
+        values — two distinct rows that agree on a projected subset must
+        both survive. PK columns missing from the projection are carried
+        internally and dropped at the end."""
         resolved = self._split_statement(sql, ranges, args)
         return self._split_frame(resolved, ranges, args)
 
@@ -492,44 +508,34 @@ class Engine:
         args: tuple,
         defer_sort: bool = False,
     ) -> DataFrame:
-        """The split read as one DataFrame. Without LIMIT/adj it is ONE
-        scan filtered by the OR of the sub-range predicates — coalesced
-        first, so the reference-style contiguous split collapses to a
-        single range predicate (see ``_split_predicate``). That is
-        set-identical to union+dedup (a boundary row satisfies two
-        disjuncts but is still one row of one scan), with none of the
-        n-subplan union, the dropDuplicates shuffle, or n passes over
-        the upsert-resolution window. ``defer_sort`` skips its orderBy
-        and carries the PK for a caller that sorts the collected table
-        itself. LIMIT/adj are per-sub-range semantics in the reference,
-        so those run the branch-union path, always sorted."""
+        """The split read as one DataFrame. Without LIMIT it is ONE scan
+        filtered by the OR of the coalesced sub-range disjuncts (see
+        ``_split_predicate``) — set-identical to union+dedup, because a
+        boundary row satisfies two disjuncts but is still one row of one
+        scan, and ``adj`` rewrites each row by its own (sec, tm). LIMIT
+        is per sub-range in the reference, so that shape unions the
+        per-range plans, drops the boundary duplicates and sorts.
+        ``defer_sort`` is ``_select_frame``'s."""
+        if not resolved.limit:
+            disjuncts = self._split_predicate(resolved, ranges, args)
+            return self._select_frame(resolved, disjuncts, defer_sort)
         import dataclasses
 
         pk = resolved.schema.pk_names
         want = [c.name for c in resolved.cols]
-        if not resolved.limit and not resolved.adjs:
-            pred, leading_eq = self._split_predicate(resolved, ranges, args)
-            st = self.store(resolved.schema.db, resolved.schema.name)
-            df = st.read(self.spark, leading_eq=leading_eq).filter(pred)
-            if defer_sort:
-                return df.select(*dict.fromkeys(want + pk))
-            return df.orderBy(*pk).select(*want)
         missing = [k for k in resolved.schema.key_columns if k.name not in want]
         widened = dataclasses.replace(resolved, cols=list(resolved.cols) + missing)
         out = None
         for lo, hi in ranges:
-            df = self._run_resolved(widened, (*args, lo, hi))
+            conds = bind_conds(widened.conds, (*args, lo, hi))
+            df = self._select_frame(widened, [conds])
             out = df if out is None else out.unionAll(df)
         return out.dropDuplicates(pk).orderBy(*pk).select(*want)
 
     def _split_predicate(self, resolved, ranges, args):
-        """Bind each (lo, hi) sub-range, coalesce adjacent/overlapping
-        intervals into maximal ones, and fold the result into ONE Spark
-        predicate (r11). Returns ``(pred, leading_eq)`` where
-        ``leading_eq`` is the leading-PK equality for hash-bucket
-        partition pruning — only when it is IDENTICAL across every
-        bound branch (a lead equality the ranges themselves bind would
-        prune other branches' buckets away).
+        """Bind each (lo, hi) sub-range and coalesce adjacent/overlapping
+        intervals into maximal ones (r11): the list of bound condition
+        lists whose OR ``_select_frame`` filters with. Pure Python.
 
         The reference's SplitRange is a CLIENT-parallelism device: callers
         carve one big range into n contiguous inclusive sub-ranges so n
@@ -557,55 +563,25 @@ class Engine:
             for j in range(len(first))
             if any(b[j] != first[j] for b in bound[1:])
         }
-        lead = resolved.schema.key_columns[0].name
-        leading_eq = next(
-            (
-                c.equal
-                for j, c in enumerate(first)
-                if j not in varying
-                and c.col.name == lead
-                and c.equal is not None
-            ),
-            None,
-        )
-
-        def fold(disjuncts):
-            # r14 (profiled: ~60% of the split row's driver time was
-            # py4j round-trips — ~9 JVM calls per Column comparison,
-            # ~90 per 10-arm disjunction): when every literal is plain
-            # numeric (the engine-native form of int/timestamp PKs —
-            # exactly the SplitRange workload), render the WHOLE
-            # disjunction as one SQL string and make ONE expr() call.
-            # Catalyst parses it to the identical predicate tree. Any
-            # non-numeric literal falls back to Column building.
-            rendered = [_render_conds_sql(conds) for conds in disjuncts]
-            if all(r is not None for r in rendered):
-                return F.expr(" OR ".join(f"({r})" for r in rendered)), leading_eq
-            pred = None
-            for conds in disjuncts:
-                p = self._predicate(conds)
-                pred = p if pred is None else (pred | p)
-            return pred, leading_eq
-
         if not varying:
-            return fold([first])  # identical branches: one disjunct
+            return [first]  # identical branches: one disjunct
         if len(varying) > 1:
-            return fold(bound)
+            return bound
         j = next(iter(varying))
         c0 = first[j]
         if c0.equal is not None or c0.start is None or c0.end is None:
-            return fold(bound)
+            return bound
         kind = type(c0.start.value)
         if kind not in (int, float):
-            return fold(bound)
+            return bound
         ivals: list[list] = []
         for b in bound:
             c = b[j]
             if c.equal is not None or c.start is None or c.end is None:
-                return fold(bound)
+                return bound
             lo, hi = c.start.value, c.end.value
             if type(lo) is not kind or type(hi) is not kind:
-                return fold(bound)
+                return bound
             if kind is int:
                 lo += 0 if c.start.inclusive else 1
                 hi -= 0 if c.end.inclusive else 1
@@ -614,12 +590,12 @@ class Engine:
                 or lo != lo  # NaN bound: Spark sorts NaN greatest,
                 or hi != hi  # Python can't compare — don't coalesce
             ):
-                return fold(bound)
+                return bound
             if lo <= hi:
                 ivals.append([lo, hi])
         if not ivals:
             # every sub-range is empty: keep one (vacuously false) branch
-            return fold([first])
+            return [first]
         ivals.sort()
         merged = [ivals[0]]
         touch = 1 if kind is int else 0
@@ -635,7 +611,7 @@ class Engine:
                 col=c0.col, start=Bound(lo, True), end=Bound(hi, True)
             )
             out.append(conds)
-        return fold(out)
+        return out
 
     # -- result delivery -------------------------------------------------
     def _result_table(
@@ -652,12 +628,11 @@ class Engine:
         100 TB contract), but these shapes hold the whole result on the
         driver anyway, so a range-partitioning Exchange plus its
         sampling job would order rows that one Arrow ``sort_by`` orders
-        exactly (PKs are unique under upsert semantics). LIMIT and the
-        per-sub-range split shapes (LIMIT/adj) collect the plan's own
-        ordered result — TakeOrderedAndProject is already exchange-free
-        and prunes to n rows executor-side. EXPLAIN collects its plan
-        lines. A failing collect raises: nothing is planned or run a
-        second time."""
+        exactly (PKs are unique under upsert semantics). With LIMIT,
+        plain or split, it collects the plan's own ordered result —
+        TakeOrderedAndProject is already exchange-free and prunes to n
+        rows executor-side. EXPLAIN collects its plan lines. A failing
+        collect raises: nothing is planned or run a second time."""
         if ranges is None:
             resolved, df = self._select_or_run(sql, args)
             if resolved is None:
@@ -665,14 +640,13 @@ class Engine:
                     return None, []
                 return df.toArrow(), [(n, "text") for n in df.columns]
             self._check_args(resolved.n_placeholders, args)
-            df = self._run_select(resolved, args, defer_sort=True)
-            deferred = not resolved.limit
+            conds = bind_conds(resolved.conds, args)
+            df = self._select_frame(resolved, [conds], defer_sort=True)
         else:
             resolved = self._split_statement(sql, ranges, args)
             df = self._split_frame(resolved, ranges, args, defer_sort=True)
-            deferred = not (resolved.limit or resolved.adjs)
         tbl = df.toArrow()
-        if deferred:
+        if not resolved.limit:
             order = "descending" if resolved.reverse else "ascending"
             tbl = tbl.sort_by([(k, order) for k in resolved.schema.pk_names])
         return tbl, [(c.name, c.type) for c in resolved.cols]
@@ -742,7 +716,7 @@ class Engine:
     def _run_resolved(self, resolved, args: tuple) -> DataFrame | None:
         if isinstance(resolved, ResolvedSelect):
             self._check_args(resolved.n_placeholders, args)
-            return self._run_select(resolved, args)
+            return self._select_frame(resolved, [bind_conds(resolved.conds, args)])
         if isinstance(resolved, ResolvedInsert):
             self._check_args(resolved.n_placeholders, args)
             self._insert(resolved, [[a] for a in args], 1)
@@ -752,44 +726,39 @@ class Engine:
             return self._run_delete(resolved, args)
         raise OpentickError("Invalid statement")
 
-    def _predicate(self, conds: list[ResolvedCond]):
-        pred = F.lit(True)
-        for c in conds:
-            col = F.col(c.col.name)
-            if c.equal is not None:
-                pred = pred & (col == F.lit(c.equal))
-            if c.start is not None:
-                pred = pred & (
-                    (col >= F.lit(c.start.value))
-                    if c.start.inclusive
-                    else (col > F.lit(c.start.value))
-                )
-            if c.end is not None:
-                pred = pred & (
-                    (col <= F.lit(c.end.value))
-                    if c.end.inclusive
-                    else (col < F.lit(c.end.value))
-                )
-        return pred
-
-    def _run_select(
-        self, stmt: ResolvedSelect, args: tuple, defer_sort: bool = False
+    def _select_frame(
+        self,
+        stmt: ResolvedSelect,
+        disjuncts: list[list[ResolvedCond]],
+        defer_sort: bool = False,
     ) -> DataFrame:
+        """The one select plan: the store's read, filtered by ONE
+        ``F.expr`` of the OR of ``disjuncts`` (bound condition lists —
+        one for a plain select, the coalesced sub-ranges for a split),
+        then ``adj``, then the implicit PK order and LIMIT.
+
+        A leading-PK equality prunes hash buckets only when every
+        disjunct has the same one: a lead equality that differs between
+        sub-ranges would prune the other sub-ranges' buckets away.
+        ``defer_sort`` (without LIMIT) skips the sort and carries the PK
+        through for a caller that sorts the collected table itself."""
         schema = stmt.schema
         st = self.store(schema.db, schema.name)
-        conds = bind_conds(stmt.conds, args)
-        # leading-PK equality → hash-bucket partition pruning on the store
         lead = schema.key_columns[0].name
-        leading_eq = next(
-            (c.equal for c in conds if c.col.name == lead and c.equal is not None),
-            None,
-        )
+
+        def lead_eq(conds):
+            return next(
+                (c.equal for c in conds if c.col.name == lead and c.equal is not None),
+                None,
+            )
+
+        leading_eq = lead_eq(disjuncts[0])
+        if any(lead_eq(d) != leading_eq for d in disjuncts[1:]):
+            leading_eq = None
         df = st.read(self.spark, leading_eq=leading_eq)
-        if conds:
-            # one expr() call instead of ~9 py4j calls per comparison
-            rendered = _render_conds_sql(conds)
+        if all(disjuncts):  # an empty disjunct makes the OR true
             df = df.filter(
-                F.expr(rendered) if rendered is not None else self._predicate(conds)
+                F.expr(" OR ".join(f"({_conds_sql(d)})" for d in disjuncts))
             )
         if stmt.adjs:
             adj_store = self.store(schema.db, ADJ_TABLE)
@@ -830,8 +799,7 @@ class Engine:
     def _run_delete(self, stmt: ResolvedDelete, args: tuple) -> None:
         st = self.store(stmt.schema.db, stmt.schema.name)
         conds = bind_conds(stmt.conds, args)
-        pred = self._predicate(conds) if conds else F.lit(True)
-        st.delete_where(self.spark, pred)
+        st.delete_where(self.spark, F.expr(_conds_sql(conds)))
         return None
 
     # ------------------------------------------------------------------

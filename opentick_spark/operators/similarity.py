@@ -449,14 +449,20 @@ def _centroid_rows_from_index(spark, path: str) -> list:
     float32 → Python float upcast is IDENTICAL to what Spark's collect
     performs, so routing math is bit-unchanged. Scheme-qualified index
     paths (the documented Hadoop-FS surface of build/query) keep the
-    Spark read."""
+    Spark read.
+
+    The local read lists ``centroids/`` once and skips names starting
+    with ``.`` or ``_`` (``_SUCCESS``, staging files), like Spark's own
+    reader. No concurrent writer may touch the index while it is read:
+    a part file written or removed during the listing is not guarded
+    against."""
     cdir = f"{path}/centroids"
     from opentick_spark.fsutil import is_local_path
 
     if is_local_path(cdir) and os.path.isdir(cdir):
         import pyarrow.parquet as pq
 
-        t = pq.read_table(cdir)
+        t = pq.read_table(cdir, ignore_prefixes=[".", "_"])
         return _guard_cent_rows(
             list(
                 zip(

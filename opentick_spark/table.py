@@ -40,6 +40,7 @@ except ImportError:  # non-POSIX: cross-process locking degrades to in-process
     fcntl = None
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,6 +74,22 @@ class CompactionFoldError(OSError):
     callers (engine auto-compact) may swallow exactly this type. An
     OSError of any other provenance from compaction means a phase AFTER
     mutation began failed and must propagate."""
+
+
+def _latest_wins(df: DataFrame, pk_phys: list[str], val_phys: list[str]) -> DataFrame:
+    """Latest row per PK as ONE hash aggregation: ``max_by`` over the
+    ordering key (commit seq, intra-commit write order) — a total order
+    per row, mirroring sequential tr.Set last-wins. It partial-aggregates
+    map-side and needs no per-partition sort, unlike a row_number
+    window: the cheaper plan at any scale, and the same single shuffle
+    on the PK. Output: the PK columns and a ``__latest`` struct of the
+    value columns and the tombstone flag."""
+    return df.groupBy(*[F.col(p) for p in pk_phys]).agg(
+        F.max_by(
+            F.struct(*val_phys, DEL_COL),
+            F.struct(F.col(SEQ_COL), F.col(SUB_COL)),
+        ).alias("__latest")
+    )
 
 
 class TableStore:
@@ -552,7 +569,17 @@ class TableStore:
         tmp = os.path.join(
             self.data_path, f"commit-{seq:012d}.parquet.{uuid.uuid4().hex}.tmp"
         )
-        pq.write_table(tbl, tmp)
+        # Spark's parquet reader prunes row groups by min/max, which
+        # pyarrow computes without NaN (Spark's own writer records
+        # max=NaN): a float column holding NaN is written without
+        # statistics, or `k = NaN` and `k > inf` would prune its NaN
+        # rows away
+        stats = [
+            f.name
+            for f, a in zip(arrow, arrays)
+            if not (pa.types.is_floating(a.type) and pc.any(pc.is_nan(a)).as_py())
+        ]
+        pq.write_table(tbl, tmp, write_statistics=stats)
         if applied_marker is None:
             self._publish(tmp, fname)  # atomic + loud on seq collision
             return n
@@ -860,12 +887,7 @@ class TableStore:
             df = df.drop(BUCKET_COL)
         pk_phys = [c.physical for c in schema.key_columns]
         if as_of_seq is not None:
-            if as_of_seq < meta.get("last_compact_seq", 0):
-                raise ValueError(
-                    f"snapshot as_of_seq={as_of_seq} predates the last "
-                    f"compaction (seq {meta.get('last_compact_seq')}); "
-                    "history before a compact is collapsed"
-                )
+            self._require_history(meta, "snapshot as_of_seq", as_of_seq)
             df = df.filter(F.col(SEQ_COL) <= as_of_seq)
         # a compacted base alone needs no latest-wins agg; any snapshot
         # read re-resolves because post-compact commits may be excluded.
@@ -874,20 +896,9 @@ class TableStore:
         # in other processes and could skip resolution on a plan that
         # unioned base + log (see _raw docstring, r6)
         if has_log or as_of_seq is not None:
-            # latest-wins as ONE hash aggregation (max_by over the commit
-            # seq): partial-aggregates map-side and needs no per-partition
-            # sort, unlike a row_number window — the cheaper plan at any
-            # scale, and the same single shuffle on the PK
             val_phys = [c.physical for c in schema.columns if not c.is_key]
-            # ordering key = (commit seq, intra-commit write order) — a
-            # total order per row, mirroring sequential tr.Set last-wins
-            latest = F.max_by(
-                F.struct(*val_phys, DEL_COL),
-                F.struct(F.col(SEQ_COL), F.col(SUB_COL)),
-            ).alias("__latest")
             df = (
-                df.groupBy(*[F.col(p) for p in pk_phys])
-                .agg(latest)
+                _latest_wins(df, pk_phys, val_phys)
                 .filter(~F.col(f"__latest.{DEL_COL}"))
                 .select(
                     *pk_phys,
@@ -1334,6 +1345,30 @@ class TableStore:
             if stale:
                 self._write_meta(meta)
 
+    @staticmethod
+    def _require_history(meta: dict, what: str, seq: int) -> None:
+        """Raise when ``seq`` predates the last compaction: the history
+        before a compaction is folded into the base."""
+        if seq < meta.get("last_compact_seq", 0):
+            raise ValueError(
+                f"{what}={seq} predates the last compaction "
+                f"(seq {meta.get('last_compact_seq')}); history before a "
+                "compact is collapsed"
+            )
+
+    def _log_commits(self, from_seq: int, to_seq: int | None = None) -> list[str]:
+        """Paths of the log commits with ``from_seq < seq <= to_seq``
+        (no upper bound when ``to_seq`` is None), in seq order: commits
+        are named by sequence, so the range prunes at the listing."""
+        paths = []
+        for name in sorted(os.listdir(self.log_path)):
+            if not name.startswith("commit-"):
+                continue
+            seq = int(name.split("-")[1].split(".")[0])
+            if from_seq < seq and (to_seq is None or seq <= to_seq):
+                paths.append(os.path.join(self.log_path, name))
+        return paths
+
     def current_seq(self) -> int:
         """Latest commit sequence — the token to pass to
         ``read(as_of_seq=...)`` for a repeatable snapshot."""
@@ -1461,23 +1496,13 @@ class TableStore:
         ``read(as_of_seq=...)`` when ``from_seq`` predates the last
         compaction (collapsed history cannot be diffed)."""
         meta = self._meta()
-        if from_seq < meta.get("last_compact_seq", 0):
-            raise ValueError(
-                f"log_diff from_seq={from_seq} predates the last "
-                f"compaction (seq {meta.get('last_compact_seq')}); "
-                "history before a compact is collapsed"
-            )
+        self._require_history(meta, "log_diff from_seq", from_seq)
         schema = self.schema
         pk = [c.name for c in schema.key_columns]
         pk_phys = [c.physical for c in schema.key_columns]
         vals = [c.name for c in schema.columns if not c.is_key]
         val_phys = [c.physical for c in schema.columns if not c.is_key]
-        tail = sorted(
-            os.path.join(self.log_path, d)
-            for d in os.listdir(self.log_path)
-            if d.startswith("commit-")
-            and int(d.split("-")[1].split(".")[0]) > from_seq
-        )
+        tail = self._log_commits(from_seq)
         out_schema = T.StructType(
             [
                 T.StructField(c.name, spark_type(c.type), True)
@@ -1502,13 +1527,8 @@ class TableStore:
         if not tail:
             return spark.createDataFrame([], out_schema)
         log = spark.read.schema(self.spark_schema()).parquet(*tail)
-        latest = F.max_by(
-            F.struct(*val_phys, DEL_COL),
-            F.struct(F.col(SEQ_COL), F.col(SUB_COL)),
-        ).alias("__latest")
         new = (
-            log.groupBy(*[F.col(p) for p in pk_phys])
-            .agg(latest)
+            _latest_wins(log, pk_phys, val_phys)
             .select(
                 *pk_phys,
                 *[F.col(f"__latest.{p}").alias(f"__n_{p}") for p in val_phys],
@@ -1534,9 +1554,7 @@ class TableStore:
         if bounds["lo"] is not None:
             raw = raw.filter(F.col(lead).between(bounds["lo"], bounds["hi"]))
         old = (
-            raw.join(touched, pk_phys, "left_semi")
-            .groupBy(*[F.col(p) for p in pk_phys])
-            .agg(latest)
+            _latest_wins(raw.join(touched, pk_phys, "left_semi"), pk_phys, val_phys)
             .filter(~F.col(f"__latest.{DEL_COL}"))
             .select(
                 *pk_phys,
@@ -1710,21 +1728,9 @@ class TableStore:
             raise ValueError(
                 f"changes range inverted: from_seq={from_seq} > to_seq={to_seq}"
             )
-        meta = self._meta()
-        if from_seq < meta.get("last_compact_seq", 0):
-            raise ValueError(
-                f"changes from_seq={from_seq} predates the last compaction "
-                f"(seq {meta.get('last_compact_seq')}); history before a "
-                "compact is collapsed"
-            )
+        self._require_history(self._meta(), "changes from_seq", from_seq)
         schema = self.schema
-        paths = []
-        for name in sorted(os.listdir(self.log_path)):
-            if not name.startswith("commit-"):
-                continue
-            seq = int(name.split("-")[1].split(".")[0])
-            if from_seq < seq <= to_seq:
-                paths.append(os.path.join(self.log_path, name))
+        paths = self._log_commits(from_seq, to_seq)
         if not paths:
             base = self.spark_schema()
             empty = spark.createDataFrame([], base)

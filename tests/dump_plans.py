@@ -1,9 +1,10 @@
 """Dump .explain("formatted") for every headline-bench registry query
-into plans/r16/<query>_<tag>.txt (tag = before/after, argv[1]).
+into plans/<round>/<query>_<tag>.txt.
 
-Usage: python tests/dump_plans_r16.py before [query ...]
-(default: every registry entry named in bench.py's headline list that
-resolves to a plain (spark, sf_dir) -> DataFrame callable).
+Usage: python tests/dump_plans.py <round> <tag> [query ...]
+e.g. ``python tests/dump_plans.py r16 before`` (default queries: every
+registry entry named in bench.py's headline list that resolves to a
+plain (spark, sf_dir) -> DataFrame callable).
 
 Plans are captured at $SPARK_GRAFT_SF_DIR (default sf0.1) — the same
 scale the driver benches — so Exchange counts / join strategies match
@@ -16,12 +17,10 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
-)
+from bench import SF_DIR  # noqa: E402
 
 # the registry rows from bench.py's headline list (the non-registry bench
 # shapes — ingest/scan/wire/merge/ivf-lifecycle — are engine-path
@@ -71,14 +70,17 @@ HEADLINE_REGISTRY = [
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE_REGISTRY
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag = sys.argv[1:3]
+    names = sys.argv[3:] or HEADLINE_REGISTRY
 
     from opentick_spark.session import get_spark
     from opentick_spark.workload import ALL_QUERIES
 
-    os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_spark(app_name="dump_plans_r16")
+    out_dir = os.path.join(ROOT, "plans", rnd)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name=f"dump_plans_{rnd}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
@@ -95,7 +97,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: {type(e).__name__}: {e}")
             continue
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
         n_exch = plan.count("Exchange")

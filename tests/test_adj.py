@@ -270,3 +270,22 @@ def test_skew_buckets_window_partitions_on_bucket(spark):
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(sec" in plan and "__b" in plan, plan
+
+
+def test_split_adj_is_one_scan_equal_to_per_range_union(bar):
+    """A split ``adj`` select without LIMIT is one scan filtered by the
+    OR of its sub-ranges: ``adj`` rewrites each row by its own (sec,
+    tm), so the result equals the deduplicated, PK-sorted union of the
+    per-range selects, and the plan holds no Union of per-range
+    branches."""
+    sql = "select b, adj(c), adj(vol) from bar where a=1 and b>=? and b<=?"
+    ranges = [(3, 5), (0, 3), (99, 100)]  # 3 is in two sub-ranges
+    union = {r for lo, hi in ranges for r in bar.execute_rows(sql, lo, hi)}
+    assert bar.execute_rows(sql, ranges=ranges) == sorted(union)
+    assert len(union) == 7
+    df = bar.execute_split(sql, ranges)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan, plan
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        (b[0] * 1_000_000_000 + b[1], c, v) for b, c, v in union
+    )

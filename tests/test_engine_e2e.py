@@ -1799,15 +1799,16 @@ def test_modify_column_widen_composes_with_merge_and_append(kv):
     assert kv.execute_rows("select v from wm where k=5000000000") == [(3.5,)]
 
 
-def test_render_conds_sql_ident_guard():
-    """r15 (ADVICE r14): the single-expr() SQL fast path refuses column
-    names that are not plain identifiers (embedded backticks would
-    break the quoting; dotted names would diverge from the F.col()
-    fallback's field-access parse) — those fall back to Column
-    building. Plain identifiers still render."""
+def test_render_conds_sql_ident_guard(spark):
+    """The one SQL renderer quotes every column name in backticks,
+    doubling an embedded backtick, so a name that is not a plain
+    identifier (a backtick, a dot, a leading digit) still names its own
+    column — never a nested field — in the one ``F.expr`` filter."""
+    from pyspark.sql import functions as F
+
     from opentick_spark.catalog import ColumnDef
     from opentick_spark.dialect.resolver import Bound, ResolvedCond
-    from opentick_spark.engine import _render_conds_sql
+    from opentick_spark.engine import _conds_sql
 
     def cond(name):
         cd = ColumnDef(
@@ -1816,7 +1817,14 @@ def test_render_conds_sql_ident_guard():
         )
         return ResolvedCond(col=cd, start=Bound(1, True), end=Bound(9, False))
 
-    assert _render_conds_sql([cond("tm")]) == "`tm` >= 1 AND `tm` < 9"
-    assert _render_conds_sql([cond("we`ird")]) is None
-    assert _render_conds_sql([cond("a.b")]) is None
-    assert _render_conds_sql([cond("9lead")]) is None
+    assert _conds_sql([cond("tm")]) == "`tm` >= 1 AND `tm` < 9"
+    assert _conds_sql([cond("we`ird")]) == "`we``ird` >= 1 AND `we``ird` < 9"
+    assert _conds_sql([cond("a.b")]) == "`a.b` >= 1 AND `a.b` < 9"
+    assert _conds_sql([cond("9lead")]) == "`9lead` >= 1 AND `9lead` < 9"
+    # each row but the first fails exactly one column's range
+    df = spark.createDataFrame(
+        [(5, 5, 5), (0, 5, 5), (5, 9, 5), (5, 5, 9)],
+        "`we``ird` int, `a.b` int, `9lead` int",
+    )
+    rendered = _conds_sql([cond("we`ird"), cond("a.b"), cond("9lead")])
+    assert [tuple(r) for r in df.filter(F.expr(rendered)).collect()] == [(5, 5, 5)]

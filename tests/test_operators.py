@@ -1438,6 +1438,28 @@ def test_quality_approx_unique(spark):
 
 # -- persistent IVF index ---------------------------------------------------
 
+def test_centroid_rows_skip_hidden_files(spark, tmp_path):
+    """The local pyarrow read of a persisted index's centroids skips
+    names starting with ``_`` or ``.``: a non-empty ``_SUCCESS`` and a
+    ``.tmp`` staging file in ``centroids/`` leave its rows unchanged."""
+    from conftest import SF_DIR
+
+    from opentick_spark.operators.similarity import (
+        _centroid_rows_from_index,
+        build_ivf_index,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    path = str(tmp_path / "ivf")
+    build_ivf_index(emb, path, ncentroids=4)
+    before = _centroid_rows_from_index(spark, path)
+    assert len(before) == 4
+    cdir = tmp_path / "ivf" / "centroids"
+    (cdir / "_SUCCESS").write_bytes(b"not parquet")
+    (cdir / ".part-00000.parquet.tmp").write_bytes(b"not parquet")
+    assert _centroid_rows_from_index(spark, path) == before
+
+
 def test_ivf_index_persist_prune_and_match(spark, tmp_path):
     """build_ivf_index + ivf_topk_indexed: the persisted index must
     return exactly what the in-plan ivf_topk computes with the same

@@ -513,6 +513,7 @@ def test_row_path_select_skips_sort_exchange(spark, tmp_path):
     global orderBy (the 100 TB contract)."""
     import tempfile
 
+    from opentick_spark.dialect.resolver import bind_conds
     from opentick_spark.engine import Engine
 
     eng = Engine(spark, str(tmp_path / "wh"))
@@ -524,7 +525,8 @@ def test_row_path_select_skips_sort_exchange(spark, tmp_path):
     pid = eng.prepare("insert into t(a, b, x) values(?, ?, ?)")
     eng.batch_insert(pid, [(1, i, float(i)) for i in range(100)])
     resolved = eng._prepared[eng.prepare("select x from t where a=1")][1]
-    fast = eng._run_select(resolved, (), defer_sort=True)
+    conds = bind_conds(resolved.conds, ())
+    fast = eng._select_frame(resolved, [conds], defer_sort=True)
     fast_plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" not in fast_plan, fast_plan[:1500]
     # the PK is carried through so the driver-side sort can order on it
