@@ -17,7 +17,7 @@ Differences by construction (Spark is the server — no TCP):
   reference grants admin to localhost connections, user.go:29-83 /
   server.go:106-110); with ``permission_control=True`` it authenticates
   against ``_meta_.user`` and ACLs are enforced (C7, users.py).
-- async execution is a bounded thread pool (the reference bounds
+- async execution is a thread pool of 32 (the reference bounds
   concurrency to 100 in-flight requests per connection, server.go:245);
   results resolve through the same engine.
 
@@ -106,10 +106,12 @@ class _GroupCommitBuffer:
     (a future resolves only once its row is committed), ~1000× fewer
     files than commit-per-row."""
 
-    def __init__(self, engine: Engine, max_rows: int = 10_000, flush_ms: float = 2.0):
+    #: a bundle flushes at this many rows, or after ``FLUSH_S``
+    MAX_ROWS = 10_000
+    FLUSH_S = 0.002
+
+    def __init__(self, engine: Engine):
         self._engine = engine
-        self._max_rows = max_rows
-        self._flush_s = flush_ms / 1000.0
         # pid -> (rows list, shared _Bundle for the rows queued in the
         # current flush window)
         self._pending: dict[int, tuple[list, _Bundle]] = {}
@@ -127,7 +129,7 @@ class _GroupCommitBuffer:
                 self._pending[pid] = entry
             entry[0].append(args)
             n = len(entry[0])
-        if n >= self._max_rows:
+        if n >= self.MAX_ROWS:
             self._wake.set()
         return entry[1]
 
@@ -144,7 +146,7 @@ class _GroupCommitBuffer:
 
     def _run(self) -> None:
         while not self._stop:
-            self._wake.wait(self._flush_s)
+            self._wake.wait(self.FLUSH_S)
             self._wake.clear()
             self._flush()
 
@@ -208,16 +210,11 @@ class Connection:
         spark,
         warehouse: str,
         db_name: str | None = None,
-        max_concurrency: int = 100,
-        group_commit_rows: int = 10_000,
-        group_commit_ms: float = 2.0,
         permission_control: bool = False,
     ):
         self._engine = Engine(spark, warehouse, permission_control=permission_control)
-        self._pool = ThreadPoolExecutor(max_workers=min(max_concurrency, 32))
-        self._buffer = _GroupCommitBuffer(
-            self._engine, group_commit_rows, group_commit_ms
-        )
+        self._pool = ThreadPoolExecutor(max_workers=32)
+        self._buffer = _GroupCommitBuffer(self._engine)
         # sql text → prepared-insert pid (positive decisions only; see
         # execute_async)
         self._insert_pids: dict[str, int] = {}

@@ -11,7 +11,7 @@ from typing import Any, Optional
 from opentick_spark.catalog import ColumnDef, TableSchema
 from opentick_spark.dialect import ast
 from opentick_spark.errors import OpentickError
-from opentick_spark.typesys import validate_value
+from opentick_spark.typesys import INT64_RANGE, validate_value
 
 
 @dataclass
@@ -74,13 +74,21 @@ class ResolvedDelete:
     n_placeholders: int = 0
 
 
-def _validate_literal(col: ColumnDef, v: Any) -> Any:
+def validate_literal(col: ColumnDef, v: Any, stored: bool = False) -> Any:
+    """``validate_value`` with the reference's literal error. A ``stored``
+    value (one being inserted) of a bigint or timestamp column must also
+    fit ``INT64_RANGE``."""
+    lo, hi = INT64_RANGE
     try:
-        return validate_value(v, col.type, col.name)
+        out = validate_value(v, col.type, col.name)
+        ok = not stored or col.type not in ("bigint", "timestamp") or lo <= out <= hi
     except OpentickError:
+        ok = False
+    if not ok:
         raise OpentickError(
             f'Invalid {type(v).__name__} value ({v}) for "{col.name}" of {col.type}'
-        ) from None
+        )
+    return out
 
 
 def resolve_where(
@@ -108,7 +116,7 @@ def resolve_where(
             rhs: Any = Placeholder(n_ph)
             n_ph += 1
         else:
-            rhs = _validate_literal(col, c.rhs)
+            rhs = validate_literal(col, c.rhs)
         slot = conds[col.key_pos]
         if slot.equal is not None:
             raise OpentickError(
@@ -236,7 +244,7 @@ def resolve_insert(schema: TableSchema, node: ast.Insert) -> ResolvedInsert:
             values.append(Placeholder(n_ph))
             n_ph += 1
         else:
-            values.append(_validate_literal(col, v))
+            values.append(validate_literal(col, v, stored=True))
     if missing:
         ordered = [k.name for k in schema.key_columns if k.name in missing]
         raise OpentickError("Some primary keys are missing: " + ", ".join(ordered))
@@ -266,5 +274,5 @@ def bind_conds(conds: list[ResolvedCond], args: tuple) -> list[ResolvedCond]:
 
 def _bind_one(col: ColumnDef, v: Any, args: tuple) -> Any:
     if isinstance(v, Placeholder):
-        return _validate_literal(col, args[v.index])
+        return validate_literal(col, args[v.index])
     return v

@@ -58,15 +58,16 @@ from opentick_spark.dialect.resolver import (
     resolve_delete,
     resolve_insert,
     resolve_select,
+    validate_literal,
 )
 from opentick_spark.errors import OpentickError
 from opentick_spark.operators.adj import apply_adj
 from opentick_spark.table import TableStore
 from opentick_spark.typesys import (
     _INT_CLAMP,
+    INT64_RANGE,
     NS_PER_SEC,
     from_epoch_nanos,
-    validate_value,
 )
 
 from opentick_spark.users import (
@@ -81,11 +82,18 @@ from opentick_spark.users import (
 )
 
 
+def _fits_int64(vals: list) -> bool:
+    return not vals or (
+        INT64_RANGE[0] <= min(vals) and max(vals) <= INT64_RANGE[1]
+    )
+
+
 def _screen_coerce(t: str, vals: list) -> list | None:
     """One placeholder column's strict type screen + bulk coercion: the
     engine-native list, value-identical to ``validate_value`` per cell,
-    or None when any cell needs ``validate_value`` itself (a rejected
-    column, or a form the screen does not take). Screens use
+    or None when any cell needs ``validate_literal`` itself (a rejected
+    column, a bigint or timestamp outside ``INT64_RANGE``, or a form the
+    screen does not take). Screens use
     ``type(x) is T`` — the ``is`` comparison rejects bool (a subclass of
     int) exactly like validate_value's explicit isinstance(value, bool)
     guards."""
@@ -96,7 +104,7 @@ def _screen_coerce(t: str, vals: list) -> list | None:
         if lo_hi and vals and (min(vals) < lo_hi[0] or max(vals) > lo_hi[1]):
             lo, hi = lo_hi
             vals = [lo if x < lo else hi if x > hi else x for x in vals]
-        return vals
+        return vals if t != "bigint" or _fits_int64(vals) else None
     if t in ("double", "float"):
         if all(type(x) is float for x in vals):
             return vals
@@ -111,7 +119,8 @@ def _screen_coerce(t: str, vals: list) -> list | None:
         # ([sec,nsec], RFC3339, datetime, float) go cell by cell
         if not all(type(x) is int for x in vals):
             return None
-        return [x * NS_PER_SEC for x in vals]
+        vals = [x * NS_PER_SEC for x in vals]
+        return vals if _fits_int64(vals) else None
     if t == "boolean":
         if not all(type(x) is bool for x in vals):
             return None
@@ -125,7 +134,7 @@ def _screen_coerce(t: str, vals: list) -> list | None:
 
 def _bind_column(col, vals: list):
     """``(values, None)`` for one placeholder column, or ``(None, (row,
-    error))`` naming its first cell ``validate_value`` rejects, with the
+    error))`` naming its first cell ``validate_literal`` rejects, with the
     reference's error string. The screen takes whole columns; only a
     column it rejects is validated cell by cell."""
     out = _screen_coerce(col.type, vals)
@@ -134,15 +143,10 @@ def _bind_column(col, vals: list):
     out = []
     for r, a in enumerate(vals):
         try:
-            out.append(validate_value(a, col.type, col.name))
+            out.append(validate_literal(col, a, stored=True))
         except (OpentickError, ValueError, OverflowError) as e:
             # float()/floor() errors (NaN/inf timestamps, ints beyond
             # double range) keep their row-major place too
-            if isinstance(e, OpentickError):
-                e = OpentickError(
-                    f'Invalid {type(a).__name__} value ({a}) for '
-                    f'"{col.name}" of {col.type}'
-                )
             return None, (r, e)
     return out, None
 
@@ -767,10 +771,6 @@ class Engine:
             px_cols = [a.col.name for a in stmt.adjs if a.kind == "px"]
             vol_cols = [a.col.name for a in stmt.adjs if a.kind == "vol"]
             backward = stmt.adjs[0].backward
-            # broadcast-interval strategy: _adj_ is corporate actions —
-            # structurally tiny — so the row stream keeps its partitioning
-            # (no Exchange, skew-immune) and is ~30% faster than the
-            # sorted-merge window even unskewed (measured at sf0.1)
             df = apply_adj(
                 df,
                 adj_df,
@@ -779,7 +779,6 @@ class Engine:
                 px_cols,
                 vol_cols,
                 backward,
-                strategy="broadcast",
                 snapshot=(adj_store.path, adj_snapshot),
             )
         # implicit full-PK ordering; LIMIT -n = tail in DESCENDING order

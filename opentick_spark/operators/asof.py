@@ -1,11 +1,18 @@
 """Generic as-of join — the time-series join the reference's adj()
 specializes (adj.go's bisectRight lookup, generalized to any payload).
+The dialect's ``adj()`` is this module's broadcast interval probe over
+cumulative factors (operators/adj.py).
 
-Sorted-merge design (same as operators/adj.py): union the right side into
-the left stream tagged by kind, sort by (keys, time, kind), and resolve
-the as-of row with one window pass. One shuffle on the join keys, linear
-merge within partitions, no broadcast requirement — this is the plan that
-survives 100 TB, unlike per-row subqueries or range cross-joins.
+Sorted-merge plan (the default): union the right side into the left
+stream tagged by kind, sort by (keys, time, kind) with right rows before
+left rows at equal time, and resolve the as-of row with one window pass
+— backward takes the last right row over (unboundedPreceding..currentRow),
+which includes a right row at the left row's own time; forward takes
+the first over (1 following..unboundedFollowing), which excludes it. One
+shuffle on the join keys, linear merge within partitions, no broadcast
+requirement — the distributed form of the reference's moving-cursor
+merge scan (adj.go:162-181), and the plan that survives 100 TB, unlike
+per-row subqueries or range cross-joins.
 
 Direction semantics (matching the reference's conventions, adj.go:184-190):
 - backward: last right row with time <= left time (inclusive)
@@ -38,12 +45,10 @@ def asof_join(
     ``strategy="merge"`` (default) is the sorted-merge window above — no
     size assumption on either side. ``strategy="broadcast"`` is the
     plan for a broadcastable right side (reference data, corporate
-    events, …): each right row becomes a half-open validity interval per
-    key ([t, next_t) backward; [prev_t, t) forward), the interval table
-    is broadcast, and the left stream resolves its as-of row with a
-    broadcast-hash join + interval filter — the left side keeps its
-    partitioning, so a hyper-hot LEFT key cannot bound the stage (same
-    tradeoff as operators/adj.with_adj_factors). CAVEAT (measured,
+    events, …; the dialect's adj()): ``validity_intervals`` of the right
+    side, broadcast and probed by ``probe_intervals`` — the left side
+    keeps its partitioning, so a hyper-hot LEFT key cannot bound the
+    stage. CAVEAT (measured,
     tests/skew_drill.py): a hyper-hot RIGHT key degenerates this plan —
     the hash join matches every interval of the key then post-filters,
     so each left row scans O(intervals-of-its-key) (145 s vs 0.6 s merge
@@ -69,35 +74,9 @@ def asof_join(
     value_cols = value_cols or [
         c for c in right.columns if c not in on and c != right_time
     ]
-    # the as-of row is picked ATOMICALLY as one struct — per-column
-    # last/first(ignorenulls) would stitch together values from
-    # different right rows whenever payload columns contain NULLs
-    payload = F.struct(
-        F.col(right_time).alias("__rt"),
-        *[F.col(c).alias(c) for c in value_cols],
-    )
     if strategy == "broadcast":
-        wiv = Window.partitionBy(*on).orderBy(right_time)
-        if direction == "backward":
-            lo, hi = F.col(right_time), F.lead(right_time).over(wiv)
-        else:
-            lo, hi = F.lag(right_time).over(wiv), F.col(right_time)
-        iv = right.select(
-            *[F.col(c).alias(f"__k_{c}") for c in on],
-            payload.alias("__vrow"),
-            lo.alias("__lo"),
-            hi.alias("__hi"),
-        )
-        lt = F.col(left_time)
-        cond = F.lit(True)
-        for c in on:
-            cond = cond & (F.col(c) == F.col(f"__k_{c}"))
-        cond = (
-            cond
-            & (F.col("__lo").isNull() | (lt >= F.col("__lo")))
-            & (F.col("__hi").isNull() | (lt < F.col("__hi")))
-        )
-        join_left = left
+        iv = validity_intervals(right, on, right_time, direction, value_cols)
+        join_left, left_on = left, on
         if broadcast_buckets is not None and broadcast_buckets > 1:
             # bucket equi-key bounds the per-left-row interval scan: one
             # driver-side min/max of the left time column sizes the
@@ -110,53 +89,33 @@ def asof_join(
             llo, lhi = b["lo"], b["hi"]
             if llo is not None:
                 width = max(1, (lhi - llo) // broadcast_buckets + 1)
-                lo_c = F.greatest(
-                    F.coalesce(F.col("__lo"), F.lit(llo)), F.lit(llo)
-                )
-                hi_c = F.least(
-                    F.coalesce(F.col("__hi"), F.lit(lhi + 1)), F.lit(lhi + 1)
-                )
                 # integer div: double division would lose ulps on
-                # ns-scale longs and could mis-bucket boundary rows
+                # ns-scale longs and could mis-bucket boundary rows;
+                # greatest/least skip a NULL (unbounded) side
+                bkts = F.sequence(
+                    F.expr(f"(__lo_c - {llo}L) div {width}L"),
+                    F.expr(f"(__hi_c - 1 - {llo}L) div {width}L"),
+                )
                 iv = (
-                    iv.withColumn("__lo_c", lo_c)
-                    .withColumn("__hi_c", hi_c)
+                    iv.withColumn("__lo_c", F.greatest("__lo", F.lit(llo)))
+                    .withColumn("__hi_c", F.least("__hi", F.lit(lhi + 1)))
                     .filter(F.col("__lo_c") < F.col("__hi_c"))
-                    .withColumn(
-                        "__bkt",
-                        F.explode(
-                            F.sequence(
-                                F.expr(f"(__lo_c - {llo}L) div {width}L"),
-                                F.expr(f"(__hi_c - 1 - {llo}L) div {width}L"),
-                            )
-                        ),
-                    )
+                    .withColumn("__bkt", F.explode(bkts))
                     .drop("__lo_c", "__hi_c")
                 )
                 join_left = left.withColumn(
                     "__lbkt", F.expr(f"({left_time} - {llo}L) div {width}L")
                 )
-                cond = cond & (F.col("__lbkt") == F.col("__bkt"))
-        out = join_left.join(F.broadcast(iv), cond, "left")
-        if tolerance is not None:
-            gap = (
-                (lt - F.col("__vrow.__rt"))
-                if direction == "backward"
-                else (F.col("__vrow.__rt") - lt)
-            )
-            out = out.withColumn(
-                "__vrow",
-                F.when(F.col("__vrow").isNotNull() & (gap <= tolerance), F.col("__vrow")),
-            )
-        sel = [F.col(c) for c in left.columns] + [
-            F.col(f"__vrow.{c}").alias(c) for c in value_cols
-        ]
-        return out.select(*sel)
+                left_on = [*on, "__lbkt"]
+        out = probe_intervals(join_left, iv, left_on, left_time)
+        return _select_picked(
+            out, "__vrow", left_time, left.columns, value_cols, direction, tolerance
+        )
     tagged_r = right.select(
         *[F.col(c) for c in on],
         F.col(right_time).alias("__t"),
         F.lit(0).alias("__is_left"),
-        payload.alias("__vrow"),
+        _payload(right_time, value_cols).alias("__vrow"),
     )
     left_cols = left.columns
     tagged_l = left.select(
@@ -173,36 +132,89 @@ def asof_join(
         return _merge_bucketed(
             merged, on, left_cols, value_cols, direction, tolerance, skew_buckets
         )
-    if direction == "backward":
-        # right rows sort before left rows at equal time → inclusive
-        w = (
-            Window.partitionBy(*on)
-            .orderBy(F.col("__t"), F.col("__is_left"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        picked = F.last("__vrow", ignorenulls=True).over(w)
-    else:
-        # right rows at equal time sort before left → excluded from the
-        # strictly-following frame ⇒ first right row with time > left time
-        w = (
-            Window.partitionBy(*on)
-            .orderBy(F.col("__t"), F.col("__is_left"))
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        picked = F.first("__vrow", ignorenulls=True).over(w)
+    picked = _nearest("__vrow", on, ["__t", "__is_left"], direction)
     out = merged.withColumn("__p", picked).filter(F.col("__is_left") == 1)
-    if tolerance is not None:
-        gap = (
-            (F.col("__t") - F.col("__p.__rt"))
-            if direction == "backward"
-            else (F.col("__p.__rt") - F.col("__t"))
+    return _select_picked(
+        out, "__p", "__t", left_cols, value_cols, direction, tolerance
+    )
+
+
+def _nearest(
+    col: str, part: list[str], order: list[str], direction: str, upto: int = 0
+):
+    """The nearest non-null ``col`` of a (``part``, ``order``) window:
+    backward the last over (unboundedPreceding..``upto``), forward the
+    first over (1 following..unboundedFollowing). With right rows
+    ordered before left rows at equal time, backward then includes a
+    right row at the left row's own time and forward excludes it."""
+    w = Window.partitionBy(*part).orderBy(*order)
+    if direction == "backward":
+        return F.last(col, ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding, upto)
         )
-        keep = F.col("__p").isNotNull() & (gap <= tolerance)
-        out = out.withColumn("__p", F.when(keep, F.col("__p")))
-    sel = [F.col(c) for c in left_cols] + [
-        F.col(f"__p.{c}").alias(c) for c in value_cols
-    ]
-    return out.select(*sel)
+    return F.first(col, ignorenulls=True).over(
+        w.rowsBetween(1, Window.unboundedFollowing)
+    )
+
+
+def _payload(right_time: str, value_cols: list[str]):
+    """The as-of row as ONE struct (``__rt`` = its time, then
+    ``value_cols``): picking it atomically keeps a row's values
+    together — per-column last/first(ignorenulls) would stitch values
+    from different right rows whenever payload columns hold NULLs."""
+    return F.struct(
+        F.col(right_time).alias("__rt"),
+        *[F.col(c).alias(c) for c in value_cols],
+    )
+
+
+def validity_intervals(
+    right: DataFrame,
+    on: list[str],
+    right_time: str,
+    direction: str,
+    value_cols: list[str],
+) -> DataFrame:
+    """The broadcast plan's table: each right row as the half-open time
+    interval over which it is the as-of row of its key — ``[t, next_t)``
+    backward, ``[prev_t, t)`` forward, a NULL bound meaning unbounded.
+    Columns: ``__k_<c>`` per key of ``on``, ``__vrow`` (the payload
+    struct of ``_payload``), ``__lo``, ``__hi``."""
+    w = Window.partitionBy(*on).orderBy(right_time)
+    if direction == "backward":
+        lo, hi = F.col(right_time), F.lead(right_time).over(w)
+    else:
+        lo, hi = F.lag(right_time).over(w), F.col(right_time)
+    return right.select(
+        *[F.col(c).alias(f"__k_{c}") for c in on],
+        _payload(right_time, value_cols).alias("__vrow"),
+        lo.alias("__lo"),
+        hi.alias("__hi"),
+    )
+
+
+def probe_intervals(
+    left: DataFrame, iv: DataFrame, left_on: list[str], left_time: str
+) -> DataFrame:
+    """``left`` plus ``__vrow``, the payload of the interval holding each
+    row's ``left_time`` (NULL when none does): a broadcast-hash left join
+    of ``iv`` (``validity_intervals``, possibly with extra key columns)
+    on its key columns — every column but ``__vrow``/``__lo``/``__hi``,
+    in order, paired by position with ``left_on`` — and an interval
+    filter. The left side keeps its partitioning: no Exchange of it."""
+    iv_on = [c for c in iv.columns if c not in ("__vrow", "__lo", "__hi")]
+    lt = F.col(left_time)
+    cond = F.lit(True)
+    for lk, ik in zip(left_on, iv_on, strict=True):
+        cond = cond & (F.col(lk) == F.col(ik))
+    cond = (
+        cond
+        & (F.col("__lo").isNull() | (lt >= F.col("__lo")))
+        & (F.col("__hi").isNull() | (lt < F.col("__hi")))
+    )
+    return left.join(F.broadcast(iv), cond, "left").select(
+        *[F.col(c) for c in left.columns], "__vrow"
+    )
 
 
 def _merge_bucketed(
@@ -237,34 +249,10 @@ def _merge_bucketed(
     # extreme right payload per (key, bucket): struct max/min orders by
     # __t first; left rows contribute NULL and are ignored by the agg
     rpay = F.when(~is_left, F.struct(F.col("__t"), F.col("__vrow")))
-    if direction == "backward":
-        w = (
-            Window.partitionBy(*part)
-            .orderBy(F.col("__t"), F.col("__is_left"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        picked_in = F.last("__vrow", ignorenulls=True).over(w)
-        edge = F.max(rpay).alias("__e")
-        cw = (
-            Window.partitionBy(*on)
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carried = F.last("__e", ignorenulls=True).over(cw)
-    else:
-        w = (
-            Window.partitionBy(*part)
-            .orderBy(F.col("__t"), F.col("__is_left"))
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        picked_in = F.first("__vrow", ignorenulls=True).over(w)
-        edge = F.min(rpay).alias("__e")
-        cw = (
-            Window.partitionBy(*on)
-            .orderBy("__b")
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        carried = F.first("__e", ignorenulls=True).over(cw)
+    picked_in = _nearest("__vrow", part, ["__t", "__is_left"], direction)
+    edge = (F.max if direction == "backward" else F.min)(rpay).alias("__e")
+    # the carry-in comes from earlier (resp. later) buckets only
+    carried = _nearest("__e", on, ["__b"], direction, upto=-1)
     carry = (
         merged.groupBy(*part)
         .agg(edge)
@@ -277,16 +265,29 @@ def _merge_bucketed(
         .join(carry, part, "left")
         .withColumn("__p", F.coalesce("__pin", "__cv"))
     )
+    return _select_picked(
+        out, "__p", "__t", left_cols, value_cols, direction, tolerance
+    )
+
+
+def _select_picked(
+    out: DataFrame,
+    pick: str,
+    t: str,
+    left_cols: list[str],
+    value_cols: list[str],
+    direction: str,
+    tolerance: int | None,
+) -> DataFrame:
+    """``left_cols`` plus the ``value_cols`` of the as-of row struct
+    ``pick``; with a ``tolerance``, a row farther than it from the left
+    time ``t`` counts as no match."""
     if tolerance is not None:
-        gap = (
-            (F.col("__t") - F.col("__p.__rt"))
-            if direction == "backward"
-            else (F.col("__p.__rt") - F.col("__t"))
-        )
-        out = out.withColumn(
-            "__p", F.when(F.col("__p").isNotNull() & (gap <= tolerance), F.col("__p"))
-        )
-    sel = [F.col(c) for c in left_cols] + [
-        F.col(f"__p.{c}").alias(c) for c in value_cols
-    ]
-    return out.select(*sel)
+        rt = F.col(f"{pick}.__rt")
+        gap = (F.col(t) - rt) if direction == "backward" else (rt - F.col(t))
+        keep = F.col(pick).isNotNull() & (gap <= tolerance)
+        out = out.withColumn(pick, F.when(keep, F.col(pick)))
+    return out.select(
+        *[F.col(c) for c in left_cols],
+        *[F.col(f"{pick}.{c}").alias(c) for c in value_cols],
+    )

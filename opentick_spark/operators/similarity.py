@@ -408,17 +408,32 @@ def seed_centroids(
 _CENT_CLOSURE_MAX_FLOATS = 4_000_000
 
 
+# query-batch ceiling for ivf_topk_indexed's driver-side routing, which
+# repeats the collected batch nprobe-fold, scores it against every
+# centroid and broadcasts it: past this, fail before those allocations
+_QUERY_BATCH_MAX_FLOATS = 4_000_000
+
+
+def _guard_floats(vecs: list, bound: int, bound_name: str, what: str, fix: str):
+    """Raise when the collected vectors hold more than ``bound`` floats."""
+    n_floats = sum(len(v) for v in vecs if v is not None)
+    if n_floats > bound:
+        raise ValueError(
+            f"{what}: {len(vecs)} rows / {n_floats} floats exceeds "
+            f"{bound_name}={bound}; {fix}"
+        )
+
+
 def _guard_cent_rows(rows: list) -> list:
     """Enforce ``_CENT_CLOSURE_MAX_FLOATS`` on a collected centroid row
     list (shared by the Spark-collect and driver-parquet readers)."""
-    n_floats = sum(len(v) for _, v in rows if v is not None)
-    if n_floats > _CENT_CLOSURE_MAX_FLOATS:
-        raise ValueError(
-            f"centroid relation too large for closure routing: "
-            f"{len(rows)} rows / {n_floats} floats exceeds "
-            f"_CENT_CLOSURE_MAX_FLOATS={_CENT_CLOSURE_MAX_FLOATS}; "
-            "use a broadcast-join routing path for codebooks this size"
-        )
+    _guard_floats(
+        [v for _, v in rows],
+        _CENT_CLOSURE_MAX_FLOATS,
+        "_CENT_CLOSURE_MAX_FLOATS",
+        "centroid relation too large for closure routing",
+        "use a broadcast-join routing path for codebooks this size",
+    )
     return rows
 
 
@@ -991,6 +1006,13 @@ def ivf_topk_indexed(
     qrows = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     ).collect()
+    _guard_floats(
+        [r["qv"] for r in qrows],
+        _QUERY_BATCH_MAX_FLOATS,
+        "_QUERY_BATCH_MAX_FLOATS",
+        "query batch too large for driver-side probe routing",
+        "split the batch, or use ivf_topk, which routes on the executors",
+    )
     pa_schema = pa.schema(
         [
             pa.field(

@@ -83,7 +83,12 @@ def _latest_wins(df: DataFrame, pk_phys: list[str], val_phys: list[str]) -> Data
     map-side and needs no per-partition sort, unlike a row_number
     window: the cheaper plan at any scale, and the same single shuffle
     on the PK. Output: the PK columns and a ``__latest`` struct of the
-    value columns and the tombstone flag."""
+    value columns and the tombstone flag.
+
+    Deviation from the reference: Spark normalizes a float -0.0 to 0.0
+    when it groups, so a float PK of -0.0 comes out as 0.0 (and a
+    compaction stores it so) and -0.0 and 0.0 are one key, where the
+    reference keeps two keys."""
     return df.groupBy(*[F.col(p) for p in pk_phys]).agg(
         F.max_by(
             F.struct(*val_phys, DEL_COL),

@@ -52,6 +52,10 @@ _SPARK_TYPE = {
     "text": T.StringType(),
 }
 
+#: the stored range of a bigint or a timestamp (epoch nanos): an insert
+#: outside it is rejected (a WHERE bound is not checked against it)
+INT64_RANGE = (-(2**63), 2**63 - 1)
+
 _INT_CLAMP = {
     # saturating clamp bounds (query.go:709-728)
     "tinyint": (-128, 127),

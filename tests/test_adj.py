@@ -4,6 +4,9 @@ bar(a int, b timestamp, c double, d double, vol double, primary key(a, b));
 _adj_ rows (sec=1): (1, 0.25, 4), (3, 0.5, 2), (5, 0.2, 5).
 """
 
+from bisect import bisect_right
+from math import prod
+
 import pytest
 
 from opentick_spark.errors import OpentickError
@@ -185,17 +188,29 @@ def _skewed_frames(spark):
 
 @pytest.mark.parametrize("backward", [False, True])
 def test_broadcast_strategy_matches_merge(spark, backward):
-    """Skew hardening: the broadcast-interval plan must be value-identical
-    to the sorted-merge window plan on a skewed stream, both directions."""
+    """Skew hardening: adj's broadcast-interval plan must be value-identical
+    to the generic sorted-merge as-of join over the cumulative factors on
+    a skewed stream, both directions."""
+    from pyspark.sql import functions as F
+
     from opentick_spark.operators.adj import apply_adj
+    from opentick_spark.operators.asof import asof_join
 
     rdf, adf = _skewed_frames(spark)
-    kw = dict(
-        sec_col="sec", time_col="tm", px_cols=["px"], vol_cols=["qty"],
-        backward=backward,
+    d = "b" if backward else "f"
+    factors = cumulative_factors(adf).select("sec", "time", f"px_{d}", f"vol_{d}")
+    merge = asof_join(
+        rdf, factors, ["sec"], "tm", "time",
+        "backward" if backward else "forward", strategy="merge",
+    ).select(
+        "sec", "tm",
+        (F.col("px") * F.coalesce(f"px_{d}", F.lit(1.0))).alias("px"),
+        (F.col("qty") * F.coalesce(f"vol_{d}", F.lit(1.0))).alias("qty"),
     )
-    merge = apply_adj(rdf, adf, strategy="merge", **kw)
-    bcast = apply_adj(rdf, adf, strategy="broadcast", **kw)
+    bcast = apply_adj(
+        rdf, adf, sec_col="sec", time_col="tm", px_cols=["px"],
+        vol_cols=["qty"], backward=backward,
+    )
     a = sorted(map(tuple, merge.collect()))
     b = sorted(map(tuple, bcast.collect()))
     assert len(a) == len(b) == rdf.count()
@@ -212,7 +227,7 @@ def test_broadcast_strategy_plan_has_no_row_exchange(spark):
     rdf, adf = _skewed_frames(spark)
     df = apply_adj(
         rdf, adf, sec_col="sec", time_col="tm", px_cols=["px"],
-        vol_cols=["qty"], strategy="broadcast",
+        vol_cols=["qty"],
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -224,14 +239,6 @@ def test_broadcast_strategy_plan_has_no_row_exchange(spark):
     hash_exchanges = re.findall(r"Exchange hashpartitioning\(([^,]+),", plan)
     assert all(k.startswith("sec") for k in hash_exchanges), hash_exchanges
     assert len(hash_exchanges) <= 1, plan.count("Exchange")
-
-
-def test_invalid_strategy_rejected(spark):
-    from opentick_spark.operators.adj import with_adj_factors
-
-    rdf, adf = _skewed_frames(spark)
-    with pytest.raises(ValueError):
-        with_adj_factors(rdf, adf, "sec", "tm", False, strategy="bogus")
 
 
 @pytest.mark.parametrize("direction", ["backward", "forward"])
@@ -289,3 +296,78 @@ def test_split_adj_is_one_scan_equal_to_per_range_union(bar):
     assert sorted(tuple(r) for r in df.collect()) == sorted(
         (b[0] * 1_000_000_000 + b[1], c, v) for b, c, v in union
     )
+
+
+# -- differential check against a bisect model of adj.go ----------------
+#: _adj_ events per sec: (time, px, vol), power-of-two factors so every
+#: product is exact; zeros count as 1 (adj.go:115-120); sec 3 has none
+_EVENTS = {
+    1: [(10, 0.5, 2.0), (20, 0.0, 4.0), (30, 0.25, 0.0), (40, 2.0, 0.5)],
+    2: [(5, 4.0, 0.125)],
+}
+#: rows (sec, tm, px, vol), several exactly at event times
+_ROWS = (
+    [(1, t, 2.0 ** (t % 3), 2.0 ** -(t % 4)) for t in range(0, 50, 5)]
+    + [(2, t, 8.0, 0.5) for t in (0, 5, 9)]
+    + [(3, t, 1.0, 2.0) for t in (1, 2)]
+)
+
+
+def _model_factor(sec, tm, backward, events):
+    """adj.go's lookup: cumulative factors (forward suffix products,
+    backward prefix products of inverses), bisectRight on the event
+    times — forward takes the first event after ``tm``, backward the
+    last at or before it, 1 when there is none."""
+    ev = events.get(sec, [])
+    i = bisect_right([t for t, _, _ in ev], tm)
+    fpx = [px or 1.0 for _, px, _ in ev]
+    fvol = [vol or 1.0 for _, _, vol in ev]
+    if backward:
+        return (1 / prod(fpx[:i]), 1 / prod(fvol[:i])) if i else (1.0, 1.0)
+    return (prod(fpx[i:]), prod(fvol[i:])) if i < len(ev) else (1.0, 1.0)
+
+
+def _model_rows(rows, backward, events):
+    out = []
+    for sec, tm, px, vol in sorted(rows):
+        fp, fv = _model_factor(sec, tm, backward, events)
+        out.append(((tm, 0), px * fp, vol * fv))
+    return out
+
+
+@pytest.mark.parametrize("with_events", [True, False])
+def test_adj_matches_bisect_model(engine, with_events):
+    """Dialect ``adj`` equals the bisect model cell for cell, forward and
+    backward: every sec, rows exactly at event times, zero factors, a sec
+    without events, an empty ``_adj_``, ``LIMIT -n`` and a split read."""
+    engine.execute("create database d")
+    engine.use("d")
+    engine.execute(
+        "create table bars(sec int, tm timestamp, px double, vol double, "
+        "primary key(sec, tm))"
+    )
+    engine.batch_insert(
+        "insert into bars(sec, tm, px, vol) values(?, ?, ?, ?)", _ROWS
+    )
+    events = _EVENTS if with_events else {}
+    ev_rows = [(s, t, px, vol) for s, ev in events.items() for t, px, vol in ev]
+    if ev_rows:
+        engine.batch_insert(
+            "insert into _adj_(sec, time, px, vol) values(?, ?, ?, ?)", ev_rows
+        )
+    for backward in (False, True):
+        flag = ", true" if backward else ""
+        sel = f"select tm, adj(px{flag}), adj(vol{flag}) from bars where sec=?"
+        for sec in (1, 2, 3):
+            want = _model_rows([r for r in _ROWS if r[0] == sec], backward, events)
+            assert engine.execute_rows(sel, sec) == want, (sec, backward)
+            assert engine.execute_rows(sel + " limit -2", sec) == want[::-1][:2]
+        split = sel.replace("sec=?", "sec=1 and tm>=? and tm<=?")
+        ranges = [(0, 12), (20, 35), (30, 40)]
+        inside = [
+            r for r in _ROWS
+            if r[0] == 1 and any(lo <= r[1] <= hi for lo, hi in ranges)
+        ]
+        assert engine.execute_rows(split, ranges=ranges) == _model_rows(
+            inside, backward, events
+        )

@@ -1649,6 +1649,51 @@ def test_batch_error_order_is_row_major(kv):
     assert kv.execute_rows("select k, v from eo") == [(7, 7.0)]
 
 
+def test_insert_outside_int64_is_invalid(kv):
+    """A bigint, or a timestamp whose epoch nanos, falls outside int64
+    raises the reference's ``Invalid ... value`` error in every insert
+    form, at its row-major place, and commits nothing; the int64 limits
+    themselves land."""
+    kv.execute("create table big(a bigint, tm timestamp, primary key(a, tm))")
+    sql = "insert into big(a, tm) values(?, ?)"
+    ts_err = r'Invalid int value \(10000000000\) for "tm" of timestamp'
+    pair_err = r'Invalid list value \(\[10000000000, 123\]\) for "tm" of timestamp'
+    a_err = r'Invalid int value \(9223372036854775808\) for "a" of bigint'
+    a_low_err = r'Invalid int value \(-9223372036854775809\) for "a" of bigint'
+    for lit, err in [
+        ("(1, 10000000000)", ts_err),
+        ("(9223372036854775808, 5)", a_err),
+    ]:
+        with pytest.raises(OpentickError, match=err):
+            kv.execute(f"insert into big(a, tm) values{lit}")
+    for args, err in [
+        ((1, 10**10), ts_err),
+        ((1, [10**10, 123]), pair_err),
+        ((2**63, 5), a_err),
+        ((-(2**63) - 1, 5), a_low_err),
+    ]:
+        with pytest.raises(OpentickError, match=err):
+            kv.execute(sql, *args)
+    pid = kv.prepare(sql)
+    for n in (3, 70):  # below and above any screen size
+        pad = [(i, i) for i in range(10, 10 + n - 3)]
+        # the bad timestamp at row 1 comes before the bad bigint at row 2
+        rows = [(0, 0), (1, 10**10), (2**63, 2)] + pad
+        with pytest.raises(OpentickError, match=ts_err):
+            kv.batch_insert(pid, rows)
+        with pytest.raises(OpentickError, match=ts_err):
+            kv.batch_insert_columns(pid, [list(c) for c in zip(*rows)])
+        rows = [(0, 0), (2**63, 1), (2, [10**10, 123])] + pad
+        with pytest.raises(OpentickError, match=a_err):
+            kv.batch_insert(pid, rows)
+    assert kv.execute_rows("select a from big") == []
+    kv.batch_insert(pid, [(2**63 - 1, 9223372036), (-(2**63), -9223372036)])
+    assert kv.execute_rows("select a, tm from big") == [
+        (-(2**63), (-9223372036, 0)),
+        (2**63 - 1, (9223372036, 0)),
+    ]
+
+
 def test_text_statement_parsed_once(kv, monkeypatch):
     """A non-select text statement sent through a result shape is parsed
     once: the parse that finds it is not a select feeds its dispatch."""

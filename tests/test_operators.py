@@ -1505,6 +1505,27 @@ def test_ivf_index_persist_prune_and_match(spark, tmp_path):
     assert len(dirs) == 8
 
 
+def test_ivf_indexed_query_batch_guard(spark, tmp_path, monkeypatch):
+    """``ivf_topk_indexed`` collects the query batch to route it on the
+    driver; a batch over ``_QUERY_BATCH_MAX_FLOATS`` raises a ValueError
+    naming the bound instead of growing the driver without limit, and a
+    batch exactly at the bound still runs."""
+    from conftest import SF_DIR
+
+    from opentick_spark.operators import similarity as S
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    path = str(tmp_path / "ivf")
+    S.build_ivf_index(emb, path, ncentroids=4)
+    queries = emb.limit(3)
+    n_floats = sum(len(r["embedding"]) for r in queries.collect())
+    monkeypatch.setattr(S, "_QUERY_BATCH_MAX_FLOATS", n_floats - 1)
+    with pytest.raises(ValueError, match="_QUERY_BATCH_MAX_FLOATS"):
+        S.ivf_topk_indexed(spark, path, queries, k=2, nprobe=1)
+    monkeypatch.setattr(S, "_QUERY_BATCH_MAX_FLOATS", n_floats)
+    assert S.ivf_topk_indexed(spark, path, queries, k=2, nprobe=1).count() > 0
+
+
 def test_driver_probe_matches_udf_probe(spark):
     """r16: ivf_topk_indexed routes the query batch ON THE DRIVER with
     the same _route_matrix/_route_topk code _probe_lists' Arrow UDF

@@ -162,7 +162,7 @@ def test_factor_table_of_an_older_snapshot_leaves_newer_queries_alone(spark, wh)
     eng.execute("insert into _adj_(sec, time, px, vol) values(1, 3, 0.5, 1.0)")
     adj2, key2 = adj_st.read(spark, with_snapshot=True)
     assert key2 != key1
-    kw = dict(px_cols=["px"], vol_cols=[], strategy="broadcast")
+    kw = dict(px_cols=["px"], vol_cols=[])
     newer = apply_adj(rows, adj2, "sec", "tm", snapshot=(adj_st.path, key2), **kw)
     factor_table(adj1, False, (adj_st.path, key1))
     halved = [(t * 10**9, t * (0.5 if t < 3 else 1.0)) for t in range(1, 6)]

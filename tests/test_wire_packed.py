@@ -139,6 +139,39 @@ def test_packed_batch_insert_rejects_ragged_rows(bserver):
             c.close()
 
 
+def test_insert_outside_int64_is_invalid_on_the_wire(bserver):
+    """A timestamp beyond int64 epoch nanos in a batch gets the same
+    ``Invalid ... value`` error through the packed "3p" columns (bson)
+    and the "3" rows (json), and so does an out-of-range bigint."""
+    from opentick_spark.client import Error, connect_tcp
+
+    ts_err = r'Invalid int value \(10000000000\) for "tm" of timestamp'
+    for protocol in ("bson", "json"):
+        c = connect_tcp(bserver.host, bserver.port, protocol=protocol)
+        try:
+            if protocol == "bson":
+                c.execute("create database wpo")
+                c.use("wpo")
+                c.execute("create table t(a bigint, tm timestamp, primary key(a, tm))")
+            else:
+                c.use("wpo")
+            with pytest.raises(Error, match=ts_err):
+                c.batch_insert(
+                    "insert into t(a, tm) values(?, ?)", [(1, 5), (2, 10**10)]
+                )
+            if protocol == "json":
+                with pytest.raises(
+                    Error,
+                    match=r'Invalid int value \(9223372036854775808\) for "a" of bigint',
+                ):
+                    c.batch_insert(
+                        "insert into t(a, tm) values(?, ?)", [(1, 5), (2**63, 6)]
+                    )
+            assert c.execute("select * from t") == []
+        finally:
+            c.close()
+
+
 # ------------------------------------------------------ property testing
 from hypothesis import given, settings
 from hypothesis import strategies as st
