@@ -4,14 +4,20 @@ Reference semantics (schema.go): databases and tables are FDB directories;
 each table persists a binary-encoded schema with an ordered column list and
 a mandatory composite primary key; creating a database auto-creates its
 ``_adj_`` adjustment-factor table (schema.go:49-67, 247-262); schemas are
-cached process-wide (schema.go:444-470); rename-column rewrites only the
-schema blob, not the data (schema.go:383-418).
+cached process-wide and evicted by DDL (schema.go:367-381, 444-470);
+rename-column rewrites only the schema blob, not the data
+(schema.go:383-418).
 
 Spark-native mapping: a database is a warehouse subdirectory; a table is a
 directory holding ``_schema.json`` plus an append-log of Parquet files.
 Column renames update only the schema JSON — each column keeps a stable
 *physical* name (its name at creation), and reads alias physical→logical,
 mirroring the reference's positional storage.
+
+A process holds one ``Catalog`` per warehouse (``Catalog.shared``): every
+``Engine`` on it shares its schema cache and its ``TableStore`` per table,
+so a DDL through one connection is seen by the next statement of every
+other; an ``Engine`` keeps only session state.
 """
 
 from __future__ import annotations
@@ -20,7 +26,8 @@ import json
 import os
 import shutil
 import threading
-from dataclasses import dataclass, field
+import weakref
+from dataclasses import dataclass, field, replace
 
 from opentick_spark.errors import OpentickError
 from opentick_spark.typesys import parse_type_name
@@ -146,8 +153,34 @@ ADJ_COLS = [("sec", "int"), ("time", "timestamp"), ("px", "double"), ("vol", "do
 ADJ_PK = ["sec", "time"]
 
 
+#: the process's catalogs by warehouse real path, held weakly: a
+#: warehouse no Engine uses any more is freed with its caches
+_SHARED: weakref.WeakValueDictionary = weakref.WeakValueDictionary()
+_SHARED_LOCK = threading.Lock()
+
+
 class Catalog:
-    """Filesystem-backed catalog with a process-wide schema cache."""
+    """The owner of one warehouse's state in a process: its databases and
+    tables on disk, the schema cache and one ``TableStore`` per table.
+    Every DDL method evicts what it changes from both caches; column DDL
+    evicts no store, because a store reads its schema from this catalog
+    and its plan cache is keyed by that schema.
+
+    ``Catalog(path)`` builds an independent catalog (a stand-in for
+    another process); ``Catalog.shared(path)`` returns the process's one
+    catalog of that warehouse, which every ``Engine`` uses."""
+
+    @classmethod
+    def shared(cls, warehouse: str) -> "Catalog":
+        from opentick_spark.fsutil import require_local_path
+
+        key = os.path.realpath(require_local_path(warehouse, "Catalog warehouse"))
+        with _SHARED_LOCK:
+            cat = _SHARED.get(key)
+            if cat is None:
+                cat = _SHARED[key] = cls(warehouse)
+        os.makedirs(warehouse, exist_ok=True)  # it may have been removed since
+        return cat
 
     def __init__(self, warehouse: str):
         from opentick_spark.fsutil import require_local_path
@@ -159,6 +192,7 @@ class Catalog:
         self.warehouse = require_local_path(warehouse, "Catalog warehouse")
         os.makedirs(warehouse, exist_ok=True)
         self._cache: dict[tuple[str, str], TableSchema] = {}
+        self._stores: dict = {}  # (db, table) -> TableStore
         self._lock = threading.RLock()
 
     # ---- paths -----------------------------------------------------------
@@ -175,7 +209,9 @@ class Catalog:
             if if_not_exists:
                 return
             raise OpentickError(f"Database {db} already exists")
-        os.makedirs(path)
+        with self._lock:
+            self._evict(db)  # a database removed outside this catalog
+            os.makedirs(path)
         # every database auto-contains its adjustment table (schema.go:65)
         self.create_table(db, ADJ_TABLE, ADJ_COLS, ADJ_PK)
 
@@ -187,9 +223,7 @@ class Catalog:
             raise OpentickError(f"Database {db} does not exist")
         with self._lock:
             shutil.rmtree(path)
-            self._cache = {
-                k: v for k, v in self._cache.items() if k[0] != db
-            }
+            self._evict(db)
 
     def list_databases(self) -> list[str]:
         return sorted(
@@ -219,9 +253,9 @@ class Catalog:
             raise OpentickError(f"Table {db}.{name} already exists")
         schema = build_schema(db, name, col_defs, pk)
         os.makedirs(os.path.join(path, "data"))
-        self._write_schema(schema)
         with self._lock:
-            self._cache[(db, name)] = schema
+            self._evict(db, name)  # a table removed outside this catalog
+            self._write_schema(schema)
         return schema
 
     def drop_table(self, db: str, name: str, if_exists: bool = False) -> None:
@@ -232,7 +266,7 @@ class Catalog:
             raise OpentickError(f"Table {db}.{name} does not exist")
         with self._lock:
             shutil.rmtree(path)
-            self._cache.pop((db, name), None)
+            self._evict(db, name)
 
     def list_tables(self, db: str) -> list[str]:
         if not self.has_database(db):
@@ -260,6 +294,30 @@ class Catalog:
             self._cache[(db, name)] = schema
         return schema
 
+    def store(self, db: str, name: str):
+        """The one ``TableStore`` of ``db.name`` in this catalog. A store
+        opened before runs its recovery check again (two lock-free stats
+        and a listdir): a compaction killed in another process is
+        repaired on the next lookup, and a lookup that meets a
+        compaction in flight waits for it."""
+        from opentick_spark.table import TableStore
+
+        with self._lock:
+            st = self._stores.get((db, name))
+            if st is None:
+                self.get_schema(db, name)  # existence check
+                st = self._stores[(db, name)] = TableStore(self, db, name)
+                return st
+        st._recover_if_needed()
+        return st
+
+    def _evict(self, db: str, name: str | None = None) -> None:
+        """Drop the cached schemas and stores of ``db.name``, or of every
+        table of ``db``. Caller holds ``self._lock``."""
+        for cache in (self._cache, self._stores):
+            for k in [k for k in cache if k[0] == db and name in (None, k[1])]:
+                del cache[k]
+
     def rename_table(self, db: str, old: str, new: str) -> None:
         old_path = self.table_path(db, old)
         new_path = self.table_path(db, new)
@@ -268,15 +326,11 @@ class Catalog:
         if os.path.exists(new_path):
             raise OpentickError(f"Table {db}.{new} already exists")
         with self._lock:
-            schema = self.get_schema(db, old)
-            schema = TableSchema(
-                db=db, name=new, columns=schema.columns,
-                retired_physicals=schema.retired_physicals,
-            )
+            schema = replace(self.get_schema(db, old), name=new)
             os.rename(old_path, new_path)
+            self._evict(db, old)
+            self._evict(db, new)
             self._write_schema(schema)
-            self._cache.pop((db, old), None)
-            self._cache[(db, new)] = schema
 
     def rename_column(self, db: str, table: str, old: str, new: str) -> None:
         """Schema-only rewrite; data files keep the physical name
@@ -289,22 +343,10 @@ class Catalog:
             if schema.col(new) is not None:
                 raise OpentickError(f"Column {new} already exists")
             cols = [
-                ColumnDef(
-                    name=new if c.name == old else c.name,
-                    type=c.type,
-                    is_key=c.is_key,
-                    key_pos=c.key_pos,
-                    pos_col=c.pos_col,
-                    physical=c.physical,
-                )
+                replace(c, name=new) if c.name == old else c
                 for c in schema.columns
             ]
-            schema = TableSchema(
-                db=db, name=table, columns=cols,
-                retired_physicals=schema.retired_physicals,
-            )
-            self._write_schema(schema)
-            self._cache[(db, table)] = schema
+            self._write_schema(replace(schema, columns=cols))
 
     def add_column(self, db: str, table: str, name: str, type_name: str) -> None:
         """Schema evolution (extension, r8): append a NULLABLE value
@@ -342,12 +384,7 @@ class Catalog:
                     physical=physical,
                 )
             ]
-            schema = TableSchema(
-                db=db, name=table, columns=cols,
-                retired_physicals=schema.retired_physicals,
-            )
-            self._write_schema(schema)
-            self._cache[(db, table)] = schema
+            self._write_schema(replace(schema, columns=cols))
 
     #: provably-lossless type promotions. The read path relies on Spark 4's
     #: parquet widening conversions (int32→int64, float→double, …), so old
@@ -370,12 +407,11 @@ class Catalog:
         lossless promotion). Hash-bucketed layouts: stored ``__bucket``
         values go stale when the LEADING PK widens across xxhash64
         width classes (int-family→bigint, float→double). The read path
-        self-heals — ``compact`` records ``bucket_hash_class`` and
-        ``TableStore._effective_buckets`` ignores a layout whose class
-        no longer matches, so even a direct caller of this method gets
-        correct (unpruned) reads; the ENGINE's MODIFY dispatch
-        additionally drops the stale metadata eagerly
-        (``invalidate_hash_buckets``)."""
+        guards itself: ``compact`` records ``bucket_hash_class`` and
+        ``TableStore._effective_buckets`` prunes only with a layout whose
+        class matches the current lead type, so a widened table reads
+        unpruned (and correct) until its next
+        ``compact(hash_buckets=N)`` re-buckets it."""
         from opentick_spark.typesys import parse_type_name
 
         with self._lock:
@@ -392,22 +428,10 @@ class Catalog:
                     "only widening conversions are supported"
                 )
             cols = [
-                c if c.name != name else ColumnDef(
-                    name=c.name,
-                    type=t,
-                    is_key=c.is_key,
-                    key_pos=c.key_pos,
-                    pos_col=c.pos_col,
-                    physical=c.physical,
-                )
+                replace(c, type=t) if c.name == name else c
                 for c in schema.columns
             ]
-            schema = TableSchema(
-                db=db, name=table, columns=cols,
-                retired_physicals=schema.retired_physicals,
-            )
-            self._write_schema(schema)
-            self._cache[(db, table)] = schema
+            self._write_schema(replace(schema, columns=cols))
 
     def drop_column(self, db: str, table: str, name: str) -> None:
         """Schema evolution (extension, r10): drop a VALUE column.
@@ -440,27 +464,19 @@ class Catalog:
                 key_pos = c.key_pos if c.is_key else n_val
                 if not c.is_key:
                     n_val += 1
-                cols.append(
-                    ColumnDef(
-                        name=c.name,
-                        type=c.type,
-                        is_key=c.is_key,
-                        key_pos=key_pos,
-                        pos_col=pos,
-                        physical=c.physical,
-                    )
-                )
-            schema = TableSchema(
-                db=db, name=table, columns=cols,
-                retired_physicals=list(schema.retired_physicals)
-                + [col.physical],
-            )
-            self._write_schema(schema)
-            self._cache[(db, table)] = schema
+                cols.append(replace(c, key_pos=key_pos, pos_col=pos))
+            self._write_schema(replace(
+                schema, columns=cols,
+                retired_physicals=schema.retired_physicals + [col.physical],
+            ))
 
     def _write_schema(self, schema: TableSchema) -> None:
+        """Persist ``schema`` and cache it: every DDL change caches a new
+        schema object (plan caches compare schemas). Caller holds
+        ``self._lock``."""
         path = os.path.join(self.table_path(schema.db, schema.name), "_schema.json")
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(schema.to_json(), f)
         os.replace(tmp, path)
+        self._cache[(schema.db, schema.name)] = schema

@@ -191,6 +191,72 @@ def _update_user_rows(select_rows, perm, is_admin):
     return (name, password, new_admin, new_perm)
 
 
+class _UserAdmin:
+    """User management shared by both clients (reference client parity,
+    bindings/python/opentick/client.py:122-168): users are rows of the
+    ordinary ``_meta_.user`` PK table, so each method is plain SQL
+    through the transport's ``execute(sql, args, cache=False)`` followed
+    by its ``reload_users()``. ``cache=False``: a read-modify-write must
+    never see a TTL-stale reply-cache row (a recreate after delete would
+    be refused, a merge into a stale row would revert grants)."""
+
+    _users_ready = False  # _meta_.user bootstrap done once
+
+    def _ensure_users(self) -> None:
+        """One-time bootstrap: LoadUsers creates _meta_.user if absent
+        (the reference runs it at boot, user.go:28-62); later calls skip
+        the extra round trip."""
+        if not self._users_ready:
+            self.reload_users()
+            self._users_ready = True
+
+    def create_user(
+        self, username: str, password: str, is_admin: bool = False,
+        perm: str = "",
+    ) -> None:
+        from opentick_spark.users import sha1_string
+
+        self._ensure_users()
+        if self.execute(
+            "select name from _meta_.user where name=?", (username,),
+            cache=False,
+        ):
+            raise Error("User already exist")
+        self.execute(
+            "insert into _meta_.user values(?, ?, ?, ?)",
+            (username, sha1_string(password), is_admin, perm), cache=False,
+        )
+        self.reload_users()
+
+    def delete_user(self, username: str) -> None:
+        self._ensure_users()
+        self.execute(
+            "delete from _meta_.user where name=?", (username,), cache=False
+        )
+        self.reload_users()
+
+    def update_user(self, username: str, perm=None, is_admin=None) -> None:
+        """str ``perm`` replaces; dict merges (None deletes a key,
+        'read'/'write' sets) — reference client.py:144-166."""
+        self._ensure_users()
+        row = _update_user_rows(
+            self.execute(
+                "select * from _meta_.user where name=?", (username,),
+                cache=False,
+            ),
+            perm, is_admin,
+        )
+        self.execute("insert into _meta_.user values(?, ?, ?, ?)", row, cache=False)
+        self.reload_users()
+
+    def list_users(self) -> list[str]:
+        self._ensure_users()
+        return sorted(
+            r[0]
+            for r in self.execute("select name from _meta_.user", cache=False)
+        )
+
+
 def _chunked(args_array: list, batch_size: int, idempotency_key: str | None):
     """Yield ``(chunk, chunk_key)`` pairs for chunked batch sends. The
     chunk GEOMETRY is part of the derived key (``key#batch_size#n``): a
@@ -204,7 +270,7 @@ def _chunked(args_array: list, batch_size: int, idempotency_key: str | None):
         yield args_array[i : i + batch_size], key
 
 
-class Connection:
+class Connection(_UserAdmin):
     def __init__(
         self,
         spark,
@@ -245,46 +311,16 @@ class Connection:
     def use(self, db_name: str) -> None:
         self._engine.use(db_name)
 
-    # -- user management (C7: user.go + server.go meta commands) -------
-    def create_user(
-        self, name: str, password: str, is_admin: bool = False, perm: str = ""
-    ) -> None:
-        self._engine.create_user(name, password, is_admin, perm)
-
+    # -- user management (C7: user.go + server.go meta commands; the
+    # rest is _UserAdmin) ----------------------------------------------
     def chgpasswd(self, new_password: str) -> None:
         self._engine.chgpasswd(new_password)
 
     def reload_users(self) -> None:
         self._engine.reload_users()
 
-    def delete_user(self, username: str) -> None:
-        """Reference client parity (client.py:122-124): user rows live
-        in the ordinary ``_meta_.user`` PK table, so deletion is plain
-        SQL + a reload of the in-process user map."""
-        self._engine.execute("delete from _meta_.user where name=?", username)
-        self._engine.reload_users()
-
-    def update_user(self, username: str, perm=None, is_admin=None) -> None:
-        """Reference client parity (client.py:144-166): read the user's
-        row, merge ``perm`` (str replaces; dict merges — None deletes a
-        key, 'read'/'write' sets), optionally flip ``is_admin``, and
-        upsert the row back (S7 insert-as-upsert)."""
-        row = _update_user_rows(
-            self._engine.execute_rows(
-                "select * from _meta_.user where name=?", username
-            ),
-            perm, is_admin,
-        )
-        self._engine.execute("insert into _meta_.user values(?, ?, ?, ?)", *row)
-        self._engine.reload_users()
-
     def set_auto_reconnect(self, interval) -> None:
         return  # parity no-op: in-process transport cannot disconnect
-
-    def list_users(self) -> list[str]:
-        if not self._engine.users.users:
-            self._engine.users.load()
-        return sorted(self._engine.users.users)
 
     # -- meta ----------------------------------------------------------
     def list_databases(self) -> list[str]:
@@ -453,7 +489,7 @@ def connect(
     return Connection(spark, warehouse, db_name, permission_control=permission_control)
 
 
-class TCPConnection:
+class TCPConnection(_UserAdmin):
     """Wire client for :class:`opentick_spark.server.OpentickServer` —
     the reference client's transport behavior (bindings/python/opentick/
     client.py: recv thread, ticketed futures, heartbeat tolerance
@@ -502,7 +538,6 @@ class TCPConnection:
         # reference client.py:87,109-111,377-379: seconds between
         # reconnect attempts; < 1 disables auto-reconnect entirely
         self._auto_reconnect = 1
-        self._users_ready = False  # _meta_.user bootstrap done once
         self._connect()
         if db_name:
             self.use(db_name)
@@ -1099,73 +1134,14 @@ class TCPConnection:
         rows = self._result(self._request({"1": "meta", "2": "server_stats"}))
         return {k: v for k, v in rows}
 
-    # -- user management over the wire (reference client parity: users
-    # are rows of the ordinary _meta_.user PK table, client.py:122-168;
-    # reload/chgpasswd are meta commands, server.go:440-441) -----------
+    # -- user management over the wire: reload/chgpasswd are meta
+    # commands (server.go:440-441); the rest is _UserAdmin ------------
     def reload_users(self) -> None:
         self._result(self._request({"1": "meta", "2": "reload_users"}))
-        self._users_ready = True
-
-    def _ensure_users(self) -> None:
-        """One-time bootstrap: server-side LoadUsers creates _meta_.user
-        if absent (the reference runs it at boot, user.go:28-62); later
-        calls skip the extra round trip."""
-        if not getattr(self, "_users_ready", False):
-            self.reload_users()
 
     def chgpasswd(self, password: str) -> None:
         self._result(
             self._request({"1": "meta", "2": "chgpasswd", "3": password})
-        )
-
-    def create_user(
-        self, username: str, password: str, is_admin: bool = False,
-        perm: str = "",
-    ) -> None:
-        from opentick_spark.users import sha1_string
-
-        self._ensure_users()
-        # cache=False: a read-modify-write must never see a TTL-stale
-        # reply-cache row (a recreate after delete would be refused)
-        if self.execute(
-            "select name from _meta_.user where name=?", (username,),
-            cache=False,
-        ):
-            raise Error("User already exist")
-        self.execute(
-            "insert into _meta_.user values(?, ?, ?, ?)",
-            (username, sha1_string(password), is_admin, perm),
-        )
-        self.reload_users()
-
-    def delete_user(self, username: str) -> None:
-        self._ensure_users()
-        self.execute("delete from _meta_.user where name=?", (username,))
-        self.reload_users()
-
-    def update_user(self, username: str, perm=None, is_admin=None) -> None:
-        """str ``perm`` replaces; dict merges (None deletes a key,
-        'read'/'write' sets) — reference client.py:144-166."""
-        self._ensure_users()
-        # cache=False: merging into a TTL-stale cached row would
-        # silently revert grants applied since the cache fill
-        row = _update_user_rows(
-            self.execute(
-                "select * from _meta_.user where name=?", (username,),
-                cache=False,
-            ),
-            perm, is_admin,
-        )
-        self.execute("insert into _meta_.user values(?, ?, ?, ?)", row)
-        self.reload_users()
-
-    def list_users(self) -> list[str]:
-        self._ensure_users()
-        return sorted(
-            r[0]
-            for r in self.execute(
-                "select name from _meta_.user", cache=False
-            )
         )
 
 

@@ -249,13 +249,14 @@ class Engine:
         keeping reads on the window-free sorted-base path during long
         ingest sessions (the LSM compaction analog)."""
         self.spark = spark
-        self.catalog = Catalog(warehouse)
+        # warehouse state (schemas, table stores) belongs to the process's
+        # one catalog of this warehouse; the Engine keeps session state
+        self.catalog = Catalog.shared(warehouse)
         self.current_db: str | None = None
         self._prepared: dict[int, tuple[str, Any]] = {}
         self._prepared_by_sql: dict[str, int] = {}
         self._prepared_ids = itertools.count(1)
         self._lock = threading.RLock()
-        self._stores: dict[tuple[str, str], TableStore] = {}
         self.auto_compact_every = auto_compact_every
         # C7 permission control (user.go; server.go:34-35): off → every
         # caller is an implicit admin (user=None short-circuits get_perm)
@@ -317,14 +318,7 @@ class Engine:
         )
 
     def store(self, db: str, table: str) -> TableStore:
-        with self._lock:
-            key = (db, table)
-            st = self._stores.get(key)
-            if st is None:
-                self.catalog.get_schema(db, table)  # existence check
-                st = TableStore(self.catalog, db, table)
-                self._stores[key] = st
-            return st
+        return self.catalog.store(db, table)
 
     def _db_of(self, t: ast.TableName) -> str:
         db = t.db or self.current_db
@@ -419,13 +413,11 @@ class Engine:
             db = self._db_of(node.table)
             require_perm(self.user, db, node.table.name, WRITE_PERM)
             self.catalog.drop_table(db, node.table.name)
-            self._stores.pop((db, node.table.name), None)
             return None
         if isinstance(node, ast.RenameTable):
             db = self._db_of(node.table)
             require_perm(self.user, db, node.table.name, WRITE_PERM)
             self.catalog.rename_table(db, node.table.name, node.new_name)
-            self._stores.pop((db, node.table.name), None)
             return None
         if isinstance(node, ast.RenameColumn):
             db = self._db_of(node.table)
@@ -436,34 +428,16 @@ class Engine:
             db = self._db_of(node.table)
             require_perm(self.user, db, node.table.name, WRITE_PERM)
             self.catalog.add_column(db, node.table.name, node.name, node.type)
-            # cached stores carry the pre-evolution schema snapshot
-            self._stores.pop((db, node.table.name), None)
             return None
         if isinstance(node, ast.DropColumn):
             db = self._db_of(node.table)
             require_perm(self.user, db, node.table.name, WRITE_PERM)
             self.catalog.drop_column(db, node.table.name, node.name)
-            self._stores.pop((db, node.table.name), None)
             return None
         if isinstance(node, ast.ModifyColumn):
             db = self._db_of(node.table)
             require_perm(self.user, db, node.table.name, WRITE_PERM)
-            schema = self.catalog.get_schema(db, node.table.name)
-            lead = schema.key_columns[0]
-            # a widened leading PK changes its xxhash64 width class when
-            # it crosses into bigint/double — stored __bucket values are
-            # then stale, so drop the pruning metadata BEFORE the schema
-            # write (readers must never see widened schema + old buckets).
-            # Gated on the widen being legal so a rejected/no-op MODIFY
-            # never costs the layout its pruning.
-            if (
-                lead.name == node.name
-                and node.type in ("bigint", "double")
-                and node.type in Catalog._WIDEN.get(lead.type, ())
-            ):
-                self.store(db, node.table.name).invalidate_hash_buckets()
             self.catalog.modify_column(db, node.table.name, node.name, node.type)
-            self._stores.pop((db, node.table.name), None)
             return None
         return self._run_resolved(self._resolve(node), args)
 
@@ -765,21 +739,15 @@ class Engine:
                 F.expr(" OR ".join(f"({_conds_sql(d)})" for d in disjuncts))
             )
         if stmt.adjs:
-            adj_store = self.store(schema.db, ADJ_TABLE)
-            adj_df, adj_snapshot = adj_store.read(self.spark, with_snapshot=True)
             keys = schema.key_columns
-            px_cols = [a.col.name for a in stmt.adjs if a.kind == "px"]
-            vol_cols = [a.col.name for a in stmt.adjs if a.kind == "vol"]
-            backward = stmt.adjs[0].backward
             df = apply_adj(
                 df,
-                adj_df,
+                self.store(schema.db, ADJ_TABLE),
                 keys[0].name,
                 keys[-1].name,
-                px_cols,
-                vol_cols,
-                backward,
-                snapshot=(adj_store.path, adj_snapshot),
+                [a.col.name for a in stmt.adjs if a.kind == "px"],
+                [a.col.name for a in stmt.adjs if a.kind == "vol"],
+                stmt.adjs[0].backward,
             )
         # implicit full-PK ordering; LIMIT -n = tail in DESCENDING order
         pk = schema.pk_names
@@ -847,17 +815,12 @@ class Engine:
         self._maybe_auto_compact(st)
 
     def _maybe_auto_compact(self, st) -> None:
-        if not (
-            self.auto_compact_every
-            and st.commits_since_compact() >= self.auto_compact_every
-        ):
+        if not self.auto_compact_every:
             return
         from opentick_spark.table import CompactionFoldError
 
         try:
-            st.compact(
-                self.spark, hash_buckets=st._meta().get("hash_buckets")
-            )
+            st.maybe_compact(self.spark, self.auto_compact_every - 1)
         except CompactionFoldError:
             # opportunistic maintenance must not fail a COMMITTED
             # insert: the strict marker fold (r11) aborts compaction

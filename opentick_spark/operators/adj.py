@@ -21,30 +21,21 @@ The dialect's ``adj()`` probes a **snapshot-keyed factor table** — the analog
 of the reference's per-(db, sec) cumulative factor cache, which it
 invalidates when ``_adj_`` changes (adj.go:34-47). Here the cache unit is
 the whole ``_adj_`` snapshot: ``factor_table`` computes the factor
-intervals once per snapshot key (``TableStore.read(with_snapshot=True)``)
-and holds them as a materialized relation, so a repeated ``adj`` query
-runs the broadcast of that relation plus its scan instead of recomputing
-the factor windows. An ``_adj_`` commit or compaction changes the key,
-and the next query replaces the table with the new snapshot's.
+intervals once per snapshot and session, held in the ``_adj_`` store's
+snapshot cache (``TableStore.cached``) as a materialized relation, so a
+repeated ``adj`` query runs the broadcast of that relation plus its scan
+instead of recomputing the factor windows. The catalog holds one store
+per table for every Engine on a warehouse, so every connection shares
+that table. An ``_adj_`` commit or compaction changes the snapshot, and
+the next query replaces the table with the new snapshot's.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opentick_spark.operators.asof import probe_intervals, validity_intervals
-
-#: factor tables: (session, ``_adj_`` location, backward) ->
-#: (snapshot key, intervals). Process-wide: every Engine on a warehouse
-#: (one per wire connection) shares one table per snapshot, and a closed
-#: connection leaves no entry behind. Bounded: past
-#: ``_MAX_FACTOR_TABLES`` the least recently used slot is dropped.
-_FACTOR_TABLES: dict[tuple, tuple] = {}
-_FACTOR_LOCK = threading.Lock()
-_MAX_FACTOR_TABLES = 64
 
 
 def cumulative_factors(adj_df: DataFrame) -> DataFrame:
@@ -90,57 +81,50 @@ def _intervals(adj_df: DataFrame, backward: bool) -> DataFrame:
     return validity_intervals(factors, ["sec"], "time", direction, ["px", "vol"])
 
 
-def factor_table(adj_df: DataFrame, backward: bool, snapshot: tuple) -> DataFrame:
-    """The factor intervals of one ``_adj_`` snapshot, materialized once
-    and reused until the snapshot changes (module docstring).
+def factor_table(adj_store, spark, backward: bool) -> DataFrame:
+    """The factor intervals of the ``_adj_`` store's current snapshot,
+    materialized once per snapshot and session and reused until the
+    snapshot changes (module docstring).
 
-    ``snapshot`` is ``(location, key)``: where ``adj_df`` was read from
-    and the ``TableStore.read`` snapshot key it was read at. The table is
-    a lazy ``localCheckpoint``, not a ``persist``: Spark's cache matches
-    plans, and a file scan's plan names its root paths, not its files,
-    so a persisted table of one snapshot would also be served to a query
-    of another (connections share this registry and the session). A
-    checkpoint's plan is its own RDD, which nothing else matches. A
-    replaced table is not unpersisted: a query of another connection may
-    still be running on it, so its blocks are left to Spark's
-    ContextCleaner, which frees them once no DataFrame refers to it."""
-    where, key = snapshot
-    slot = (adj_df.sparkSession, where, backward)
-    with _FACTOR_LOCK:
-        hit = _FACTOR_TABLES.pop(slot, None)
-        if hit is None or hit[0] != key:
-            # one partition: the table is tiny, and each query's
-            # broadcast then reads it in one task
-            iv = _intervals(adj_df, backward).coalesce(1)
-            hit = (key, iv.localCheckpoint(eager=False))
-        _FACTOR_TABLES[slot] = hit
-        while len(_FACTOR_TABLES) > _MAX_FACTOR_TABLES:
-            _FACTOR_TABLES.pop(next(iter(_FACTOR_TABLES)))
-        return hit[1]
+    The table is a lazy ``localCheckpoint``, not a ``persist``: Spark's
+    cache matches plans, and a file scan's plan names its root paths,
+    not its files, so a persisted table of one snapshot would also be
+    served to a query of another (connections share the store and the
+    session). A checkpoint's plan is its own RDD, which nothing else
+    matches. A replaced table is not unpersisted: a query of another
+    connection may still be running on it, so its blocks are left to
+    Spark's ContextCleaner, which frees them once no DataFrame refers to
+    it."""
+    # one partition: the table is tiny, and each query's broadcast then
+    # reads it in one task
+    return adj_store.cached(
+        spark,
+        "adj_backward" if backward else "adj_forward",
+        lambda adj_df: _intervals(adj_df, backward).coalesce(1).localCheckpoint(eager=False),
+    )
 
 
 def apply_adj(
     rows: DataFrame,
-    adj_df: DataFrame,
+    adj,
     sec_col: str,
     time_col: str,
     px_cols: list[str],
     vol_cols: list[str],
     backward: bool = False,
-    snapshot: tuple | None = None,
 ) -> DataFrame:
     """Multiply ``px_cols`` by the as-of price factor and ``vol_cols`` by
     the volume factor (applyFunc, adj.go:142-202), 1 where no event
     applies; column names/positions are preserved, mirroring the
-    reference's in-place row rewriting. With a ``snapshot`` (see
-    ``factor_table``) and a non-None key, the probe reuses the
-    snapshot's materialized factor table."""
+    reference's in-place row rewriting. ``adj`` is the raw ``_adj_``
+    rows as a DataFrame, or the ``_adj_`` ``TableStore``, whose
+    snapshot's materialized ``factor_table`` the probe then reuses."""
     if not px_cols and not vol_cols:
         return rows
-    if snapshot is not None and snapshot[1] is not None:
-        iv = factor_table(adj_df, backward, snapshot)
+    if isinstance(adj, DataFrame):
+        iv = _intervals(adj, backward)
     else:
-        iv = _intervals(adj_df, backward)
+        iv = factor_table(adj, rows.sparkSession, backward)
     probed = probe_intervals(rows, iv, [sec_col], time_col)
     exprs = []
     for c in rows.columns:

@@ -1175,6 +1175,11 @@ def duplicate_spans(
     concat feeding two string hashes). Tokens are whitespace-split, so
     the space join is injective here.
 
+    Contract: the counts are probabilistic, not exact. Two different
+    grams share a count with probability ≈2^-128 per pair, and only in
+    the random model: both seeds hash the same input with the same
+    non-cryptographic function, so crafted inputs can force a merge.
+
     Output (one row per input doc): id, n_spans, dup_windows,
     dup_tokens (union coverage in tokens), total_tokens, dup_frac.
     """
@@ -1735,6 +1740,12 @@ def line_dedup(
     in one window partition — a linear count over co-located rows,
     the same exposure as the groupBy/join it replaces; see
     tests/skew_drill_linededup.py for the 60%-hot-line drill.
+
+    Contract: the line counts key on a two-seed xxhash64 pair (see the
+    comment below), so they are probabilistic, not exact. Two different
+    lines share a count with probability ≈2^-128 per pair, and only in
+    the random model: xxhash64 is not cryptographic, so crafted lines
+    can force a merge.
 
     ``delim`` is used as BOTH the split regex and the rejoin literal,
     so it must be a regex-safe literal string (the '\\n' default is).

@@ -3,12 +3,14 @@ commit log — keep a SUM/COUNT-shaped aggregate current by applying a
 snapshot diff to persisted state instead of rescanning the fact table.
 
 The 100 TB story: a day's delta is MBs against a corpus that is TBs.
-`TableStore.diff(from_seq, include_old=True)` is delta-sized (one
-co-partitioned full-outer join over base+log, table.py:726); the
-signed-delta aggregate below shuffles only diff rows on the group key;
-the merge joins #groups-sized state with #touched-groups-sized delta.
-Nothing in the maintenance path is proportional to the full table —
-the fact data is read only for the rows the diff surfaces.
+The diff's OUTPUT is delta-sized, but computing it is not:
+`TableStore.diff(from_seq, include_old=True)` resolves both snapshots
+and full-outer-joins them, two table-sized latest-wins shuffles plus a
+table-sized join; `TableStore.log_diff` is the delta-sized form (the
+log tail plus a point lookup of the touched keys). Downstream of the
+diff, the signed-delta aggregate below shuffles only diff rows on the
+group key, and the merge joins #groups-sized state with
+#touched-groups-sized delta.
 
 Classic self-maintainable-view theory (Gupta & Mumick, "Maintenance of
 Materialized Views: Problems, Techniques, and Applications", IEEE Data

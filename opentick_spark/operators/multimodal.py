@@ -2157,7 +2157,13 @@ def video_sequence_groups(hashes: DataFrame) -> DataFrame:
     now PARTIALLY AGGREGATES map-side (one ~40-byte row per video per
     map partition crosses the exchange where collect_list shipped every
     frame row), and the rep/n_members window partitions on five scalar
-    columns instead of shuffling whole struct arrays as the key."""
+    columns instead of shuffling whole struct arrays as the key.
+
+    Contract: the grouping is probabilistic, not exact. Two different
+    sequences share a group with probability ≈2^-128 per pair, and only
+    in the random model: xxhash64 is not cryptographic and the XOR
+    combiner is linear, so adversarially crafted frame sequences can
+    force a false merge."""
     from pyspark.sql import Window
 
     fh = hashes.select(

@@ -119,8 +119,9 @@ class TableStore:
         # per-commit-dir applied-marker memo (dirs are immutable once
         # published; see _log_markers)
         self._marker_dir_cache: dict = {}
-        # read-plan cache of the current snapshot (see read): one lock
-        # of its own, so a lookup never waits on a commit or compaction
+        # plan cache of the current snapshot (see read and cached): one
+        # lock of its own, so a lookup never waits on a commit or
+        # compaction
         self._plan_lock = threading.Lock()
         self._plan_key: tuple | None = None
         self._plans: dict = {}
@@ -151,23 +152,17 @@ class TableStore:
         return self._HASH_CLASS[self.schema.key_columns[0].type]
 
     def _effective_buckets(self, meta: dict) -> int | None:
-        """The hash-bucket count reads may PRUNE with — None when the
-        stored layout's hash class no longer matches the current leading
-        PK type (the column widened across xxhash64 width classes after
-        the compact that laid the buckets down, r11). Self-healing twin
-        of the engine's eager ``invalidate_hash_buckets``: a direct
-        ``Catalog.modify_column`` caller that bypasses the engine still
-        gets correct (unpruned) reads on any layout compacted by r11+
-        code, because ``compact`` records ``bucket_hash_class``. Legacy
-        metas without the record are trusted (they predate MODIFY, so
-        the type cannot have changed)."""
+        """The hash-bucket count reads may PRUNE with: the layout's
+        ``hash_buckets`` when the ``bucket_hash_class`` that ``compact``
+        recorded with it is the current leading PK type's, else None.
+        The one guard against stale ``__bucket`` values: a lead column
+        widened across xxhash64 width classes (``Catalog.modify_column``)
+        reads unpruned until the next ``compact(hash_buckets=N)``
+        re-buckets it. A layout with no recorded class is not trusted."""
         nb = meta.get("hash_buckets")
-        if not nb:
-            return None
-        stored = meta.get("bucket_hash_class")
-        if stored is not None and stored != self._lead_hash_class():
-            return None
-        return nb
+        if nb and meta.get("bucket_hash_class") == self._lead_hash_class():
+            return nb
+        return None
 
     # ------------------------------------------------------------------
     @property
@@ -275,39 +270,6 @@ class TableStore:
                 with open(intent_p) as f:
                     intent = json.load(f)
 
-            def _roll_forward() -> None:
-                # new base fully installed, old base disposed (or moved
-                # to trash): finish the meta commit + log GC the
-                # compactor would have done. Meta FIRST (same ordering
-                # as compact(), r10): the folded markers must be
-                # durable before the sidecar-bearing dirs vanish, or a
-                # lock-free has_applied_marker racing this window finds
-                # the marker nowhere and a replayed batch re-applies.
-                meta = self._meta()
-                meta["seq"] = intent["seq"]
-                meta["compacted"] = True
-                meta["hash_buckets"] = intent["hash_buckets"]
-                if intent.get("bucket_hash_class"):
-                    meta["bucket_hash_class"] = intent["bucket_hash_class"]
-                else:
-                    meta.pop("bucket_hash_class", None)
-                meta["last_compact_seq"] = intent["seq"]
-                folded = intent.get("applied_markers", [])
-                if folded:
-                    # the consumed dirs may already be GC'd — the
-                    # intent carries their markers (r10)
-                    cache = meta.get("applied_markers", [])
-                    cache.extend(m for m in folded if m not in cache)
-                    meta["applied_markers"] = cache[-self._MARKER_CACHE_CAP:]
-                self._write_meta(meta)
-                for entry in intent["consumed_log"]:
-                    p = os.path.join(self.log_path, entry)
-                    if os.path.isdir(p):
-                        shutil.rmtree(p)
-                    elif os.path.exists(p):
-                        os.remove(p)
-                os.remove(intent_p)
-
             if os.path.isdir(stash):
                 tmp_installed = intent is not None and not os.path.isdir(
                     os.path.join(self.path, intent["tmp"])
@@ -323,7 +285,7 @@ class TableStore:
                             self.path, f"compact-trash-{uuid.uuid4().hex}"
                         ),
                     )
-                    _roll_forward()
+                    self._finish_compaction(intent)
                 else:
                     # mid-swap: log untouched -> roll back to
                     # pre-compaction (base.old is always intact — rmtree
@@ -339,7 +301,7 @@ class TableStore:
                     # killed before the swap began: plain rollback
                     os.remove(intent_p)
                 else:
-                    _roll_forward()
+                    self._finish_compaction(intent)
             for tmp in _stale_tmps():
                 if os.path.isdir(tmp):
                     shutil.rmtree(tmp, ignore_errors=True)
@@ -720,8 +682,8 @@ class TableStore:
             if nb:
                 base = base.withColumn(BUCKET_COL, F.col(BUCKET_COL).cast("int"))
             else:
-                # a base laid out under hash_buckets whose metadata was
-                # since invalidated (leading-PK widen, r11) still has
+                # a base laid out under hash_buckets that reads may not
+                # prune with (leading-PK widen, r11) still has
                 # __bucket partition DIRECTORIES — Spark surfaces a
                 # discovered partition column even under an explicit
                 # schema, and the union with bucket-less log commits
@@ -784,8 +746,7 @@ class TableStore:
         spark: SparkSession,
         leading_eq: Any = None,
         as_of_seq: int | None = None,
-        with_snapshot: bool = False,
-    ) -> DataFrame | tuple[DataFrame, tuple]:
+    ) -> DataFrame:
         """Current table state: latest row per PK, tombstones dropped,
         logical column names, no meta columns. Not yet PK-sorted — the
         query layer appends the implicit PK ordering (query.go:156-201).
@@ -821,16 +782,13 @@ class TableStore:
         - the sorted log listing: every commit publishes a new name.
 
         A commit or compaction by any process therefore changes the key
-        of the next read. Entries are held per leading-PK bucket (plus
-        one unpruned entry), and a key change drops them all, so the
-        cache holds at most ``hash_buckets + 1`` plans, all of the
-        current snapshot. ``as_of_seq`` reads are never cached, nor are
-        pruned reads whose leading PK is not an integer or timestamp
-        (their bucket is not computed in Python, see ``_bucket_of``).
-
-        ``with_snapshot``: return ``(df, key)``, the key for callers
-        that cache relations derived from this read (the adj factor
-        table); None for an uncached read."""
+        of the next read. Entries are held per Spark session and
+        leading-PK bucket (plus one unpruned entry), beside the
+        relations ``cached`` derives from the read, and a key change
+        drops them all, so the cache holds only the current snapshot's
+        plans. ``as_of_seq`` reads are never cached, nor are pruned
+        reads whose leading PK is not an integer or timestamp (their
+        bucket is not computed in Python, see ``_bucket_of``)."""
         schema = self.schema
         meta = self._meta()
         nb = self._effective_buckets(meta)
@@ -857,7 +815,7 @@ class TableStore:
             with self._plan_lock:
                 if self._plan_key != key:
                     self._plan_key, self._plans = key, {}
-                df = self._plans.get(bucket)
+                df = self._plans.get((spark, bucket))
         if df is None:
             df = self._resolve(
                 spark, schema, meta, nb, bool(log_names), leading_eq, bucket, as_of_seq
@@ -865,8 +823,27 @@ class TableStore:
             if key is not None:
                 with self._plan_lock:
                     if self._plan_key == key:
-                        self._plans[bucket] = df
-        return (df, key) if with_snapshot else df
+                        df = self._plans.setdefault((spark, bucket), df)
+        return df
+
+    def cached(self, spark: SparkSession, slot: str, build):
+        """``build(df)`` of the current-state read ``df``, held beside
+        the read plans of the current snapshot (see ``read``) until the
+        table changes: the cache of relations derived from a table, such
+        as the adj factor table. Entries are keyed by ``(spark, slot)``,
+        because a DataFrame belongs to its session, and remember the
+        read they were built from: one is served only with that read,
+        and stored only while that read is the current snapshot's."""
+        df = self.read(spark)
+        with self._plan_lock:
+            hit = self._plans.get((spark, slot))
+        if hit is not None and hit[0] is df:
+            return hit[1]
+        out = build(df)
+        with self._plan_lock:
+            if self._plans.get((spark, None)) is df:
+                self._plans[(spark, slot)] = (df, out)
+        return out
 
     def _resolve(
         self,
@@ -1217,7 +1194,6 @@ class TableStore:
                 f"marker fold aborted (transient read error): {e}"
             ) from e
         df = self.read(spark)
-        pk = schema.pk_names
         n = target_partitions or max(1, df.rdd.getNumPartitions() // 4)
         # logical → physical atomically (see read(): sequential renames
         # collide under rename-chain + add_column schemas)
@@ -1225,15 +1201,9 @@ class TableStore:
             *[F.col(c.name).alias(c.physical) for c in schema.columns]
         )
         pk_phys = [c.physical for c in schema.key_columns]
-        meta = self._meta()
-        seq = meta["seq"] + 1
+        seq = self._meta()["seq"] + 1
         if hash_buckets:
-            df = df.withColumn(
-                BUCKET_COL,
-                F.pmod(F.xxhash64(F.col(pk_phys[0])), F.lit(hash_buckets)).cast(
-                    "int"
-                ),
-            )
+            df = df.withColumn(BUCKET_COL, self._bucket_expr(hash_buckets))
             out = (
                 df.repartition(max(1, n), F.col(BUCKET_COL))
                 .sortWithinPartitions(BUCKET_COL, *pk_phys)
@@ -1275,22 +1245,20 @@ class TableStore:
         # file — written durably BEFORE the first rename — is what makes
         # a kill anywhere in this window recoverable: see
         # _recover_if_needed for the four crash states it disambiguates.
+        intent = {
+            "seq": seq,
+            "tmp": os.path.basename(tmp_dir),
+            "hash_buckets": hash_buckets,
+            "bucket_hash_class": (
+                self._lead_hash_class() if hash_buckets else None
+            ),
+            "consumed_log": consumed_log,
+            "applied_markers": consumed_markers,
+        }
         intent_p = os.path.join(self.path, "compact-intent.json")
         intent_tmp = intent_p + f".{uuid.uuid4().hex}.tmp"
         with open(intent_tmp, "w") as f:
-            json.dump(
-                {
-                    "seq": seq,
-                    "tmp": os.path.basename(tmp_dir),
-                    "hash_buckets": hash_buckets,
-                    "bucket_hash_class": (
-                        self._lead_hash_class() if hash_buckets else None
-                    ),
-                    "consumed_log": consumed_log,
-                    "applied_markers": consumed_markers,
-                },
-                f,
-            )
+            json.dump(intent, f)
         os.replace(intent_tmp, intent_p)
         stash = self.base_path + ".old"
         os.rename(self.base_path, stash)
@@ -1305,50 +1273,43 @@ class TableStore:
         trash = os.path.join(self.path, f"compact-trash-{uuid.uuid4().hex}")
         os.rename(stash, trash)
         shutil.rmtree(trash)
-        # meta (incl. the folded applied markers) is written BEFORE the
-        # log GC: a lock-free has_applied_marker racing this window must
-        # find a marker in meta OR a live sidecar — GC-first left a gap
-        # where it was in neither and a replayed batch re-applied (r10
-        # review fix). Redundant listing (meta says compacted, log dirs
-        # still present) is consistent either way: latest-wins resolves.
-        meta["seq"] = seq
+        self._finish_compaction(intent)
+
+    def _finish_compaction(self, intent: dict) -> None:
+        """The last steps of a compaction whose new base is installed,
+        shared by the compactor and recovery's roll-forward: commit the
+        post-swap meta the ``intent`` records, GC the consumed log
+        entries, remove the intent. Caller holds both store locks.
+
+        Meta (with the folded applied markers) is written BEFORE the log
+        GC (r10): a lock-free ``has_applied_marker`` racing this window
+        must find a marker in meta OR a live sidecar, and the consumed
+        dirs may already be gone when recovery rolls forward. A
+        redundant listing (meta says compacted, log dirs still present)
+        is consistent either way: latest-wins resolves."""
+        import shutil
+
+        meta = self._meta()
+        meta["seq"] = meta["last_compact_seq"] = intent["seq"]
         meta["compacted"] = True
-        meta["hash_buckets"] = hash_buckets
-        if hash_buckets:
-            meta["bucket_hash_class"] = self._lead_hash_class()
+        meta["hash_buckets"] = intent["hash_buckets"]
+        if intent.get("bucket_hash_class"):
+            meta["bucket_hash_class"] = intent["bucket_hash_class"]
         else:
             meta.pop("bucket_hash_class", None)
-        meta["last_compact_seq"] = seq
-        if consumed_markers:
+        folded = intent.get("applied_markers", [])
+        if folded:
             cache = meta.get("applied_markers", [])
-            cache.extend(m for m in consumed_markers if m not in cache)
+            cache.extend(m for m in folded if m not in cache)
             meta["applied_markers"] = cache[-self._MARKER_CACHE_CAP:]
         self._write_meta(meta)
-        for entry in consumed_log:
+        for entry in intent["consumed_log"]:
             p = os.path.join(self.log_path, entry)
             if os.path.isdir(p):
                 shutil.rmtree(p)
             elif os.path.exists(p):
                 os.remove(p)
-        os.remove(intent_p)
-
-    def invalidate_hash_buckets(self) -> None:
-        """Drop the hash-bucketed layout's PRUNING metadata (r11): used
-        when the leading PK column widens across xxhash64 width classes
-        (int-family→bigint, float→double), because every stored
-        ``__bucket`` value was computed from the narrow-type hash and a
-        new-type probe would prune to the wrong bucket. Reads fall back
-        to unpruned (still correct — the physical ``__bucket`` column in
-        the base is simply no longer selected); the next
-        ``compact(hash_buckets=N)`` re-buckets under the widened type.
-        Called BEFORE the schema write so no reader can ever observe the
-        widened schema with stale bucket metadata."""
-        with self._lock, self._file_lock():
-            meta = self._meta()
-            stale = meta.pop("hash_buckets", None) is not None
-            stale |= meta.pop("bucket_hash_class", None) is not None
-            if stale:
-                self._write_meta(meta)
+        os.remove(os.path.join(self.path, "compact-intent.json"))
 
     @staticmethod
     def _require_history(meta: dict, what: str, seq: int) -> None:
@@ -1770,9 +1731,11 @@ class TableStore:
         ``max_pending_commits`` commits or ``max_log_bytes`` bytes —
         the OPTIMIZE-scheduling hook a long-running ingest loop calls
         after each batch (streaming foreachBatch, the async-insert
-        flusher, a cron). Returns True when a compaction ran. Layout
-        kwargs (hash_buckets/zorder/target_partitions) pass through, so
-        the policy preserves a table's chosen clustering.
+        flusher, a cron). Returns True when a compaction ran.
+        ``compact_kwargs`` pass through; without a layout
+        (``hash_buckets`` or ``zorder``) the compaction keeps the
+        recorded ``hash_buckets``, so the policy never drops a table's
+        bucket pruning.
         """
         pending = self.commits_since_compact()
         due = pending > max_pending_commits
@@ -1787,5 +1750,7 @@ class TableStore:
             due = size > max_log_bytes
         if not due:
             return False
+        if not {"hash_buckets", "zorder"} & compact_kwargs.keys():
+            compact_kwargs["hash_buckets"] = self._meta().get("hash_buckets")
         self.compact(spark, **compact_kwargs)
         return True

@@ -634,12 +634,12 @@ def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     current by applying ``TableStore.diff(include_old=True)`` — new
     orders insert, corrections upsert (a price bump AND a
     priority-group move, so retraction must use the diff's old_*
-    columns), cancellations delete. The maintenance path never rescans
-    the fact table: the signed-delta aggregate is diff-sized, the merge
-    joins #groups vs #touched-groups, and the write-back is a
-    latest-wins upsert commit (vanished groups become tombstones). At
-    100 TB this is the difference between a daily full-table aggregate
-    job and a delta-sized one. Money is integer cents, so state+delta
+    columns), cancellations delete. ``diff`` itself rescans the fact
+    table (it resolves and full-outer-joins both snapshots;
+    ``log_diff`` is the delta-sized form). After the diff, the
+    signed-delta aggregate is diff-sized, the merge joins #groups vs
+    #touched-groups, and the write-back is a latest-wins upsert commit
+    (vanished groups become tombstones). Money is integer cents, so state+delta
     arithmetic is exact and the oracle (a full recompute of the FINAL
     logical state in DuckDB) matches bit-for-bit; the state+diff ==
     recompute equivalence is additionally property-tested over random

@@ -154,6 +154,34 @@ def test_crash_before_stash_disposal_rolls_forward(spark, table, monkeypatch):
     assert meta["last_compact_seq"] == meta["seq"]
 
 
+def test_roll_forward_meta_equals_uninterrupted_compaction(
+    spark, table, monkeypatch
+):
+    """A bucketed compaction killed during log GC and rolled forward on
+    the next open leaves the same ``_meta.json``, key for key, as an
+    uninterrupted compaction of a copy of the same table."""
+    _eng, wh = table
+    twin = wh + "-twin"
+    shutil.copytree(wh, twin)
+    TableStore(Catalog(twin), "cr", "t").compact(spark, hash_buckets=4)
+    store = TableStore(Catalog(wh), "cr", "t")
+    real_remove = os.remove
+
+    def patched(p):
+        if p.startswith(store.log_path):
+            raise _Boom
+        return real_remove(p)
+
+    monkeypatch.setattr(os, "remove", patched)
+    with pytest.raises(_Boom):
+        store.compact(spark, hash_buckets=4)
+    monkeypatch.undo()
+    assert os.listdir(store.log_path)  # crash state: log half-present
+    fresh = TableStore(Catalog(wh), "cr", "t")  # open -> roll forward
+    assert fresh._meta() == TableStore(Catalog(twin), "cr", "t")._meta()
+    assert fresh._meta()["bucket_hash_class"] == "int32"
+
+
 def test_crash_mid_trash_rmtree_is_gcd(spark, table, monkeypatch):
     # THE r5-advice data-loss hole: a kill mid-rmtree of the old base.
     # Pre-r6 the half-deleted dir was still named base.old, so recovery

@@ -927,6 +927,26 @@ def test_maybe_compact_policy(engine, spark):
     assert store.maybe_compact(spark, max_pending_commits=99, max_log_bytes=10) is True
 
 
+def test_maybe_compact_keeps_hash_buckets(engine, spark):
+    """A policy compaction keeps the table's recorded hash-bucket layout
+    unless the caller passes a layout of its own."""
+    engine.execute("create database mb")
+    engine.use("mb")
+    engine.execute("create table t(a int, v int, primary key(a))")
+    pid = engine.prepare("insert into t(a, v) values(?, ?)")
+    store = engine.store("mb", "t")
+    engine.batch_insert(pid, [(j, j) for j in range(8)])
+    store.compact(spark, hash_buckets=4)
+    for i in range(3):
+        engine.batch_insert(pid, [(i * 10 + j, j) for j in range(5)])
+    assert store.maybe_compact(spark, max_pending_commits=2) is True
+    assert store._effective_buckets(store._meta()) == 4
+    assert engine.execute_rows("select v from t where a=23") == [(3,)]
+    engine.batch_insert(pid, [(100, 1)])
+    assert store.maybe_compact(spark, max_pending_commits=0, hash_buckets=None) is True
+    assert store._meta()["hash_buckets"] is None
+
+
 def test_execute_split_rows_matches_dataframe_path(kv):
     """Split ``execute_rows``: client-materialized SplitRange (Arrow
     collect + driver-side PK sort) returns exactly the sorted
@@ -1319,7 +1339,7 @@ def test_modify_column_lead_pk_widen_vs_hash_buckets(kv):
     # class change: int -> bigint clears buckets; everything still reads
     kv.execute("alter table bw modify column k bigint")
     st = kv.store("d", "bw")
-    assert st._meta().get("hash_buckets") is None
+    assert st._effective_buckets(st._meta()) is None
     assert kv.execute_rows("select v from bw where k=7") == [(7.0,)]
     kv.execute("insert into bw(k, t, v) values(7000000000, 1, 70.0)")
     assert len(kv.execute_rows("select k from bw")) == 21

@@ -115,6 +115,8 @@ def test_bucketed_reads_share_a_plan_per_bucket(spark, wh):
 
 
 def test_adj_insert_refreshes_factor_table(spark, wh):
+    from opentick_spark.operators.adj import factor_table
+
     path, srv = wh
     eng = Engine(spark, path)
     eng.use("d")
@@ -125,11 +127,12 @@ def test_adj_insert_refreshes_factor_table(spark, wh):
         adj_st = eng.store("d", "_adj_")
         assert eng.execute_rows(ADJ_SEL) == unadjusted
         assert conn.execute(ADJ_SEL) == unadjusted
-        held = adj_st.read(spark)
-        assert adj_st.read(spark) is held
+        # the engine and the server's session share the store's table
+        held = factor_table(adj_st, spark, False)
+        assert factor_table(adj_st, spark, False) is held
         # forward: rows before the event (time > tm) take its factor
         eng.execute("insert into _adj_(sec, time, px, vol) values(1, 3, 0.5, 1.0)")
-        assert adj_st.read(spark) is not held
+        assert factor_table(adj_st, spark, False) is not held
         halved = [((t, 0), t * (0.5 if t < 3 else 1.0)) for t in range(1, 6)]
         assert eng.execute_rows(ADJ_SEL) == halved
         assert conn.execute(ADJ_SEL) == halved
@@ -145,10 +148,10 @@ def test_adj_insert_refreshes_factor_table(spark, wh):
 
 
 def test_factor_table_of_an_older_snapshot_leaves_newer_queries_alone(spark, wh):
-    """Connections share the factor-table slot of ``_adj_``. A reader still
-    at an older snapshot swaps the slot back to that snapshot's table; a
-    query already planned on the newer table must keep returning the
-    newer factors."""
+    """Connections share the ``_adj_`` store's factor table. A commit
+    replaces the table in the store's cache; a query already planned on
+    the replaced table keeps returning its snapshot's factors, and one
+    planned on the newer table keeps returning the newer factors."""
     from opentick_spark.operators.adj import apply_adj, factor_table
 
     path, _ = wh
@@ -157,17 +160,15 @@ def test_factor_table_of_an_older_snapshot_leaves_newer_queries_alone(spark, wh)
     adj_st, rows = eng.store("d", "_adj_"), eng.store("d", "t").read(spark)
     rows = rows.filter("sec = 1")
     # both snapshots are log-only, so their scans have the same root paths
-    eng.execute("insert into _adj_(sec, time, px, vol) values(2, 3, 0.5, 1.0)")
-    adj1, key1 = adj_st.read(spark, with_snapshot=True)
-    eng.execute("insert into _adj_(sec, time, px, vol) values(1, 3, 0.5, 1.0)")
-    adj2, key2 = adj_st.read(spark, with_snapshot=True)
-    assert key2 != key1
     kw = dict(px_cols=["px"], vol_cols=[])
-    newer = apply_adj(rows, adj2, "sec", "tm", snapshot=(adj_st.path, key2), **kw)
-    factor_table(adj1, False, (adj_st.path, key1))
+    eng.execute("insert into _adj_(sec, time, px, vol) values(2, 3, 0.5, 1.0)")
+    table1 = factor_table(adj_st, spark, False)
+    older = apply_adj(rows, adj_st, "sec", "tm", **kw)
+    eng.execute("insert into _adj_(sec, time, px, vol) values(1, 3, 0.5, 1.0)")
+    newer = apply_adj(rows, adj_st, "sec", "tm", **kw)
+    assert factor_table(adj_st, spark, False) is not table1
     halved = [(t * 10**9, t * (0.5 if t < 3 else 1.0)) for t in range(1, 6)]
     assert sorted((r.tm, r.px) for r in newer.collect()) == halved
-    older = apply_adj(rows, adj1, "sec", "tm", snapshot=(adj_st.path, key1), **kw)
     assert sorted((r.tm, r.px) for r in older.collect()) == [
         (t * 10**9, float(t)) for t in range(1, 6)
     ]

@@ -125,3 +125,38 @@ def test_users_stored_in_meta_table(spark, tmp_path):
     admin.use("_meta_")
     rows = admin.execute_rows("select name, is_admin from user")
     assert ("alice", False) in rows and ("root", True) in rows
+
+
+@pytest.mark.parametrize("transport", ["in_process", "tcp"])
+def test_client_user_management_is_one_implementation(spark, tmp_path, transport):
+    """Both clients manage users the same way: create refuses an existing
+    name instead of overwriting its password, and list/update/delete
+    act on the ``_meta_.user`` rows."""
+    from opentick_spark.client import Connection, connect_tcp
+    from opentick_spark.server import OpentickServer
+
+    wh = str(tmp_path / "wh")
+    srv = None
+    if transport == "tcp":
+        srv = OpentickServer(spark, wh).start()
+        c = connect_tcp("127.0.0.1", srv.port)
+    else:
+        c = Connection(spark, wh)
+    try:
+        c.create_user("cu", "first")
+        with pytest.raises(OpentickError, match="User already exist"):
+            c.create_user("cu", "second")
+        assert c.execute(
+            "select password from _meta_.user where name=?", ("cu",)
+        ) == [(sha1_string("first"),)]
+        c.update_user("cu", perm={"d1": "write"})
+        assert c.execute(
+            "select perm from _meta_.user where name=?", ("cu",)
+        ) == [("d1=write",)]
+        assert "cu" in c.list_users()
+        c.delete_user("cu")
+        assert "cu" not in c.list_users()
+    finally:
+        c.close()
+        if srv is not None:
+            srv.stop()
