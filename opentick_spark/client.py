@@ -35,8 +35,10 @@ from concurrent.futures import Future as CFuture
 from concurrent.futures import InvalidStateError
 from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as _FutTimeout
+from concurrent.futures import wait as _wait_all
 from typing import Any, Iterable
 
+from opentick_spark.dialect import ast
 from opentick_spark.engine import Engine, split_range  # noqa: F401 (re-export)
 from opentick_spark.errors import OpentickError as Error
 
@@ -116,6 +118,8 @@ class _GroupCommitBuffer:
         # current flush window)
         self._pending: dict[int, tuple[list, _Bundle]] = {}
         self._lock = threading.Lock()
+        # one flush at a time, so bundles commit in the order queued
+        self._flush_lock = threading.Lock()
         self._wake = threading.Event()
         self._stop = False
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -133,28 +137,30 @@ class _GroupCommitBuffer:
             self._wake.set()
         return entry[1]
 
-    def _flush(self) -> None:
-        with self._lock:
-            batches = self._pending
-            self._pending = {}
-        for pid, (rows, bundle) in batches.items():
-            try:
-                self._engine.batch_insert(pid, rows)
-                bundle.resolve()
-            except Exception as e:  # resolve the bundle with the error
-                bundle.resolve(e)
+    def flush(self) -> None:
+        """Commit every row queued so far."""
+        with self._flush_lock:
+            with self._lock:
+                batches = self._pending
+                self._pending = {}
+            for pid, (rows, bundle) in batches.items():
+                try:
+                    self._engine.batch_insert(pid, rows)
+                    bundle.resolve()
+                except Exception as e:  # resolve the bundle with the error
+                    bundle.resolve(e)
 
     def _run(self) -> None:
         while not self._stop:
             self._wake.wait(self.FLUSH_S)
             self._wake.clear()
-            self._flush()
+            self.flush()
 
     def close(self) -> None:
         self._stop = True
         self._wake.set()
         self._thread.join()
-        self._flush()
+        self.flush()
 
 
 def _merge_perm(existing: str, perm) -> str:
@@ -280,6 +286,8 @@ class Connection(_UserAdmin):
     ):
         self._engine = Engine(spark, warehouse, permission_control=permission_control)
         self._pool = ThreadPoolExecutor(max_workers=32)
+        self._running: set[CFuture] = set()  # pool calls not yet done
+        self._running_lock = threading.Lock()
         self._buffer = _GroupCommitBuffer(self._engine)
         # sql text → prepared-insert pid (positive decisions only; see
         # execute_async)
@@ -302,14 +310,36 @@ class Connection(_UserAdmin):
         """Authenticate against _meta_.user (no-op success when the
         engine runs without permission control, mirroring the implicit
         localhost-admin grant, server.go:106-110)."""
+        self._settle()  # queued calls run as the user who made them
         if self._engine.permission_control:
             self._engine.login(username, password)
         if db_name:
-            self._engine.use(db_name)
+            self.use(db_name)
         return True
 
     def use(self, db_name: str) -> None:
+        self._settle()  # queued calls run in the db they were made in
         self._engine.use(db_name)
+
+    def _submit(self, fn, *args) -> Future:
+        fut = self._pool.submit(fn, *args)
+        with self._running_lock:
+            self._running.add(fut)
+        fut.add_done_callback(self._finished)
+        return Future(fut)
+
+    def _finished(self, fut: CFuture) -> None:
+        with self._running_lock:
+            self._running.discard(fut)
+
+    def _settle(self) -> None:
+        """Finish every async call made so far: a prepared id follows
+        the session db and user when it runs, so ``use`` and ``login``
+        first let the calls made before them run."""
+        with self._running_lock:
+            running = list(self._running)
+        _wait_all(running)
+        self._buffer.flush()
 
     # -- user management (C7: user.go + server.go meta commands; the
     # rest is _UserAdmin) ----------------------------------------------
@@ -388,31 +418,25 @@ class Connection(_UserAdmin):
         args = list(args)  # materialize ONCE: args may be a one-shot iterator
         split = self._inband_ranges(args)
         if split is not None:
-            return Future(
-                self._pool.submit(self.execute_split, sql, split[0], split[1])
-            )
+            return self._submit(self.execute_split, sql, split[0], split[1])
         args = tuple(args)
         # single-row inserts ride the group-commit buffer (the async
-        # firehose path); everything else runs on the pool. The
-        # sql → insert-pid decision is memoized on the connection (r15:
-        # the firehose calls this 100k×/s — engine.prepare's lock and
-        # the resolver isinstance are per-STATEMENT work, not per-row;
-        # only POSITIVE insert decisions are cached, so a statement
-        # that fails to prepare now but becomes valid later still
-        # resolves correctly on every call)
+        # firehose path); everything else runs on the pool. The sql →
+        # insert-pid decision is memoized (the firehose calls this
+        # 100k×/s): an id follows the session db and schema as its text
+        # does, and only POSITIVE decisions are kept, so a statement
+        # that fails to prepare now is tried again on the next call
         pid = self._insert_pids.get(sql)
         if pid is not None:
             return _BundleFuture(self._buffer.submit(pid, args))
         try:
             pid = self._engine.prepare(sql)
-            from opentick_spark.dialect.resolver import ResolvedInsert
-
-            if isinstance(self._engine._prepared[pid][1], ResolvedInsert):
+            if isinstance(self._engine.prepared(pid)[1], ast.Insert):
                 self._insert_pids[sql] = pid
                 return _BundleFuture(self._buffer.submit(pid, args))
         except Error:
             pass  # non-preparable (DDL etc.) → pool
-        return Future(self._pool.submit(self.execute, sql, args))
+        return self._submit(self.execute, sql, args)
 
     def prepare(self, sql: str) -> int:
         return self._engine.prepare(sql)
@@ -462,9 +486,7 @@ class Connection(_UserAdmin):
         args_array: list[tuple],
         batch_size: int | None = None,
     ) -> Future:
-        return Future(
-            self._pool.submit(self.batch_insert, sql, args_array, batch_size)
-        )
+        return self._submit(self.batch_insert, sql, args_array, batch_size)
 
 
 def connect(
@@ -1058,7 +1080,8 @@ class TCPConnection(_UserAdmin):
         commands on the predecessor's completion (server._dispatch), so
         they commit strictly in send order — same latest-wins outcome
         as the sync path (the dispatch pool alone is unordered; reads
-        stay fully concurrent). This is the wire-ingest scaling lever
+        stay concurrent, and a later ``use`` or ``login`` waits for the
+        batches in flight). This is the wire-ingest scaling lever
         the sf1.0 drill flagged: sync chunked ingest pays
         serialize→send→apply→reply per chunk end-to-end, pipelined
         ingest overlaps the client CPU with the server apply. Resolve
@@ -1108,41 +1131,38 @@ class TCPConnection(_UserAdmin):
             req["6"] = idempotency_key
         return self._request(req)
 
+    def _meta(self, command: str):
+        """One meta command in the reference form: the subcommand and
+        its argument space-joined in "2" (server.go:440-441)."""
+        return self._result(self._request({"1": "meta", "2": command}))
+
     def list_databases(self) -> list[str]:
-        return self._result(self._request({"1": "meta", "2": "list_databases"}))
+        return self._meta("list_databases")
 
     def list_tables(self) -> list[str]:
-        return self._result(self._request({"1": "meta", "2": "list_tables"}))
+        return self._meta("list_tables")
 
     def schema(self, table_name: str):
-        return self._result(
-            self._request({"1": "meta", "2": "schema", "3": table_name})
-        )
+        return self._meta(f"schema {table_name}")
 
     def storage_stats(self, table_name: str) -> dict:
         """Layout-health footprint of a table (extension): base/log
         file, row, byte counts, pending commits, lead-PK overlap."""
-        rows = self._result(
-            self._request({"1": "meta", "2": "storage_stats", "3": table_name})
-        )
-        return {k: v for k, v in rows}
+        return dict(self._meta(f"storage_stats {table_name}"))
 
     def server_stats(self) -> dict:
         """Server observability counters (extension): requests/runs/
         cache hits/errors, uptime anchor, live connections, cached
         replies."""
-        rows = self._result(self._request({"1": "meta", "2": "server_stats"}))
-        return {k: v for k, v in rows}
+        return dict(self._meta("server_stats"))
 
     # -- user management over the wire: reload/chgpasswd are meta
     # commands (server.go:440-441); the rest is _UserAdmin ------------
     def reload_users(self) -> None:
-        self._result(self._request({"1": "meta", "2": "reload_users"}))
+        self._meta("reload_users")
 
     def chgpasswd(self, password: str) -> None:
-        self._result(
-            self._request({"1": "meta", "2": "chgpasswd", "3": password})
-        )
+        self._meta(f"chgpasswd {password}")
 
 
 def connect_tcp(

@@ -43,6 +43,11 @@ class Select:
 
 
 @dataclass
+class Explain:  # EXPLAIN <select> (extension): the select's physical plan
+    select: Select
+
+
+@dataclass
 class Insert:
     table: TableName
     cols: list[str]

@@ -3,7 +3,8 @@
 Grammar coverage mirrors parser.go:10-24 (lexer) and the Ast structs
 (parser.go:49-183): SELECT / INSERT / DELETE / CREATE / DROP / ALTER TABLE,
 `adj/adj_px/adj_vol` select functions, `?` placeholders, conjunctive WHERE
-with `= < <= > >=`, and integer LIMIT (negative = tail).
+with `= < <= > >=`, and integer LIMIT (negative = tail); plus the
+extension `EXPLAIN <select>`.
 """
 
 from __future__ import annotations
@@ -147,9 +148,15 @@ class _Parser:
     # -- statements ------------------------------------------------------
     def parse(self):
         t = self.next()
-        if t.kind != "KW":
+        if t.kind == "IDENT" and t.value.upper() == "EXPLAIN":
+            # EXPLAIN <select> (extension). Not a keyword, so a table or
+            # column named explain stays usable
+            if not self.accept("KW", "SELECT"):
+                raise OpentickError("Can only explain SELECT statements")
+            node = ast.Explain(self.select())
+        elif t.kind != "KW":
             raise OpentickError(f"Syntax error: unexpected {t.value!r}")
-        if t.value == "SELECT":
+        elif t.value == "SELECT":
             node = self.select()
         elif t.value == "INSERT":
             node = self.insert()

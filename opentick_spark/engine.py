@@ -6,14 +6,20 @@ futures, and connection pooling (server.go, clients) collapse into plain
 method calls. What remains semantically is reproduced here:
 
 - ``execute(sql, *args)`` — parse → resolve → run (Execute, query.go:44-119)
-- ``prepare(sql)`` → integer id; ``execute(id, *args)`` skips parse+resolve
-  (server.go:384-398 — the reference's only "optimizer" beyond storage
-  pushdown)
+- ``prepare(sql)`` → integer id; ``execute(id, *args)`` skips the parse
+  and runs exactly what the text would run now (server.go:384-398 binds
+  an id at prepare; see ``_lookup``)
 - ``batch_insert(prepared, rows)`` — N rows in ONE atomic commit
   (BatchInsert, query.go:294-307)
 - SELECTs return DataFrames in implicit full-PK order (ascending, or
   descending under ``LIMIT -n`` — query.go:156-159)
 - ``execute_split(sql, ranges, *args)`` — SplitRange as one DataFrame
+
+Statement identity has one owner: every entry point that takes SQL text
+or a prepared id turns it into ``(node, resolved)`` through ``_lookup``.
+Text is parsed per call; an id keeps its parsed node and the resolution
+it last made, which is redone only when the table's schema object in the
+catalog differs — a DDL, or a ``use`` that names another table.
 
 The WHERE → scan compilation has one owner: ``_conds_sql`` renders every
 bound condition list (select, split and delete) as one SQL string, and
@@ -38,7 +44,7 @@ from __future__ import annotations
 import itertools
 import math
 import threading
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -235,6 +241,20 @@ def split_range(start, end, num_parts: int) -> list[tuple]:
     return [tuple(p) for p in parts]
 
 
+_DML = (ast.Select, ast.Insert, ast.Delete, ast.Explain)
+
+
+class _Statement(NamedTuple):
+    """A statement's text, node and its resolution against ``schema``.
+    Immutable: a re-resolved id gets a new entry, so a read dispatched
+    concurrently on the same session never sees a half-updated one."""
+
+    sql: str
+    node: Any
+    schema: Any = None
+    resolved: Any = None
+
+
 class Engine:
     def __init__(
         self,
@@ -253,7 +273,7 @@ class Engine:
         # one catalog of this warehouse; the Engine keeps session state
         self.catalog = Catalog.shared(warehouse)
         self.current_db: str | None = None
-        self._prepared: dict[int, tuple[str, Any]] = {}
+        self._prepared: dict[int, _Statement] = {}
         self._prepared_by_sql: dict[str, int] = {}
         self._prepared_ids = itertools.count(1)
         self._lock = threading.RLock()
@@ -331,115 +351,144 @@ class Engine:
 
     # ------------------------------------------------------------------
     def prepare(self, sql: str) -> int:
-        """Parse + resolve once; returns an id reusable with execute()
-        (implicit-prepare caching like the clients, client/opentick.go:256-276)."""
+        """The id of ``sql``, one per distinct text per Engine (implicit-
+        prepare caching like the clients, client/opentick.go:256-276).
+        It resolves at once, so errors surface here; the id then runs
+        what its text would run at execution time (``_lookup``)."""
         with self._lock:
-            if sql in self._prepared_by_sql:
-                return self._prepared_by_sql[sql]
-            node = parse(sql)
-            resolved = self._resolve(node)
+            pid = self._prepared_by_sql.get(sql)
+            if pid is not None:
+                self._lookup(pid)
+                return pid
+            stmt = self._resolve(_Statement(sql, parse(sql)))
             pid = next(self._prepared_ids)
-            self._prepared[pid] = (sql, resolved)
+            self._prepared[pid] = stmt
             self._prepared_by_sql[sql] = pid
             return pid
 
-    def _resolve(self, node):
-        # permission checks live at resolve time, like the reference
-        # (resolveSelect/Insert/Delete, query.go:351-354, 465-468, 524-527)
+    def prepared(self, pid: int) -> tuple[str, Any]:
+        """``(sql, node)``: the text and parsed statement behind ``pid``.
+        A read only: running the id makes the checks (``_lookup``)."""
+        stmt = self._statement(pid)
+        return stmt.sql, stmt.node
+
+    def _statement(self, sql: str | int) -> _Statement:
+        """Text parsed afresh (and not registered), or a prepared id's
+        entry as it last resolved."""
+        if isinstance(sql, str):
+            return _Statement(sql, parse(sql))
+        try:
+            return self._prepared[sql]
+        except KeyError:
+            raise OpentickError(f"Unknown prepared id {sql}") from None
+
+    def _lookup(self, sql: str | int):
+        """The one lookup of a statement, by text or prepared id:
+        ``(node, resolved)`` as it resolves now, ``resolved`` None for
+        DDL (only text carries it). A prepared id that had to re-resolve
+        gets its new entry."""
+        stmt = self._statement(sql)
+        if not isinstance(stmt.node, _DML):
+            return stmt.node, None
+        current = self._resolve(stmt)
+        if current is not stmt and isinstance(sql, int):
+            self._prepared[sql] = current
+        return stmt.node, current.resolved
+
+    def authorize(self, node: ast.Select | ast.Insert | ast.Delete) -> str:
+        """The db of ``node``'s table, once the session user may read it
+        (a select) or write it (query.go:351-354, 465-468, 524-527).
+        Every resolve runs it, and so does a cached wire reply, which
+        answers in place of a run."""
+        db = self._db_of(node.table)
+        need = READ_PERM if isinstance(node, ast.Select) else WRITE_PERM
+        require_perm(self.user, db, node.table.name, need)
+        return db
+
+    def _resolve(self, stmt: _Statement) -> _Statement:
+        """``stmt`` resolved against the session's db and user and the
+        table's current schema. The permission check runs every time
+        (query.go:351-354, 465-468, 524-527); the resolution is reused
+        while the catalog holds the schema object it was made against,
+        which every DDL of the table replaces and which differs per db."""
+        node = stmt.node.select if isinstance(stmt.node, ast.Explain) else stmt.node
+        if not isinstance(node, (ast.Select, ast.Insert, ast.Delete)):
+            raise OpentickError("Only select/insert/delete/explain can be prepared")
+        db = self.authorize(node)
+        schema = self.catalog.get_schema(db, node.table.name)
+        if schema is stmt.schema:
+            return stmt
         if isinstance(node, ast.Select):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, READ_PERM)
-            return resolve_select(self.catalog.get_schema(db, node.table.name), node)
-        if isinstance(node, ast.Insert):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, WRITE_PERM)
-            return resolve_insert(self.catalog.get_schema(db, node.table.name), node)
-        if isinstance(node, ast.Delete):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, WRITE_PERM)
-            return resolve_delete(self.catalog.get_schema(db, node.table.name), node)
-        raise OpentickError("Only select/insert/delete can be resolved")
+            resolved = resolve_select(schema, node)
+        elif isinstance(node, ast.Insert):
+            resolved = resolve_insert(schema, node)
+        else:
+            resolved = resolve_delete(schema, node)
+        return stmt._replace(schema=schema, resolved=resolved)
 
     # ------------------------------------------------------------------
     def execute(self, sql: str | int, *args: Any) -> DataFrame | None:
         """Run a statement (SQL text or a prepared id). SELECT returns a
         DataFrame; DDL/DML return None."""
-        if isinstance(sql, int):
-            return self._run_resolved(self._prepared_statement(sql), args)
+        return self._run(*self._lookup(sql), args)
+
+    def _run(self, node, resolved, args: tuple) -> DataFrame | None:
+        if resolved is None:
+            return self._execute_ddl(node)
+        self._check_args(resolved.n_placeholders, args)
+        if isinstance(resolved, ResolvedInsert):
+            self._insert(resolved, [[a] for a in args], 1)
+            return None
+        if isinstance(resolved, ResolvedDelete):
+            return self._run_delete(resolved, args)
+        df = self._select_frame(resolved, [bind_conds(resolved.conds, args)])
+        if not isinstance(node, ast.Explain):
+            return df
         # EXPLAIN <select> (extension): the physical plan as rows, so
         # pushdown/broadcast shapes are inspectable through the server
         # and any client — the 100 TB debugging surface
-        if sql.lstrip().lower().startswith("explain "):
-            inner = sql.lstrip()[len("explain "):]
-            df = self.execute(inner, *args)
-            if df is None:
-                raise OpentickError("Can only explain SELECT statements")
-            mode = self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-            text = df._jdf.queryExecution().explainString(mode)
-            return self.spark.createDataFrame(
-                [(line,) for line in text.splitlines()], "plan_line string"
-            )
-        return self._execute_node(parse(sql), args)
+        mode = self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+        text = df._jdf.queryExecution().explainString(mode)
+        return self.spark.createDataFrame(
+            [(line,) for line in text.splitlines()], "plan_line string"
+        )
 
-    def _prepared_statement(self, pid: int):
-        try:
-            return self._prepared[pid][1]
-        except KeyError:
-            raise OpentickError(f"Unknown prepared id {pid}") from None
-
-    def _execute_node(self, node, args: tuple) -> DataFrame | None:
-        """``execute`` of an already parsed statement."""
+    def _execute_ddl(self, node) -> None:
         # DDL dispatches straight to the catalog (Execute, query.go:44-119);
         # perm gates mirror query.go:51-54 (db DDL: admin), 68-71 (create
         # table: db write), 99-102 (drop table: table write)
         if isinstance(node, ast.CreateDatabase):
             self._require_admin()
             self.catalog.create_database(node.name, node.if_not_exists)
-            return None
+            return
         if isinstance(node, ast.DropDatabase):
             self._require_admin()
             self.catalog.drop_database(node.name)
-            return None
+            return
         if isinstance(node, ast.CreateTable):
             db = self._db_of(node.table)
             require_perm(self.user, db, "", WRITE_PERM)
             self.catalog.create_table(
                 db, node.table.name, node.cols, node.pk, node.if_not_exists
             )
-            return None
+            return
+        # every other DDL names one existing table and needs write on it
+        db = self._db_of(node.table)
+        require_perm(self.user, db, node.table.name, WRITE_PERM)
         if isinstance(node, ast.DropTable):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, WRITE_PERM)
             self.catalog.drop_table(db, node.table.name)
-            return None
-        if isinstance(node, ast.RenameTable):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, WRITE_PERM)
+        elif isinstance(node, ast.RenameTable):
             self.catalog.rename_table(db, node.table.name, node.new_name)
-            return None
-        if isinstance(node, ast.RenameColumn):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, WRITE_PERM)
+        elif isinstance(node, ast.RenameColumn):
             self.catalog.rename_column(db, node.table.name, node.old, node.new)
-            return None
-        if isinstance(node, ast.AddColumn):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, WRITE_PERM)
+        elif isinstance(node, ast.AddColumn):
             self.catalog.add_column(db, node.table.name, node.name, node.type)
-            return None
-        if isinstance(node, ast.DropColumn):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, WRITE_PERM)
+        elif isinstance(node, ast.DropColumn):
             self.catalog.drop_column(db, node.table.name, node.name)
-            return None
-        if isinstance(node, ast.ModifyColumn):
-            db = self._db_of(node.table)
-            require_perm(self.user, db, node.table.name, WRITE_PERM)
+        else:
             self.catalog.modify_column(db, node.table.name, node.name, node.type)
-            return None
-        return self._run_resolved(self._resolve(node), args)
 
     def _require_admin(self) -> None:
         if self.user is not None and not self.user.is_admin:
@@ -467,14 +516,13 @@ class Engine:
     def _split_statement(
         self, sql: str | int, ranges: list[tuple], args: tuple
     ) -> ResolvedSelect:
-        """The prepared SELECT behind a split read, arity-checked: each
-        branch binds (*args, lo, hi) — same contract as a plain execute
-        of the statement."""
+        """The SELECT behind a split read, arity-checked: each branch
+        binds (*args, lo, hi) — same contract as a plain execute of the
+        statement."""
         if not ranges:
             raise OpentickError("execute_split requires at least one range")
-        pid = self.prepare(sql) if isinstance(sql, str) else sql
-        resolved = self._prepared_statement(pid)
-        if not isinstance(resolved, ResolvedSelect):
+        node, resolved = self._lookup(sql)
+        if not isinstance(node, ast.Select):
             raise OpentickError("execute_split requires a select")
         self._check_args(resolved.n_placeholders, (*args, None, None))
         return resolved
@@ -611,40 +659,24 @@ class Engine:
         TakeOrderedAndProject is already exchange-free and prunes to n
         rows executor-side. EXPLAIN collects its plan lines. A failing
         collect raises: nothing is planned or run a second time."""
-        if ranges is None:
-            resolved, df = self._select_or_run(sql, args)
-            if resolved is None:
+        if ranges is not None:
+            resolved = self._split_statement(sql, ranges, args)
+            df = self._split_frame(resolved, ranges, args, defer_sort=True)
+        else:
+            node, resolved = self._lookup(sql)
+            if not isinstance(node, ast.Select):
+                df = self._run(node, resolved, args)
                 if df is None:
                     return None, []
                 return df.toArrow(), [(n, "text") for n in df.columns]
             self._check_args(resolved.n_placeholders, args)
             conds = bind_conds(resolved.conds, args)
             df = self._select_frame(resolved, [conds], defer_sort=True)
-        else:
-            resolved = self._split_statement(sql, ranges, args)
-            df = self._split_frame(resolved, ranges, args, defer_sort=True)
         tbl = df.toArrow()
         if not resolved.limit:
             order = "descending" if resolved.reverse else "ascending"
             tbl = tbl.sort_by([(k, order) for k in resolved.schema.pk_names])
         return tbl, [(c.name, c.type) for c in resolved.cols]
-
-    def _select_or_run(self, sql: str | int, args: tuple):
-        """``(resolved, None)`` when ``sql`` is a (prepared) SELECT, else
-        ``(None, result)`` after running it the way ``execute`` does —
-        text SQL is parsed once either way. Raises the standard
-        unknown-pid error for dangling prepared ids."""
-        if isinstance(sql, int):
-            stmt = self._prepared_statement(sql)
-            if isinstance(stmt, ResolvedSelect):
-                return stmt, None
-            return None, self._run_resolved(stmt, args)
-        if sql.lstrip().lower().startswith("explain "):
-            return None, self.execute(sql, *args)
-        node = parse(sql)
-        if isinstance(node, ast.Select):
-            return self._resolve(node), None
-        return None, self._execute_node(node, args)
 
     def execute_rows(
         self, sql: str | int, *args: Any, ranges: list[tuple] | None = None
@@ -690,19 +722,6 @@ class Engine:
     def _check_args(self, n_expected: int, args: tuple) -> None:
         if len(args) != n_expected:
             raise OpentickError(f"Expected {n_expected} arguments, got {len(args)}")
-
-    def _run_resolved(self, resolved, args: tuple) -> DataFrame | None:
-        if isinstance(resolved, ResolvedSelect):
-            self._check_args(resolved.n_placeholders, args)
-            return self._select_frame(resolved, [bind_conds(resolved.conds, args)])
-        if isinstance(resolved, ResolvedInsert):
-            self._check_args(resolved.n_placeholders, args)
-            self._insert(resolved, [[a] for a in args], 1)
-            return None
-        if isinstance(resolved, ResolvedDelete):
-            self._check_args(resolved.n_placeholders, args)
-            return self._run_delete(resolved, args)
-        raise OpentickError("Invalid statement")
 
     def _select_frame(
         self,
@@ -780,13 +799,8 @@ class Engine:
     ) -> None:
         """Bind ``n`` rows, given as one list per placeholder, and append
         them as ONE atomic commit (BatchInsert, query.go:294-307); every
-        dialect insert ends here.
-
-        ``applied_marker`` makes the commit idempotent (see
-        ``TableStore.has_applied_marker``). Its check runs BEFORE
-        binding, so a retry of an already-published batch is a no-op
-        even if the schema evolved between attempts (e.g. ALTER TABLE
-        DROP COLUMN removed a bound column, which would otherwise raise).
+        dialect insert ends here. ``applied_marker`` is recorded with the
+        commit (see ``_insert_statement`` for its check).
 
         The error raised is the one a row-major walk hits first: the
         smallest (row, insert-column position) among the columns' first
@@ -794,8 +808,6 @@ class Engine:
         right after the ``n`` given; its arity error is raised only when
         those rows bind cleanly."""
         st = self.store(stmt.schema.db, stmt.schema.name)
-        if applied_marker is not None and st.has_applied_marker(applied_marker):
-            return  # retried batch: the original commit already published
         cols: dict[str, list] = {}
         errors = []
         for pos, (col, v) in enumerate(zip(stmt.cols, stmt.values)):
@@ -852,7 +864,9 @@ class Engine:
         retry — size the cap above the worst-case number of batches a
         client might ever replay (retries happen within seconds; the
         horizon exists so meta stays O(1))."""
-        stmt = self._prepared_insert(sql_or_id)
+        stmt = self._insert_statement(sql_or_id, idempotency_key)
+        if stmt is None:
+            return
         width = stmt.n_placeholders
         bad = next(
             (i for i, a in enumerate(rows_args) if len(a) != width),
@@ -877,9 +891,9 @@ class Engine:
         straight to the bind without a cols→rows→cols double transpose.
         Semantics, errors included, are identical to ``batch_insert`` of
         the transposed rows."""
-        stmt = self._prepared_insert(sql_or_id)
-        if not arg_cols:
-            return  # empty batch: nothing to commit (matches rows path)
+        stmt = self._insert_statement(sql_or_id, idempotency_key)
+        if stmt is None or not arg_cols:
+            return  # retried or empty batch: nothing to commit
         # ragged check BEFORE the empty-batch return: an empty FIRST
         # column with non-empty later columns must fail loudly, not
         # silently drop the other columns' rows (r11 review)
@@ -893,13 +907,24 @@ class Engine:
             return self._insert(stmt, empty, 0, idempotency_key, len(arg_cols))
         self._insert(stmt, arg_cols, n, idempotency_key)
 
-    def _prepared_insert(self, sql_or_id: str | int) -> ResolvedInsert:
-        if isinstance(sql_or_id, str):
-            sql_or_id = self.prepare(sql_or_id)
-        stmt = self._prepared_statement(sql_or_id)
-        if not isinstance(stmt, ResolvedInsert):
+    def _insert_statement(
+        self, sql_or_id: str | int, applied_marker: str | None
+    ) -> ResolvedInsert | None:
+        """The insert behind a batch, or None when ``applied_marker`` is
+        already applied (see ``TableStore.has_applied_marker``): that
+        check runs BEFORE the statement resolves, so a retry of a
+        published batch is a no-op even if the schema evolved between
+        attempts (e.g. ALTER TABLE DROP COLUMN removed a bound column,
+        which would otherwise raise)."""
+        node = self._statement(sql_or_id).node
+        if not isinstance(node, ast.Insert):
             raise OpentickError("Batch requires a prepared insert")
-        return stmt
+        db = self.authorize(node)  # a retry needs the write permission too
+        if applied_marker is not None and self.store(
+            db, node.table.name
+        ).has_applied_marker(applied_marker):
+            return None  # retried batch: the original commit already published
+        return self._lookup(sql_or_id)[1]
 
     # ------------------------------------------------------------------
     # meta surface (server.go:440-499)

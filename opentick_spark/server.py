@@ -23,10 +23,12 @@ Heartbeat (C10, server.go:127-139): the server pushes a 1-byte ``H``
 frame every ``heartbeat_s``; clients treat it as liveness and never
 reply. Dispatch concurrency is bounded (sMaxConcurrency analog,
 server.go:245). Each connection gets its OWN :class:`Engine` (session
-db + login are per-connection state, server.go:399-439) over the shared
-SparkSession + warehouse — the Spark analog of the reference's one
-server process over one FDB cluster, which also makes the reference's
-FDB connection pool (C12, server.go:21-32) genuinely n/a here.
+db, login and prepared statements are per-connection state,
+server.go:384-439) over the shared SparkSession + warehouse — the Spark
+analog of the reference's one server process over one FDB cluster, which
+also makes the reference's FDB connection pool (C12, server.go:21-32)
+genuinely n/a here. A wire prepared id IS the engine's id: the session
+holds no statement state of its own.
 
 Scale posture: the server is an *ingress facade*, not the compute path —
 every query still executes as a distributed Spark plan; the TCP layer
@@ -41,9 +43,10 @@ import socket
 import struct
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from typing import Any
 
+from opentick_spark.dialect import ast
 from opentick_spark.engine import Engine
 from opentick_spark.errors import OpentickError
 from opentick_spark.wire_packed import unpack_columns
@@ -106,8 +109,8 @@ def _jsonable_rows(rows: list[tuple] | None) -> list[list] | None:
 
 
 class _Session:
-    """One TCP connection: reader loop, per-connection Engine + prepared
-    registry, serialized writes."""
+    """One TCP connection: reader loop, per-connection Engine (which owns
+    the session's prepared ids), serialized writes."""
 
     def __init__(self, server: OpentickServer, sock: socket.socket):
         self.server = server
@@ -117,15 +120,11 @@ class _Session:
             server.warehouse,
             permission_control=server.permission_control,
         )
-        self.prepared: dict[int, int] = {}  # wire id -> engine prepared id
-        self.prepared_sql: dict[int, str] = {}  # wire id -> sql text
-        self._next_id = 0
         self._wlock = threading.Lock()
-        # per-connection FIFO chain for BATCH commands (r11): the shared
-        # dispatch pool is unordered, but pipelined batches promise
-        # send-order latest-wins — each batch is scheduled only when its
-        # predecessor's completion future resolves (see _dispatch)
+        # completion futures of this connection's last batch and of its
+        # other requests in flight (see _dispatch)
         self._batch_tail = None
+        self._running: set[Future] = set()
         self._chain_lock = threading.Lock()
         self.alive = True
         # per-CONNECTION codec, initialized from the server default: the
@@ -200,6 +199,10 @@ class _Session:
             except OSError:
                 pass
 
+    def _finished(self, fut: Future) -> None:
+        with self._chain_lock:
+            self._running.discard(fut)
+
     # executed on the dispatch pool ------------------------------------
     def handle(self, msg: dict) -> None:
         self.server._bump("n_requests")
@@ -207,11 +210,7 @@ class _Session:
         try:
             cmd = msg.get("1")
             if cmd == "prepare":
-                pid = self.engine.prepare(msg["2"])
-                self._next_id += 1
-                self.prepared[self._next_id] = pid
-                self.prepared_sql[self._next_id] = msg["2"]
-                self.reply(ticket, self._next_id)
+                self.reply(ticket, self.engine.prepare(msg["2"]))
                 return
             if cmd == "run":
                 self.server._bump("n_run")
@@ -225,33 +224,31 @@ class _Session:
                 # (clients unwrap "2" to the inner reply's "1"). Like
                 # the reference, hits are stale within the TTL.
                 cache_key = None
-                if isinstance(what, int):
-                    sql_text = self.prepared_sql.get(what)
-                    if (
-                        self.server.cache_expiration > 0
-                        and msg.get("4")
-                        and sql_text is not None
-                        and sql_text.lstrip().lower().startswith("select")
-                    ):
-                        # the reply SHAPE depends on the client's packed
-                        # flag ("5") — key it, or a cached packed blob
-                        # would be served to a row-shape client
-                        # keyed on the CONNECTION protocol too: with the
-                        # per-connection switch, one server can hold
-                        # bson and json sessions and their serialized
-                        # reply bytes are not interchangeable
+                if (
+                    self.server.cache_expiration > 0
+                    and msg.get("4")
+                    and isinstance(what, int)
+                ):
+                    sql_text, node = self.engine.prepared(what)
+                    if isinstance(node, ast.Select):
+                        # the key holds all the reply bytes depend on: the
+                        # connection's codec, the session db (a table name
+                        # means another table in another db), the text,
+                        # the args and the shape flags "5" (packed "1p")
+                        # and "8" (ns-timestamp "1t")
                         cache_key = (
                             self.protocol,
+                            self.engine.current_db,
                             sql_text,
                             repr(args),
                             1 if msg.get("5") else 0,
-                            # "8" changes the reply SHAPE ("1t" ns ints)
-                            # — a non-"8" client must never be served a
-                            # cached "1t" blob
                             1 if msg.get("8") else 0,
                         )
                         hit = self.server._cache_get(cache_key)
                         if hit is not None:
+                            # the one check a run makes that a stale
+                            # reply must still pass: may this user read
+                            self.engine.authorize(node)
                             self.server._bump("n_cache_hits")
                             self.reply_raw(
                                 self._enc(
@@ -260,7 +257,6 @@ class _Session:
                                 ticket,
                             )
                             return
-                    what = self._engine_pid(what)
                 payload = self._result_reply(ticket, msg, what, args)
                 if cache_key is not None:
                     self.server._cache_put(cache_key, payload)
@@ -276,17 +272,15 @@ class _Session:
                 # the merged, PK-ordered, boundary-deduped result in the
                 # same reply shapes as "run" (see _result_reply).
                 self.server._bump("n_run")
-                what = msg["2"]
-                if isinstance(what, int):
-                    what = self._engine_pid(what)
                 ranges = [tuple(r) for r in (msg.get("7") or [])]
                 args = tuple(msg.get("3") or ())
                 self.reply_raw(
-                    self._result_reply(ticket, msg, what, args, ranges), ticket
+                    self._result_reply(ticket, msg, msg["2"], args, ranges),
+                    ticket,
                 )
                 return
             if cmd == "batch":
-                pid = self._engine_pid(msg["2"])
+                pid = msg["2"]
                 # optional key "6" (extension, r10): idempotency token —
                 # a client retry after timeout/reconnect resends the
                 # same batch with the same token and the server dedups
@@ -337,18 +331,13 @@ class _Session:
                 self.reply(ticket, None)
                 return
             if cmd == "meta":
-                # reference form: one space-joined string in "2"
-                # ("schema bars", "chgpasswd pw" — server.go:440-441);
-                # our client's form: sub in "2", arg in "3"
-                if "3" in msg and msg.get("3") is not None:
-                    sub, arg = msg.get("2"), msg.get("3")
-                else:
-                    toks = str(msg.get("2") or "").split(" ", 1)
-                    sub = toks[0] if toks and toks[0] else None
-                    arg = toks[1] if len(toks) > 1 else None
-                    if not sub:
-                        self.reply(ticket, "Please specify meta command")
-                        return
+                # one space-joined string in "2" ("schema bars",
+                # "chgpasswd pw" — server.go:440-441); the argument is
+                # the whole rest, spaces included
+                sub, _, arg = str(msg.get("2") or "").partition(" ")
+                if not sub:
+                    self.reply(ticket, "Please specify meta command")
+                    return
                 self.reply(ticket, self._meta(sub, arg))
                 return
             self.reply(ticket, f"Unknown command: {cmd!r}")
@@ -389,13 +378,7 @@ class _Session:
             reply = {"0": ticket, "1": _jsonable_rows(rows)}
         return self._enc(reply)
 
-    def _engine_pid(self, wire_id: int) -> int:
-        try:
-            return self.prepared[wire_id]
-        except KeyError:
-            raise OpentickError("Invalid prepared statement id") from None
-
-    def _meta(self, sub: str, arg: Any):
+    def _meta(self, sub: str, arg: str):
         if sub == "list_databases":
             return self.engine.list_databases()
         if sub == "list_tables":
@@ -530,46 +513,45 @@ class OpentickServer:
                     s.alive = False
 
     def _dispatch(self, sess: _Session, msg: dict) -> None:
-        self._gate.acquire()
-
-        if msg.get("1") == "batch":
-            # per-connection SEND-ORDER serialization for batches (r11):
-            # the pool itself is unordered, so each batch is submitted
-            # only when its predecessor's completion future resolves —
-            # FIFO without parking a worker. Reads ("run"/meta) keep the
-            # fully concurrent path (the async-fanout scan shape depends
-            # on it); the reference server likewise races everything and
-            # lets FDB arbitrate, but OUR latest-wins log makes commit
-            # order user-visible, so pipelined batch upserts need this.
-            from concurrent.futures import Future as _CF
-
-            done: _CF = _CF()
-
-            def run_batch():
-                try:
-                    sess.handle(msg)
-                finally:
-                    self._gate.release()
-                    done.set_result(None)
-
+        """Run ``msg`` on the pool, which is unordered, in the order one
+        connection's requests need. Batches commit one at a time in send
+        order (r11): the reference races everything and lets FDB
+        arbitrate, but OUR latest-wins log makes commit order
+        user-visible. ``use`` and ``login`` change what a prepared id
+        means, so each waits for every request sent before it and runs
+        here, in the connection's reader thread, which holds back every
+        request sent after it. Other requests run concurrently (the
+        async-fanout scan shape depends on it)."""
+        cmd = msg.get("1")
+        if cmd in ("use", "login"):
             with sess._chain_lock:
-                prev = sess._batch_tail
-                sess._batch_tail = done
-                if prev is None:
-                    self._pool.submit(run_batch)
-                else:
-                    prev.add_done_callback(
-                        lambda _f: self._pool.submit(run_batch)
-                    )
+                earlier = [sess._batch_tail, *sess._running]
+            wait([f for f in earlier if f is not None])
+            sess.handle(msg)
             return
+        self._gate.acquire()
+        done: Future = Future()
 
         def work():
             try:
                 sess.handle(msg)
             finally:
                 self._gate.release()
+                done.set_result(None)
 
-        self._pool.submit(work)
+        with sess._chain_lock:
+            if cmd == "batch":
+                # submitted when its predecessor completes: FIFO without
+                # parking a worker
+                prev, sess._batch_tail = sess._batch_tail, done
+            else:
+                prev = None
+                sess._running.add(done)
+                done.add_done_callback(sess._finished)
+        if prev is None:
+            self._pool.submit(work)
+        else:
+            prev.add_done_callback(lambda _f: self._pool.submit(work))
 
     def _drop(self, sess: _Session) -> None:
         with self._lock:

@@ -524,7 +524,7 @@ def test_row_path_select_skips_sort_exchange(spark, tmp_path):
     )
     pid = eng.prepare("insert into t(a, b, x) values(?, ?, ?)")
     eng.batch_insert(pid, [(1, i, float(i)) for i in range(100)])
-    resolved = eng._prepared[eng.prepare("select x from t where a=1")][1]
+    resolved = eng._lookup(eng.prepare("select x from t where a=1"))[1]
     conds = bind_conds(resolved.conds, ())
     fast = eng._select_frame(resolved, [conds], defer_sort=True)
     fast_plan = fast._jdf.queryExecution().executedPlan().toString()

@@ -172,6 +172,60 @@ def test_wire_cache_bson_binary_blob(bson_cache_server, monkeypatch):
         c.close()
 
 
+def test_wire_cache_keyed_by_session_db(bson_cache_server):
+    """The same prepared select text with the same args names another
+    table in another db: a session in db "ke" must not be served the
+    reply a session in db "kd" cached."""
+    c1 = connect_tcp("127.0.0.1", bson_cache_server.port, protocol="bson")
+    c2 = connect_tcp("127.0.0.1", bson_cache_server.port, protocol="bson")
+    try:
+        for db in ("kd", "ke"):
+            c1.execute(f"create database {db}")
+            c1.execute(f"create table {db}.t(k int, v text, primary key(k))")
+            c1.execute(f"insert into {db}.t(k, v) values(1, '{db}')")
+        c1.use("kd")
+        c2.use("ke")
+        sel = "select * from t where k=?"
+        assert c1.execute(sel, (1,)) == [(1, "kd")]
+        assert c2.execute(sel, (1,)) == [(1, "ke")]
+    finally:
+        c1.close()
+        c2.close()
+
+
+def test_wire_cache_hit_checks_permission(spark, tmp_path):
+    """A cache hit runs the checks a run of the id makes: after the
+    session logs in again as a user without read permission, its cached
+    select is refused as its text is."""
+    from opentick_spark.engine import Engine
+    from opentick_spark.errors import OpentickError
+    from opentick_spark.server import OpentickServer
+
+    wh = str(tmp_path / "wh")
+    admin = Engine(spark, wh)
+    admin.execute("create database s")
+    admin.execute("create table s.t(k int, v int, primary key(k))")
+    admin.execute("insert into s.t(k, v) values(1, 42)")
+    admin.create_user("root", "rootpw", is_admin=True)
+    admin.create_user("other", "pw", perm="elsewhere=read")
+    srv = OpentickServer(
+        spark, wh, protocol="bson", permission_control=True,
+        cache_expiration=60.0,
+    ).start()
+    c = connect_tcp("127.0.0.1", srv.port, protocol="bson")
+    try:
+        c.login("root", "rootpw")
+        sel = "select * from s.t where k=?"
+        assert c.execute(sel, (1,)) == [(1, 42)]
+        c.login("other", "pw")
+        for cache in (False, True):
+            with pytest.raises(OpentickError, match="No permisssion"):
+                c.execute(sel, (1,), cache=cache)
+    finally:
+        c.close()
+        srv.stop()
+
+
 def test_cache_hit_reticketed_across_connections(cache_server, monkeypatch):
     """A cached reply's stored bytes carry the ORIGINAL requester's
     ticket; a hit served to a different connection (or a later ticket on

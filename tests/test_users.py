@@ -153,6 +153,22 @@ def test_client_user_management_is_one_implementation(spark, tmp_path, transport
         assert c.execute(
             "select perm from _meta_.user where name=?", ("cu",)
         ) == [("d1=write",)]
+        # a logged-in user changes a password that contains a space
+        if transport == "tcp":
+            guard = OpentickServer(spark, wh, permission_control=True).start()
+            cu = connect_tcp("127.0.0.1", guard.port)
+        else:
+            guard, cu = None, Connection(spark, wh, permission_control=True)
+        try:
+            cu.login("cu", "first")
+            cu.chgpasswd("two words")
+        finally:
+            cu.close()
+            if guard is not None:
+                guard.stop()
+        assert c.execute(
+            "select password from _meta_.user where name=?", ("cu",)
+        ) == [(sha1_string("two words"),)]
         assert "cu" in c.list_users()
         c.delete_user("cu")
         assert "cu" not in c.list_users()
